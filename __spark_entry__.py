@@ -48,41 +48,6 @@ def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessio
     return run
 
 
-#: Ordering contract: the driver's correctness gate evaluates a PREFIX of
-#: this dict (observed cap: first 50 entries).  Slots are therefore spent
-#: on the queries whose newest driver evidence is OLDEST (or missing):
-#:   block A — changed/new this round (need fresh rows);
-#:   block B — queries whose only driver row is from round 1 (2 rounds old);
-#:   block C — oldest round-2 rows, padding the window to 50;
-#:   block D — the rest (freshest evidence; re-checked locally every round
-#:             by tests/test_oracle_parity.py, which runs ALL entries).
-#: Rotate each round so no query's newest driver row ages past 2 rounds.
-#:
-#: r10 window (EXECUTED r10, 50/50 green — kept below for the audit trail;
-#: the r09 red-row adjudication found the real fragility class — every
-#: red query (and only those) emitted a DECIMAL output column; the
-#: driver's hash treats Decimal asymmetrically across the two engines
-#: (e.g. Decimal('5.20') on one side vs float 5.2 on the other), so all
-#: 13 decimal-emitting queries now cast decimal->DOUBLE/BIGINT at the
-#: output boundary (internal decimal exactness unchanged) and lead the
-#: window.  Then: the 4 other r9-advice/semantics changes
-#: (dedup_link_prediction symmetric cap, join_asof_forward strict
-#: ordering, text_code_detect portable line-start regex,
-#: orders_duplicate_invoices distinct drop — output invariant), the 11
-#: remaining never-checked round-9 additions, the events_lateness_audit
-#: spill, and the queued mechanism re-certs (minhash family post-r9
-#: zero-shuffle rewrite, simhash consumers, ER family, hits, two-phase
-#: rank consumers).  Round-10 additions are capped at <= 5 (VERDICT r9
-#: item 4) and take the final slots.
-#:
-#: r11 queue arithmetic (write the window at round-11 start): if the
-#: r10 rows come back green, NOTHING is red and NOTHING is
-#: never-certified — the window becomes pure age rotation.  Oldest
-#: evidence at r11: the 25 round-7 additions and 20 round-8 additions
-#: whose newest rows are r09 (2 rounds old), plus any r10 reds (which
-#: would take the head, made environment-proof FIRST — see the r10
-#: no-DECIMAL output contract above; compare.py now enforces it
-#: locally).  ~45 rotation slots + <= 5 r11 additions fills 50 exactly.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ---- r09 window (50 slots), per VERDICT r8 item 1 + ADVICE: the 4
     # ---- r08 hash-red queries lead (fixed at HEAD mid-round-8; a green
@@ -540,68 +505,14 @@ _SIGS_CTE = """
 
 
 #: The driver's correctness gate evaluates the FIRST 50 entries of the
-#: dict queries() returns.  _R16_WINDOW (below) IS the current round's
-#: window, in priority order; queries() moves these names to the front,
-#: everything else follows in _QUERIES order.
-#:
-#: ---- historical r15 window rationale (audit trail) ----
-#: r15 window (OPTIMIZATION round; composition follows the r14 queue
-#: arithmetic verbatim): r14 came back 50/50 green (nothing red,
-#: nothing never-certified).  Block A is every r15 plan/execution
-#: change, landed pre-freeze: dedup_tfidf_cosine (the queued nowindow
-#: emission + xxhash64 term longs + nrm>0 guard), dedup_ngram_jaccard
-#: (same two cuts — its first aggregation is shingle-keyed),
-#: events_cusum_pandas (grouped-map -> sorted-partition mapInPandas
-#: carry-state fold, bit-identical), text_bpe_word_merges (dead
-#: last-iteration rewrite skipped).  The r15 engine-wide changes —
-#: footer-read schemas replacing per-query inference, and the
-#: ephemeral-stream conf scoping in run_stream_to_table — alter no
-#: query's plan shape; every query was value-verified against its
-#: oracle at sf0.01 this round (OPTIMIZATION_r15.md).  The queued
-#: dedup_semdedup centroid-store move was NOT landed: it conflicts
-#: with the optimization-round rule banning cross-run persisted
-#: intermediates (see OPTIMIZATION_r15.md §semdedup; in-plan variants
-#: were A/B'd and refuted instead).  Block B is the 21 r06-evidence
-#: spillovers, verbatim from the r14 queue.  Block C fills the
-#: remaining 25 slots from the 44-query r07-evidence cohort
-#: (alphabetical; events_cusum_pandas already sits in block A and
-#: spends no extra slot), leaving exactly 18 r07 queries to spill:
-#: q19_disjunctive_revenue, q22_global_sales_opportunity,
-#: q4_order_priority, q7_nation_volume, sample_temperature_mix,
-#: scalar_collation, scalar_url_funcs, similarity_sq8_error,
-#: sql_group_order_by_all, sql_pipe_syntax,
-#: stream_full_outer_interval_join, stream_two_level_window,
-#: stream_upsert_latest, text_bm25_topk, text_rake_keywords,
-#: text_readability, users_kaplan_meier, users_longest_streak.
-#:
-#: r16 queue arithmetic: any r15 red takes the head; then any r16
-#: pre-freeze plan change; then the 18 r07 spillovers above; then the
-#: 37-query r08-evidence cohort fills whatever remains.  NO plan
-#: rewrites after the r15 freeze: a post-freeze rewrite waits a round.
-#: r16 window (OPTIMIZATION round 2; composition follows the r15 queue
-#: arithmetic verbatim): r15 came back 50/50 green (nothing red,
-#: nothing never-certified).  Block A is every r16 plan/execution
-#: change, landed pre-freeze: dedup_simhash (vote fold -> numpy
-#: mapInPandas, bit-identical), dedup_simhash_pairs (long band keys +
-#: verify/first-band inside the emission, no distinct),
-#: agg_approx_quantile_error (exact percentile -> two-phase distributed
-#: selection), lineitem_price_elasticity + agg_ams_f2_sketch (fan_out
-#: before the heavy scan-stage projection), and the two interval joins
-#: whose state_partitions changed 8 -> 4 (stream_full_outer_interval_join
-#: got the same change and sits in block B).  Block B is the 18
-#: r07-evidence spillovers, verbatim from the r15 queue.  Block C fills
-#: the remaining 25 slots from the 37-query r08-evidence cohort
-#: (alphabetical), leaving exactly 12 r08 queries to spill:
-#: q18_large_volume_customer, q21_suppliers_kept_waiting,
-#: q8_market_share, sample_kcenter_coreset, sample_neyman_allocation,
-#: search_phrase_positional, search_rank_fusion,
-#: similarity_matryoshka_error, similarity_mips_transform,
-#: stream_state_inspect, text_dictionary_tagging, text_pii_scan.
-#:
-#: r17 queue arithmetic: any r16 red takes the head; then any r17
-#: pre-freeze plan change; then the 12 r08 spillovers above; then the
-#: 33-query r09-evidence cohort fills whatever remains.  NO plan
-#: rewrites after the r16 freeze: a post-freeze rewrite waits a round.
+#: dict queries() returns, so queries() and oracle_sql() move the current
+#: window (_R16_WINDOW, in priority order) to the front; everything else
+#: follows in registry order.  Rotation rule, applied at the start of each
+#: round: any red query takes the head; then block A, this round's
+#: pre-freeze plan/execution changes (no plan rewrite after the freeze —
+#: it waits a round); then the queries whose newest driver evidence is
+#: oldest, cohort by cohort (alphabetical within a cohort), filling the
+#: window to 50.  No query's newest driver row may age past 2 rounds.
 _R16_WINDOW: list[str] = [
     # -- block A: r16 plan/execution changes, all pre-freeze --
     "dedup_simhash",
@@ -658,427 +569,12 @@ _R16_WINDOW: list[str] = [
     "q17_small_quantity_revenue",
 ]
 
-#: ---- historical r15 window (audit trail; no longer applied) ----
-_R15_WINDOW: list[str] = [
-    # -- block A: r15 plan/execution changes, all pre-freeze --
-    "dedup_tfidf_cosine",
-    "dedup_ngram_jaccard",
-    "events_cusum_pandas",
-    "text_bpe_word_merges",
-    # -- block B: the 21 r06-evidence spillovers (r14 queue, verbatim) --
-    "scalar_variant_funcs",
-    "sessionize_events",
-    "similarity_range_search",
-    "stream_dedup_within_watermark",
-    "stream_ohlc_candles",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_stateful_user_stats",
-    "stream_stream_interval_join",
-    "stream_tumbling_append_watermark",
-    "stream_tumbling_window",
-    "text_bigram_kn_perplexity",
-    "text_chunk_dedup_fraction",
-    "text_fingerprint",
-    "text_jsd_source_drift",
-    "text_stats_pandas_udf",
-    "text_tfidf_topk",
-    "text_vocab_topk",
-    "udtf_chunk_documents",
-    "unpivot_measures",
-    "window_rank_family",
-    # -- block C: r07-evidence rotation (alphabetical fill, 25 of 44;
-    #    events_cusum_pandas already in block A) --
-    "agg_bitmap_distinct",
-    "agg_bloom_filter_fpr",
-    "agg_listagg_countif",
-    "agg_transpose_summary",
-    "cdc_incremental_aggregate",
-    "er_edit_distance",
-    "events_ab_cuped",
-    "events_audience_overlap_hll",
-    "events_bot_regularity",
-    "events_forecast_snaive",
-    "events_holt_pandas",
-    "events_rolling_median",
-    "events_session_window_batch",
-    "events_theilsen_trend",
-    "events_time_to_convert",
-    "inventory_fifo_matching",
-    "join_asof_tolerance",
-    "join_range_binned",
-    "orders_mix_shift_decomposition",
-    "orders_penny_allocation",
-    "orders_same_day_repeat",
-    "orders_totals_reconciliation",
-    "part_prefix_autocomplete",
-    "profile_merkle_ranges",
-    "q14_promo_revenue",
-]
-
-#: ---- historical r14 window (audit trail; no longer applied) ----
-#:
-#: r14 window: r13 came back 50/50 green (nothing red, nothing
-#: never-certified).  Block A is every plan/contract change landed THIS
-#: round, all BEFORE the freeze, queued at the head per the r13 verdict:
-#: dedup_embedding_cosine + dedup_semdedup (GEMM pre-cut slack widened
-#: 1e-9 -> 1e-6 per ADVICE r13 — a boundary-pair CONTRACT fix — plus the
-#: row-blocked in-cluster gram), dedup_tfidf_cosine (integer fixed-point
-#: weights + deferred normalization, oracle rewritten in lockstep),
-#: sample_negative_pairs (single-generate union + two stacked aggregates
-#: on one custkey partitioning), dedup_jaccard_prefix (at-rest prefix
-#: index lens, xxhash64 tokens), and the NEW dedup_prefix_index_build
-#: producer row (the substrate accounting rule's live build).  Block B
-#: is the 20 r05-evidence spillovers named by the r13 plan, verbatim.
-#: Block C fills the remaining 24 slots from the 45-query r06-evidence
-#: cohort (alphabetical), leaving exactly 21 r06 queries to spill.
-#:
-#: r15 queue arithmetic: any r14 red takes the head; then any r15
-#: pre-freeze plan change (dedup_tfidf_cosine is the named candidate —
-#: r14 close read 3.07/3.25 s vs the <=2.5 target.  Post-freeze /tmp
-#: A/B evidence, 2026-08-17, 3 interleaved passes at sf0.1, identical
-#: 249 rows every variant: the verify stage is NOT the residual — a
-#: candidate-expanded-broadcast verify was a wash alone and SLOWER
-#: stacked (the broadcast builds serialize the candidate subtree), and
-#: a warm stage split put verify at ~0.5 s vs ~2 s for the w build +
-#: ~1.2 s candidates.  The measured fix is the w build itself:
-#: shingle_table_nowindow emission (tfidf's first agg is TERM-keyed
-#: after the repartition — the r13 emission rule applied, worth ~16%)
-#: plus xxhash64(term) longs instead of shingle strings through the
-#: exchange/window/joins (the jaccard_prefix r14 trick; term identity
-#: is equality-only here, same ~1e-7 collision class) — together
-#: 3.89-4.46 -> 3.12-3.31 s warm, projecting ~2.5 on the bench floor.
-#: The oracle is untouched — it scores cosine from raw terms, and term
-#: identity is all the hash replaces.  Slope pre-checked: min-of-3
-#: 1.93 s at sf0.01 -> 2.58 s at sf0.1, 10x slope 1.34.  SECOND r15
-#: candidate, same evidence session: dedup_semdedup's floor is the
-#: 2-iteration Lloyd refinement (2.3 s of its 3.65 — warm stage split),
-#: which similarity_ivf_kmeans recomputes identically; moving the
-#: refined (centroid_id, c_vec, c_norm) table to the substrate store
-#: with similarity_ivf_kmeans as the LIVE producer (the basket_part_
-#: pairs pattern — it keeps paying the build on the scoreboard) and
-#: semdedup as a lens measured 3.33-3.83 -> 1.46-1.67 s with identical
-#: 2000-row output, 3 interleaved passes.  Both changes need the same-
-#: round re-cert queue slot they already hold by being plan changes.
-#: The tfidf variant also VALUE-matches the registered oracle at
-#: sf0.01 (25/25, checked 2026-08-17).); then the 21
-#: remaining r06-evidence queries (the alphabetical continuation:
-#: scalar_variant_funcs, sessionize_events, similarity_range_search,
-#: stream_dedup_within_watermark, stream_ohlc_candles,
-#: stream_session_window, stream_sliding_window,
-#: stream_stateful_user_stats, stream_stream_interval_join,
-#: stream_tumbling_append_watermark, stream_tumbling_window,
-#: text_bigram_kn_perplexity, text_chunk_dedup_fraction,
-#: text_fingerprint, text_jsd_source_drift, text_stats_pandas_udf,
-#: text_tfidf_topk, text_vocab_topk, udtf_chunk_documents,
-#: unpivot_measures, window_rank_family); then the r07-evidence cohort
-#: (44 queries) fills whatever remains.  NO plan rewrites after the r14
-#: freeze: a post-freeze rewrite waits a round.
-_R14_WINDOW: list[str] = [
-    # -- block A: r14 plan/contract changes, all pre-freeze --
-    "dedup_embedding_cosine",
-    "dedup_semdedup",
-    "dedup_tfidf_cosine",
-    "sample_negative_pairs",
-    "dedup_jaccard_prefix",
-    "dedup_prefix_index_build",
-    # -- block B: the 20 r05-evidence spillovers (r13 plan, verbatim) --
-    "orders_open_backlog",
-    "profile_benford_deviation",
-    "profile_dp_noisy_counts",
-    "profile_k_anonymity",
-    "profile_table_checksum",
-    "q10_returned_items",
-    "q5_local_supplier_volume",
-    "sample_mix_diversity",
-    "sample_shard_routing",
-    "scalar_try_funcs",
-    "scan_file_metadata",
-    "set_ops_all",
-    "similarity_ann_ivf",
-    "similarity_ann_lsh",
-    "similarity_ann_lsh_multiprobe",
-    "similarity_bucket_histogram",
-    "similarity_topk_bruteforce",
-    "supplier_otif_scorecard",
-    "text_collocations_pmi",
-    "text_feature_hashing",
-    # -- block C: r06-evidence rotation (alphabetical fill, 24 of 45) --
-    "agg_approx_distinct",
-    "agg_collect_sorted",
-    "agg_count_min_sketch",
-    "agg_distinct_counts",
-    "agg_partial_merge",
-    "agg_percentiles",
-    "case_when_bucketing",
-    "cdc_scd2_build",
-    "cdc_snapshot_diff",
-    "distinct_rows",
-    "events_adoption_wilson",
-    "events_ohlc_candles",
-    "filter_project",
-    "grouped_zscore_pandas",
-    "ingest_max_date",
-    "ingest_run_summary",
-    "multimodal_binary_metadata",
-    "multimodal_decode_features",
-    "profile_columns",
-    "q1_pricing_summary",
-    "q6_revenue_filter",
-    "sample_hash_deterministic",
-    "sample_importance_reweight",
-    "sample_stratified_fixed",
-]
-
-#: r12 window (EXECUTED — all 50 green in CORRECTNESS_r12.json; kept for
-#: the audit trail, no longer applied).
-#:
-#: r12 window: r11 came back 50/50 green (nothing red, nothing
-#: never-certified), so the head is block A = every query whose PLAN (or,
-#: for dedup_tfidf_cosine, OUTPUT CONTRACT — candidate gate raised to >= 3
-#: shared sub-cap shingles, oracle updated in lockstep) changed since its
-#: newest driver row: the 10 queued from the r11 continuation pass
-#: (VERDICT r11 item 1 — non-negotiable) plus the 9 further r12 changes
-#: (graph lenses moved onto the at-rest substrate store, winnowing's
-#: codegen rewrite).  Five of the queued 10 changed AGAIN in r12 (the
-#: basket/graph store rewrites), so their single slot certifies the final
-#: plan.  Blocks B fills the remaining 31 slots from the 47 r04-evidence
-#: queries (alphabetical; 4 of that cohort — basket_part_pairs,
-#: dedup_ngram_jaccard, dedup_source_overlap_matrix,
-#: text_winnowing_fingerprints — already sit in block A and spend no
-#: extra slot), leaving exactly 12 to spill.
-#:
-#: r13 queue arithmetic: any r12 red takes the head; then re-certs for
-#: the post-freeze plan changes, all locally parity-green but with
-#: newest driver rows certifying superseded plans: dedup_decontaminate
-#: (single-aggregation hit counting), graph_hits_scores (at-rest
-#: user-part edge store), and the seven non-window consumers of the
-#: codegen shingle_table / exploded-aggregate minhash_signatures
-#: rewrite — dedup_minhash_lsh, dedup_containment_lsh,
-#: dedup_incremental_minhash, dedup_minhash_error, dedup_lsh_scurve,
-#: text_ngram_novelty, text_minhash_jaccard_estimate (window members
-#: tfidf/jaccard_lsh/ngram_jaccard/jaccard_prefix/decontaminate take the
-#: same rewrite but their r12 rows certify the final plans).  Then the
-#: 12 r04-evidence spillovers, in
-#: this order: sql_exists_subquery, sql_lateral_topn, sql_scalar_subquery,
-#: stream_user_topk, text_lang_id, text_quality_quantile_gate,
-#: text_quality_score, text_token_count, window_lag_lead,
-#: window_range_frame, window_running_sum, window_topk_per_group; then
-#: r05-evidence rotation (44 queries) fills whatever remains.
-_R12_WINDOW: list[str] = [
-    # -- block A1: the 10 re-certs queued by the r11 continuation pass --
-    "dedup_jaccard_prefix",
-    "dedup_ngram_jaccard",
-    "dedup_jaccard_lsh",
-    "text_bpe_word_merges",
-    "dedup_kcore_peel",
-    "item_item_cf",
-    "graph_degree_powerlaw",
-    "graph_assortativity",
-    "basket_part_pairs",
-    "sample_negative_pairs",
-    # -- block A2: plans changed in r12 proper (at-rest substrate store;
-    # -- tfidf gate+shuffle rewrite; winnowing codegen rewrite) --
-    "dedup_link_prediction",
-    "dedup_triangle_stats",
-    "graph_modularity",
-    "graph_label_propagation",
-    "dedup_cluster_assignments",
-    "dedup_pagerank_hubs",
-    "dedup_source_overlap_matrix",
-    "dedup_tfidf_cosine",
-    "text_winnowing_fingerprints",
-    # -- block B: r04-evidence rotation (alphabetical fill) --
-    "agg_approx_quantile_error",
-    "agg_histogram_equidepth",
-    "agg_hll_mergeable",
-    "array_funcs",
-    "calendar_month_bounds",
-    "calendar_publish_dates",
-    "calendar_working_days",
-    "dedup_embedding_cosine",
-    "dedup_exact_substring",
-    "dedup_semdedup",
-    "events_ema_decay",
-    "events_markov_transitions",
-    "events_zorder_key",
-    "generator_explode_tokens",
-    "join_asof_rates",
-    "join_full_outer",
-    "join_range_nonequi",
-    "join_scd2_dimension",
-    "profile_expectations",
-    "q3_shipping_priority",
-    "sample_priority_estimate",
-    "sample_source_capped",
-    "scalar_date_funcs",
-    "scalar_json_funcs",
-    "scalar_map_funcs",
-    "scalar_math_funcs",
-    "scalar_string_funcs",
-    "set_intersect_except",
-    "set_union_distinct",
-    "similarity_recall_at_k",
-    "sort_topk",
-]
-
-#: r11 window (EXECUTED — all 50 green in CORRECTNESS_r11.json; kept for
-#: the audit trail, no longer applied).
-#:
-#: r11 window (pure age rotation, per VERDICT r10 item 2): r10 came back
-#: 50/50 green, so nothing is red and nothing is never-certified.  Block A
-#: holds the THREE queries whose plans changed this round (the last
-#: dimension-global single-partition windows, retired onto the two-phase
-#: rank / domain-bounded-grid / two-phase prefix-sum mechanisms — VERDICT
-#: r10 item 1); blocks B/C are ALL 47 queries whose newest driver row is
-#: r03 (8 rounds old — the oldest evidence in the registry), so max
-#: evidence-age drops from r03 to r04.  47 + 3 = exactly 50: the round-11
-#: addition budget is spent at ZERO additions (<= 5 allowed) so the
-#: rotation completes in one round.  The ADVICE r10 low fixes
-#: (events_circular_hour_stats null guard, orders_lorenz_asymmetry
-#: mean-tie term) are output-invariant at the certified data (asserted by
-#: the local parity suite, which runs ALL 360 entries every round), so
-#: their fresh r10 rows remain valid evidence and they spend no slots.
-#:
-#: r12 queue arithmetic: any r11 red takes the head.  Then block A =
-#: re-certs for the queries whose PLANS changed in the r11 continuation
-#: pass AFTER this window was frozen (all output-identical, full local
-#: parity green, but fresh driver rows are still the only closure):
-#: dedup_jaccard_prefix, dedup_ngram_jaccard, dedup_jaccard_lsh,
-#: text_bpe_word_merges, dedup_kcore_peel, item_item_cf,
-#: graph_degree_powerlaw, graph_assortativity, basket_part_pairs,
-#: sample_negative_pairs (10; dedup_containment_lsh shares the
-#: candidate-sets rewrite but already sits in THIS window, so its fresh
-#: r11 row covers it).  Then rotation: the 47 r04-evidence queries fill
-#: the rest; ~7 overflow to r13 if the block-A re-certs take their
-#: slots — acceptable, max age still drops each round.
-_R11_WINDOW: list[str] = [
-    # -- block A: plans changed this round (VERDICT r10 item 1 — the
-    # -- three retired dimension-global windows; output contract is
-    # -- unchanged but a fresh driver row is the only closure) --
-    "customers_woe_binning",
-    "parts_pareto_frontier",
-    "parts_abc_classification",
-    # -- block B: the 47 queries whose newest driver evidence is r03 --
-    "rollup_orders",
-    "cube_lineitem",
-    "sql_grouping_sets",
-    "pivot_orders",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "join_customer_orders",
-    "join_multiway",
-    "join_left_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "multimodal_frame_sample",
-    "similarity_ivf_kmeans",
-    "events_heavy_hitters",
-    "sample_token_budget_mix",
-    "events_anomaly_mad",
-    "text_zipf_slope",
-    "split_leakage_free",
-    "similarity_pq_adc",
-    "dedup_canonical_by_quality",
-    "events_retention_cohorts",
-    "pandas_grouped_agg_gini",
-    "cogroup_activity_orders",
-    "profile_numeric_corr",
-    "text_sentence_stats",
-    "stream_static_enrich_join",
-    "dedup_pagerank_hubs",
-    "arrow_md5_digest",
-    "events_resample_ffill",
-    "sql_recursive_cte",
-    "sql_udf_banding",
-    "text_lang_id_ngram",
-    "embedding_random_projection",
-    "similarity_ivfpq_adc",
-    "pack_sequences_documents",
-    "text_gopher_filter",
-    "dedup_decontaminate",
-    "stream_left_outer_interval_join",
-    "text_repetition_ratio",
-    "dedup_containment_lsh",
-    "events_funnel_conversion",
-    "sample_weighted_aes",
-    "agg_histogram_bins",
-    "similarity_ann_batch",
-    "text_bigram_perplexity",
-    "cdc_merge_upsert",
-    "stream_inactivity_sessions",
-]
-
-#: r10 window (EXECUTED — all 50 green in CORRECTNESS_r10.json; kept for
-#: the audit trail, no longer applied).
-_R10_WINDOW: list[str] = [
-    # -- block A: output-contract fixes (the 11 r09 hash-reds + the 2
-    # -- latent decimal emitters found by the same audit) --
-    "events_global_rank_two_phase",
-    "sample_ipf_raking",
-    "events_mann_whitney",
-    "geo_nearest_hub",
-    "events_psi_drift",
-    "events_sprt_decision",
-    "events_entropy_rate",
-    "agg_ams_f2_sketch",
-    "orders_pareto_8020",
-    "part_skyline_pareto",
-    "customers_nps_bayes_shrinkage",
-    "customers_gini_concentration",
-    "join_semi_bloom_pruned",
-    # -- block A': r9-advice semantic/plan changes made this round --
-    "dedup_link_prediction",
-    "join_asof_forward",
-    "text_code_detect",
-    "orders_duplicate_invoices",
-    # -- block B: round-9 additions still without a driver row --
-    "events_anova_f",
-    "events_welch_ttest",
-    "orders_nelson_aalen",
-    "events_stl_decompose",
-    "events_sax_motifs",
-    "profile_partition_skew",
-    "text_term_burstiness",
-    "sample_soft_dedup_weights",
-    "similarity_power_iteration",
-    "sample_balanced_classes",
-    "profile_functional_dependency",
-    # -- block C: late-r8 spill + queued mechanism re-certs --
-    "events_lateness_audit",
-    "dedup_minhash_lsh",
-    "dedup_jaccard_lsh",
-    "dedup_cluster_assignments",
-    "dedup_incremental_minhash",
-    "dedup_minhash_error",
-    "dedup_lsh_scurve",
-    "dedup_simhash_pairs",
-    "dedup_kcore_peel",
-    "dedup_triangle_stats",
-    "er_blocked_match",
-    "er_golden_record",
-    "graph_hits_scores",
-    "events_quantile_normalize",
-    "eval_auc_rank",
-    "eval_qini_uplift",
-    # -- block D: round-10 additions (<= 5, VERDICT r9 item 4) --
-    "events_circular_hour_stats",
-    "orders_lorenz_asymmetry",
-    "events_turning_points",
-    "text_length_spectrum",
-    "orders_interarrival_burstiness",
-    # -- slot 50: explicit pad (fresh r09-green row; keeps the queries()
-    # -- and oracle_sql() 50-entry prefixes identical) --
-    "text_bpe_word_merges",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md section 2.
 
     Ordering contract: the driver certifies a 50-entry PREFIX, so the
-    current round's window (the _R*_WINDOW list referenced below) is
-    moved to the front; the rest keep their registry order.
+    current round's window (_R16_WINDOW) is moved to the front; the rest
+    keep their registry order.
     """
     window = [n for n in _R16_WINDOW if n in _QUERIES]
     rest = [n for n in _QUERIES if n not in set(window)]

@@ -11,13 +11,6 @@ line, and without "queries" it was empty every round (PERF_r15.json
 n_common: 0).  The full multi-pass detail is still written to
 BENCH_DETAIL.json next to this script.
 
-r16 cold-store mode (VERDICT r15 item 4): SPARK_GRAFT_COLD_STORE=1
-removes the at-rest substrate store (spark-warehouse/_shared_graphs)
-once BEFORE pass 1, so the first lens query of pass 1 pays each frame's
-build; comparing a cold-store total against a default (warm-store) total
-quantifies exactly how much the inherited cross-run store is worth to
-the bench.  Default behavior (unset) is byte-identical to r15.
-
 Execution is forced through the noop sink (df.write.format("noop")) so the
 timing covers scan -> compute -> (would-be) write without driver-side
 collect costs, matching how the engine runs in production.  A warmup query
@@ -120,16 +113,6 @@ def main() -> None:
 
     queries = entry_mod.queries()
 
-    cold_store = os.environ.get("SPARK_GRAFT_COLD_STORE", "") not in ("", "0")
-    if cold_store:
-        import shutil
-
-        from simple_land_registry_data_ingestion_spark.operators.substrate import (
-            store_root,
-        )
-
-        shutil.rmtree(store_root(), ignore_errors=True)
-
     # Warmup: JVM, codegen, parquet footer caches.
     queries["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
         "overwrite"
@@ -193,8 +176,6 @@ def main() -> None:
         # are no longer empty
         "queries": timings,
     }
-    if cold_store:
-        summary["cold_store"] = True
     with open(detail_path, "w") as fh:
         json.dump(
             {

@@ -992,7 +992,7 @@ def dedup_simhash_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Shared at-rest candidate-graph store (round 12; machinery in substrate.py)
+# Candidate graphs shared within a run (machinery in substrate.py)
 # ---------------------------------------------------------------------------
 
 def shared_simhash_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1006,7 +1006,6 @@ def shared_simhash_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "simhash_d3",
-        "documents",
         lambda: dedup_simhash_pairs(spark, sf_dir, max_nibble_distance=3),
     )
 
@@ -1019,7 +1018,6 @@ def shared_minhash_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "minhash_lsh",
-        "documents",
         lambda: minhash_candidate_pairs(load(spark, sf_dir, "documents")),
     )
 
@@ -1984,7 +1982,6 @@ def shared_prefix_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "prefix_index",
-        "documents",
         lambda: build_prefix_index(load(spark, sf_dir, "documents")),
     )
 

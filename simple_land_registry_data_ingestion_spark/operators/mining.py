@@ -22,7 +22,7 @@ from simple_land_registry_data_ingestion_spark.tables import load
 
 
 # ---------------------------------------------------------------------------
-# Shared at-rest co-purchase substrate (round 12; machinery in substrate.py)
+# Co-purchase substrate shared within a run (machinery in substrate.py)
 # ---------------------------------------------------------------------------
 
 def shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,8 +31,8 @@ def shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     the four basket queries re-scanned lineitem, re-shuffled it by the
     order key, re-deduped, and eagerly checkpointed at CONSTRUCTION time
     (ADVICE r11: merely building the query executed a job, and the
-    cached blocks were executor-lifetime-bound); the at-rest frame pays
-    that once per corpus."""
+    cached blocks were executor-lifetime-bound); the shared frame pays
+    that once per corpus per run."""
 
     def _build() -> DataFrame:
         return (
@@ -45,7 +45,7 @@ def shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return materialized_frame(spark, sf_dir, "basket_items", "lineitem", _build)
+    return materialized_frame(spark, sf_dir, "basket_items", _build)
 
 
 def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,9 +55,8 @@ def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one frame serves every parameterization.  Its row set doubles as the
     distinct co-purchase EDGE list (each unordered pair appears exactly
     once), which is what the degree-distribution lenses consume.  Built
-    FROM the at-rest basket (cascaded substrate; fingerprint keys on
-    lineitem, the root input) with the order-key self-join that bounds
-    the pair expansion by basket size."""
+    FROM the shared basket (a cascaded substrate frame) with the
+    order-key self-join that bounds the pair expansion by basket size."""
 
     def _build() -> DataFrame:
         items = shared_basket_items(spark, sf_dir)
@@ -70,9 +69,7 @@ def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("pair_orders"))
         )
 
-    return materialized_frame(
-        spark, sf_dir, "copurchase_pairs", "lineitem", _build
-    )
+    return materialized_frame(spark, sf_dir, "copurchase_pairs", _build)
 
 
 def user_part_edges(spark: SparkSession, sf_dir: str, part_col: str = "p") -> DataFrame:

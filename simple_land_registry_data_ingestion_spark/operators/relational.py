@@ -7209,18 +7209,21 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1d = F.col("n1").cast("double")
     n2d = F.col("n2").cast("double")
     mu = 2.0 * n1d * n2d / (n1d + n2d) + 1.0
-    var = (
-        2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d)
-        / ((n1d + n2d) * (n1d + n2d) * (n1d + n2d - 1.0))
+    # try_divide: a one-hour series (n1 + n2 == 1) or a one-sided one
+    # (n1 == 0 or n2 == 0, sigma == 0) has no z-score — NULL, as in the
+    # oracle, instead of an ANSI DIVIDE_BY_ZERO.
+    var = F.try_divide(
+        2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d),
+        (n1d + n2d) * (n1d + n2d) * (n1d + n2d - 1.0),
     )
     return runs.select(
         "event_type",
         F.col("n1").alias("n_above"),
         F.col("n2").alias("n_below"),
         "n_runs",
-        F.round((F.col("n_runs").cast("double") - mu) / F.sqrt(var), 6).alias(
-            "z_score"
-        ),
+        F.round(
+            F.try_divide(F.col("n_runs").cast("double") - mu, F.sqrt(var)), 6
+        ).alias("z_score"),
     )
 
 

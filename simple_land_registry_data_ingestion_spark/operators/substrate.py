@@ -1,4 +1,4 @@
-"""Shared at-rest substrate frames (round 12).
+"""Substrate frames shared by the lens queries of one run.
 
 Several query families are LENSES over one expensive intermediate frame:
 the near-dup candidate graph (k-core, link prediction, triangles,
@@ -6,120 +6,70 @@ modularity, label propagation, PageRank, cluster assignment, source
 overlap — all consume the LSH output) and the order co-purchase graph
 (market-basket lift, item-item CF, degree power law, assortativity — all
 consume the distinct basket and its pair counts).  Re-deriving the frame
-inside every lens query repays the full corpus-pass cost per query; at
-100 TB that is a full table scan + shuffle per lens.  A real pipeline
-materializes such frames ONCE as at-rest tables and runs every lens
-against them — this module is that materialized view, expressed as
-parquet under the warehouse dir so it survives session restarts and
-storage-pool eviction alike (an in-memory checkpoint would die under
-``bench.py``'s pinned per-query unpersist, and its blocks are
-executor-lifetime-bound on a real cluster).
+inside every lens query repays the full corpus pass per query; this
+module builds it once as parquet and every lens reads that (an in-memory
+checkpoint would die under ``bench.py``'s pinned per-query unpersist).
 
-Layout/consistency contract:
-  - keyed by (tag, sf basename, source-table fingerprint): regenerated
-    input data gets a fresh key automatically; stale keys for the same
-    (tag, corpus) are pruned on write.
-  - writes go to a temp dir then one atomic ``rename`` — a losing
-    concurrent writer discards its copy (safe: every builder is a
-    deterministic pure function of the input table, so both copies carry
-    identical rows).
-  - readers get a plain parquet scan: re-executable (no lineage hazard),
-    column-pruned and predicate-pushed like any table.
-
-Every stored frame keeps a LIVE, benched producer query so the build
-cost stays certified on the scoreboard (r13 accounting fix): the
-simhash/minhash graphs' producers are dedup_simhash_pairs /
-dedup_minhash_lsh, and the basket/co-purchase frames' producer is
-basket_part_pairs, which builds the distinct basket AND its pair counts
-from the lineitem scan in-query (plan-pinned by
-tests/test_round13_ops.py).  Only downstream lens queries read the
-store.  A frame with a single consumer earns no store entry at all —
-its one consumer just builds live (graph_hits_scores' user-part edges).
+Within-run contract:
+  - the store belongs to ONE process: ``store_root()`` is a temp dir made
+    on first use and removed at exit, so no result or timing depends on
+    state left by an earlier run.  Input data under a corpus dir is
+    treated as immutable for the life of the process.
+  - entries are keyed by (tag, corpus path): two corpora that share a
+    basename never share an entry.
+  - a build writes to a dot-prefixed temp dir and is published with one
+    ``rename``, so an interrupted build never leaves a readable partial
+    frame; readers get a plain parquet scan (re-executable, column-pruned
+    and predicate-pushed like any table).
+  - every stored frame keeps a LIVE, benched producer query so its build
+    cost stays on the scoreboard: dedup_simhash_pairs / dedup_minhash_lsh
+    for the simhash/minhash graphs, dedup_prefix_index_build for the
+    prefix index, and basket_part_pairs for the basket/co-purchase frames
+    (plan-pinned by tests/test_round13_ops.py).  Only lens queries read
+    the store; a frame with a single consumer gets no entry and is built
+    live by that consumer.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
 import tempfile
-import time
-from typing import Callable, Sequence
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_process_root: str | None = None
+
 
 def store_root() -> str:
-    """Directory holding materialized substrate frames.  Defaults to the
-    repo-local ``spark-warehouse/_shared_graphs`` (gitignored); override
-    with ``SPARK_GRAFT_GRAPH_STORE`` (on a cluster this would be a
-    warehouse path on shared storage)."""
+    """Directory holding the substrate frames.  ``SPARK_GRAFT_GRAPH_STORE``
+    names it outright (a deployment path, left as is); otherwise it is one
+    temp dir for this process, removed at exit."""
+    global _process_root
     env = os.environ.get("SPARK_GRAFT_GRAPH_STORE")
     if env:
         return env
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(repo, "spark-warehouse", "_shared_graphs")
-
-
-def table_fingerprint(sf_dir: str, table: str) -> str:
-    """Content key for a source table: abspath plus (relative path,
-    mtime_ns, size) of EVERY file under ``<table>.parquet``, walked
-    recursively — regenerated testdata invalidates the store
-    automatically, identical data reuses it.  The walk (ADVICE r12)
-    covers partitioned/nested parquet layouts where an in-place rewrite
-    of a leaf file would not touch the top-level directory listing."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    parts = [os.path.abspath(path)]
-    if os.path.isdir(path):
-        for dirpath, dirnames, filenames in os.walk(path):
-            dirnames.sort()
-            rel = os.path.relpath(dirpath, path)
-            for name in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, name))
-                parts.append(f"{rel}/{name}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+    if _process_root is None:
+        _process_root = tempfile.mkdtemp(prefix="slr-substrate-")
+        atexit.register(shutil.rmtree, _process_root, ignore_errors=True)
+    return _process_root
 
 
 def materialized_frame(
     spark: SparkSession,
     sf_dir: str,
     tag: str,
-    source_table: str | Sequence[str],
     builder: Callable[[], DataFrame],
     n_files: int = 8,
-    version: int = 1,
 ) -> DataFrame:
-    """Build-once/read-many materialization (module docstring has the
-    full contract).  ``source_table`` names the ROOT input table(s) whose
-    combined content fingerprint keys the entry — a multi-input builder
-    MUST list every table it reads (ADVICE r12: keying a lineitem-join-
-    orders build on lineitem alone serves stale edges when only orders
-    regenerates); cascaded builders (a substrate built from another
-    substrate) still key on the original tables.
-
-    ``version`` is the builder's OUTPUT-CONTRACT version, folded into the
-    key (ADVICE r12): the data fingerprint cannot see code changes, so a
-    builder whose output rows/schema change must bump its version (or
-    tag) and thereby self-invalidate every stale entry; a pure refactor
-    with identical output keeps version and reuses existing entries
-    (tests pin store rows == live build)."""
-    base = os.path.basename(os.path.abspath(sf_dir).rstrip("/"))
-    tables = (
-        [source_table] if isinstance(source_table, str) else list(source_table)
-    )
-    fp = hashlib.md5(
-        "|".join(
-            [f"v{version}"]
-            + [f"{t}={table_fingerprint(sf_dir, t)}" for t in tables]
-        ).encode()
-    ).hexdigest()[:16]
-    prefix = f"{tag}_{base}_"
-    key = prefix + fp
+    """Build ``builder()`` once per (tag, corpus) in this process and
+    return a parquet scan of it (module docstring has the contract)."""
+    path = os.path.abspath(sf_dir)
+    digest = hashlib.md5(path.encode()).hexdigest()[:12]
+    key = f"{tag}_{os.path.basename(path)}_{digest}"
     root = store_root()
     dest = os.path.join(root, key)
     if not os.path.isdir(dest):
@@ -127,49 +77,7 @@ def materialized_frame(
         tmp = tempfile.mkdtemp(prefix=f".{key}.", dir=root)
         try:
             builder().coalesce(n_files).write.mode("overwrite").parquet(tmp)
-            # Prune superseded siblings of the same (tag, corpus): the
-            # prefix sweep catches every older fingerprint AND every
-            # legacy key format (ADVICE r13 — pre-r13 raw-fingerprint
-            # keys share the same ``tag_base_`` prefix, so the first
-            # post-format-change build garbage-collects them), plus
-            # crashed writers' orphaned ``.tag_base_...`` temp dirs.
-            own_tmp = os.path.basename(tmp)
-            now = time.time()
-            for name in os.listdir(root):
-                stale = name.startswith(prefix) and name != key
-                dead_tmp = False
-                if name.startswith(f".{prefix}") and name != own_tmp:
-                    # age-gate: a YOUNG dot-dir may be a live concurrent
-                    # writer mid-build — deleting it would break the
-                    # lose-the-race-safely contract; an hour-old one is a
-                    # crashed writer's orphan.  ADVICE r14: parquet task
-                    # files land in subdirectories, so the TOP-LEVEL
-                    # mtime of a long-running live build can go stale —
-                    # age by the NEWEST mtime in the tree, not the root's.
-                    try:
-                        newest = os.stat(os.path.join(root, name)).st_mtime
-                        for dp, _dns, fns in os.walk(
-                            os.path.join(root, name)
-                        ):
-                            for f in fns:
-                                try:
-                                    m = os.stat(os.path.join(dp, f)).st_mtime
-                                    if m > newest:
-                                        newest = m
-                                except OSError:
-                                    pass
-                        dead_tmp = (now - newest) > 3600
-                    except OSError:
-                        pass
-                if stale or dead_tmp:
-                    shutil.rmtree(
-                        os.path.join(root, name), ignore_errors=True
-                    )
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                # lost a concurrent race; the winner's rows are identical
-                shutil.rmtree(tmp, ignore_errors=True)
+            os.rename(tmp, dest)
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise

@@ -7,7 +7,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from tests.compare import compare_query, duckdb_connect
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +29,18 @@ def _query_names():
 def test_query_matches_oracle(spark, con, name):
     df = entry_mod.queries()[name](spark, SF_ORACLE)
     compare_query(df, con, entry_mod.oracle_sql()[name])
+
+
+def test_events_runs_test_matches_oracle_at_small_scale(spark):
+    """At sf0.001 some event types have a one-sided or one-hour series
+    (n_above == 0, n_below == 0 or n_above + n_below <= 1); their z-score
+    is NULL in both engines rather than an ANSI DIVIDE_BY_ZERO."""
+    con = duckdb_connect(SF_SMALL)
+    try:
+        df = entry_mod.queries()["events_runs_test"](spark, SF_SMALL)
+        compare_query(df, con, entry_mod.oracle_sql()["events_runs_test"])
+    finally:
+        con.close()
 
 
 def test_entry_smoke(spark):

@@ -1,18 +1,20 @@
-"""Round-12 pins: the shared at-rest substrate store (operators/
-substrate.py) and the graph-lens queries that consume it.
+"""Round-12 pins: the shared substrate store (operators/substrate.py)
+and the graph-lens queries that consume it.
 
-The store is the round's one mechanism change: candidate graphs and
-basket frames that every lens query used to rebuild in-query are now
-materialized once per corpus as parquet under the warehouse dir.  These
-tests pin (a) the store machinery itself — build-once/read-many,
-fingerprint invalidation, atomicity of the visible state — and (b) that
-the lens queries actually read the store (a silent fallback to in-query
-rebuild would resurrect the 3-4 s/query floor the round removed).
+Candidate graphs and basket frames that every lens query used to
+rebuild in-query are materialized once per corpus and run, as parquet in
+a per-process store.  These tests pin (a) the store machinery itself —
+build-once/read-many, per-path keys, per-process lifetime, atomicity of
+the visible state — and (b) that the lens queries actually read the
+store (a silent fallback to in-query rebuild would resurrect the
+3-4 s/query floor the store removed).
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -21,7 +23,7 @@ from simple_land_registry_data_ingestion_spark.operators import (
     mining,
     substrate,
 )
-from tests.conftest import SF_ORACLE, SF_SMALL
+from tests.conftest import REPO_ROOT, SF_ORACLE, SF_SMALL
 
 
 def _formatted(df):
@@ -37,67 +39,123 @@ def _formatted(df):
 # ---------------------------------------------------------------------------
 
 def test_materialized_frame_builds_once_then_reads(spark, tmp_path, monkeypatch):
-    """Second call with identical source data must NOT invoke the
+    """Second call with the same (tag, corpus dir) must NOT invoke the
     builder; the frame round-trips through parquet unchanged."""
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path / "store"))
     src = tmp_path / "sf"
     src.mkdir()
-    (src / "documents.parquet").write_bytes(b"fingerprint-source-v1")
     calls = []
 
     def builder():
         calls.append(1)
         return spark.range(5).select(F.col("id"), (F.col("id") * 2).alias("v"))
 
-    out1 = substrate.materialized_frame(
-        spark, str(src), "t1", "documents", builder
-    )
-    out2 = substrate.materialized_frame(
-        spark, str(src), "t1", "documents", builder
-    )
+    out1 = substrate.materialized_frame(spark, str(src), "t1", builder)
+    out2 = substrate.materialized_frame(spark, str(src), "t1", builder)
     assert len(calls) == 1
     rows = sorted(map(tuple, out1.collect()))
     assert rows == sorted(map(tuple, out2.collect()))
     assert rows == [(i, 2 * i) for i in range(5)]
 
 
+def test_same_tag_over_dirs_sharing_a_basename_builds_per_dir(
+    spark, tmp_path, monkeypatch
+):
+    """Entries are keyed by the corpus's absolute path, not its
+    basename: two ``sf`` dirs under different parents each get their
+    own build and read back their own rows, and a repeat call on either
+    dir reuses its entry."""
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path / "store"))
+    dirs = [tmp_path / "a" / "sf", tmp_path / "b" / "sf"]
+    calls = []
+
+    def builder_for(n):
+        def builder():
+            calls.append(n)
+            return spark.range(n)
+
+        return builder
+
+    for n, d in enumerate(dirs, start=2):
+        d.mkdir(parents=True)
+        out = substrate.materialized_frame(spark, str(d), "t3", builder_for(n))
+        assert out.count() == n
+    assert calls == [2, 3]
+    for n, d in enumerate(dirs, start=2):
+        out = substrate.materialized_frame(spark, str(d), "t3", builder_for(n))
+        assert sorted(r.id for r in out.collect()) == list(range(n))
+    assert calls == [2, 3]
+
+
+_CHILD_BUILD = """
+import sys
+from pyspark.sql import SparkSession
+from simple_land_registry_data_ingestion_spark.operators import substrate
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+src = sys.argv[1]
+out = substrate.materialized_frame(
+    spark, src, "t2", lambda: spark.read.text(src + "/documents.txt"))
+print(",".join(r.value for r in out.collect()))
+spark.stop()
+"""
+
+
+def _run_child(code, *args):
+    env = {
+        k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_GRAPH_STORE"
+    }
+    done = subprocess.run(
+        [sys.executable, "-c", code, *args],
+        cwd=str(REPO_ROOT),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    return done.stdout.strip().splitlines()[-1]
+
+
 def test_materialized_frame_invalidates_on_source_change(
     spark, tmp_path, monkeypatch
 ):
-    """Touching the source table's bytes (new mtime/size) must key a
-    fresh entry AND prune the superseded one — the driver regenerates
-    testdata between rounds, and a stale graph would silently desync
-    every lens query from its oracle."""
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path / "store"))
+    """Regenerated input is seen by the next run: the store lives for
+    one process, so a fresh process rebuilds from the source as it is
+    now rather than reading an entry built from the old bytes."""
+    monkeypatch.delenv("SPARK_GRAFT_GRAPH_STORE", raising=False)
     src = tmp_path / "sf"
     src.mkdir()
-    f = src / "documents.parquet"
-    f.write_bytes(b"v1")
-    fp1 = substrate.table_fingerprint(str(src), "documents")
-    substrate.materialized_frame(
-        spark, str(src), "t2", "documents", lambda: spark.range(3)
-    )
-    f.write_bytes(b"v2-longer")
-    fp2 = substrate.table_fingerprint(str(src), "documents")
-    assert fp1 != fp2
+    f = src / "documents.txt"
+    f.write_text("v1\n")
     out = substrate.materialized_frame(
-        spark, str(src), "t2", "documents", lambda: spark.range(4)
+        spark, str(src), "t2", lambda: spark.read.text(str(f))
     )
-    assert out.count() == 4
-    entries = [
-        d for d in os.listdir(str(tmp_path / "store")) if d.startswith("t2_")
-    ]
-    # r13 key = md5 over (version, per-table fingerprints); recompute it
-    # the same way rather than pinning the raw table fingerprint
-    import hashlib
+    assert [r.value for r in out.collect()] == ["v1"]
+    f.write_text("v2\n")
+    assert _run_child(_CHILD_BUILD, str(src)) == "v2"
 
-    expected = hashlib.md5(f"v1|documents={fp2}".encode()).hexdigest()[:16]
-    assert len(entries) == 1 and entries[0].endswith(expected)
+
+def test_process_store_is_removed_at_exit():
+    """Without ``SPARK_GRAFT_GRAPH_STORE`` the store is a temp dir owned
+    by the process: it is not under the repo and is gone once the
+    process exits, so nothing outlives the run."""
+    root = _run_child(
+        "import os\n"
+        "from simple_land_registry_data_ingestion_spark.operators import substrate\n"
+        "root = substrate.store_root()\n"
+        "open(os.path.join(root, 'probe'), 'w').write('x')\n"
+        "print(root)\n"
+    )
+    assert os.path.isabs(root)
+    assert not root.startswith(str(REPO_ROOT) + os.sep), root
+    assert not os.path.exists(root), root
 
 
 def test_store_entries_are_tagged_per_corpus(spark):
-    """The real store keys carry (tag, sf basename, fingerprint) so
-    sf0.001 tests and sf0.1 bench coexist; a failed/partial build must
+    """The real store keys carry (tag, sf basename, path hash) so
+    sf0.001 and sf0.01 entries coexist; a failed/partial build must
     never be visible (only complete dirs, no temp residue leaks into
     reads)."""
     dedup.shared_minhash_graph(spark, SF_ORACLE)
@@ -126,9 +184,9 @@ def test_kcore_and_link_prediction_read_simhash_store(spark, monkeypatch):
     tags = []
     real = substrate.materialized_frame
 
-    def spy(spark_, sf_dir, tag, source_table, builder, n_files=8):
+    def spy(spark_, sf_dir, tag, builder, n_files=8):
         tags.append(tag)
-        return real(spark_, sf_dir, tag, source_table, builder, n_files)
+        return real(spark_, sf_dir, tag, builder, n_files)
 
     monkeypatch.setattr(dedup, "materialized_frame", spy)
     dedup.dedup_kcore_peel(spark, SF_ORACLE)
@@ -163,9 +221,9 @@ def test_minhash_lenses_read_store(spark, monkeypatch):
     tags = []
     real = substrate.materialized_frame
 
-    def spy(spark_, sf_dir, tag, source_table, builder, n_files=8):
+    def spy(spark_, sf_dir, tag, builder, n_files=8):
         tags.append(tag)
-        return real(spark_, sf_dir, tag, source_table, builder, n_files)
+        return real(spark_, sf_dir, tag, builder, n_files)
 
     monkeypatch.setattr(dedup, "materialized_frame", spy)
     lenses = (

@@ -1,22 +1,13 @@
-"""Round-13 pins: substrate accounting and keying fixes.
+"""Round-13 pins: substrate accounting.
 
-Three r12-verdict/ADVICE items land here:
   (a) the basket family gets a LIVE, benched producer again —
       basket_part_pairs builds the distinct basket and pair counts from
       the lineitem scan in-query (no store read), matching the
       dedup_simhash_pairs discipline; graph_hits_scores likewise builds
       its single-consumer edge list live.
-  (b) materialized_frame keys on ALL source tables (a multi-input
-      builder keyed on one table served stale frames when only the
-      other input regenerated) and on a builder OUTPUT version, so
-      contract changes self-invalidate.
-  (c) table_fingerprint walks nested layouts, so an in-place rewrite of
-      a leaf file under a partitioned table invalidates the store.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -40,9 +31,9 @@ def test_basket_part_pairs_is_the_live_producer(spark, monkeypatch):
     store_calls = []
     real_frame = substrate.materialized_frame
 
-    def spy_frame(spark_, sf_dir, tag, source_table, builder, **kw):
+    def spy_frame(spark_, sf_dir, tag, builder, **kw):
         store_calls.append(tag)
-        return real_frame(spark_, sf_dir, tag, source_table, builder, **kw)
+        return real_frame(spark_, sf_dir, tag, builder, **kw)
 
     loaded = []
     real_load = mining.load
@@ -60,7 +51,7 @@ def test_basket_part_pairs_is_the_live_producer(spark, monkeypatch):
     # the pair aggregation sits downstream of the basket checkpoint, so
     # it must be visible in the executed plan
     assert "part_a" in plan and "part_b" in plan, plan[:2000]
-    assert "_shared_graphs" not in plan, plan[:2000]
+    assert substrate.store_root() not in plan, plan[:2000]
     assert df.limit(1).count() >= 0
 
 
@@ -70,9 +61,9 @@ def test_graph_hits_scores_builds_edges_live(spark, monkeypatch):
     store_calls = []
     real_frame = substrate.materialized_frame
 
-    def spy_frame(spark_, sf_dir, tag, source_table, builder, **kw):
+    def spy_frame(spark_, sf_dir, tag, builder, **kw):
         store_calls.append(tag)
-        return real_frame(spark_, sf_dir, tag, source_table, builder, **kw)
+        return real_frame(spark_, sf_dir, tag, builder, **kw)
 
     loaded = []
     real_load = mining.load
@@ -87,79 +78,6 @@ def test_graph_hits_scores_builds_edges_live(spark, monkeypatch):
     assert store_calls == [], "single-consumer frame must not use the store"
     assert "lineitem" in loaded and "orders" in loaded
     assert df.count() == 20
-
-
-# ---------------------------------------------------------------------------
-# (b) multi-table + versioned store keys
-# ---------------------------------------------------------------------------
-
-def _write_table(sf_dir, table, rows):
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "part-0.parquet.txt"), "w") as fh:
-        fh.write(rows)
-    return path
-
-
-def test_multi_table_key_sees_every_input(tmp_path, spark, monkeypatch):
-    """Regenerating ANY listed source table must change the store key —
-    the ADVICE r12 staleness hole was a lineitem-join-orders frame keyed
-    on lineitem alone."""
-    sf = str(tmp_path)
-    _write_table(sf, "a", "a1")
-    _write_table(sf, "b", "b1")
-    builds = []
-
-    def builder():
-        builds.append(1)
-        return spark.range(1).select(F.col("id").cast("long"))
-
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path / "store"))
-    substrate.materialized_frame(spark, sf, "t13", ["a", "b"], builder)
-    assert builds == [1]
-    substrate.materialized_frame(spark, sf, "t13", ["a", "b"], builder)
-    assert builds == [1], "identical inputs must reuse the entry"
-    # touch ONLY the second table (new mtime/size)
-    with open(os.path.join(sf, "b.parquet", "part-0.parquet.txt"), "w") as fh:
-        fh.write("b2-different-size")
-    substrate.materialized_frame(spark, sf, "t13", ["a", "b"], builder)
-    assert builds == [1, 1], "second-table regeneration must rebuild"
-
-
-def test_builder_version_self_invalidates(tmp_path, spark, monkeypatch):
-    """Bumping the builder's output-contract version must rebuild even
-    when the input data is byte-identical."""
-    sf = str(tmp_path)
-    _write_table(sf, "a", "a1")
-    builds = []
-
-    def builder():
-        builds.append(1)
-        return spark.range(1).select(F.col("id").cast("long"))
-
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path / "store"))
-    substrate.materialized_frame(spark, sf, "t13v", "a", builder, version=1)
-    substrate.materialized_frame(spark, sf, "t13v", "a", builder, version=1)
-    assert builds == [1]
-    substrate.materialized_frame(spark, sf, "t13v", "a", builder, version=2)
-    assert builds == [1, 1]
-
-
-def test_fingerprint_walks_nested_layouts(tmp_path):
-    """An in-place rewrite of a file INSIDE a partition subdirectory
-    must change the fingerprint (the pre-r13 listdir form only saw the
-    top level, where the subdir's own mtime entry does not change)."""
-    sf = str(tmp_path)
-    part_dir = os.path.join(sf, "t.parquet", "day=1")
-    os.makedirs(part_dir)
-    leaf = os.path.join(part_dir, "part-0.parquet")
-    with open(leaf, "w") as fh:
-        fh.write("v1")
-    fp1 = substrate.table_fingerprint(sf, "t")
-    with open(leaf, "w") as fh:
-        fh.write("v2-longer")  # different size => different stat
-    fp2 = substrate.table_fingerprint(sf, "t")
-    assert fp1 != fp2
 
 
 # ---------------------------------------------------------------------------

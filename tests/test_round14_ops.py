@@ -9,9 +9,6 @@
       byte-identical at any block size (the division happens after the
       matmul, so each block row's floats equal the full-matrix ones),
       bounding a degenerate cluster's memory at O(block * c).
-  (c) materialized_frame garbage-collects legacy-format store siblings
-      and hour-old crashed-writer temp dirs, but never a fresh temp dir
-      (a live concurrent writer mid-build).
 """
 
 from __future__ import annotations
@@ -73,9 +70,9 @@ def test_prefix_index_producer_is_live_and_lens_reads_store(spark, monkeypatch):
     store_calls = []
     real_frame = substrate.materialized_frame
 
-    def spy_frame(spark_, sf_dir, tag, source_table, builder, **kw):
+    def spy_frame(spark_, sf_dir, tag, builder, **kw):
         store_calls.append(tag)
-        return real_frame(spark_, sf_dir, tag, source_table, builder, **kw)
+        return real_frame(spark_, sf_dir, tag, builder, **kw)
 
     monkeypatch.setattr(dedup, "materialized_frame", spy_frame)
     prod = dedup.dedup_prefix_index_build(spark, SF_SMALL)
@@ -113,30 +110,3 @@ def test_prefix_index_is_threshold_independent(spark):
         map(tuple, dedup.jaccard_prefix_pairs(docs, 0.7).collect())
     )
     assert via_index == live
-
-
-def test_store_gc_prunes_legacy_and_crashed_entries(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_STORE", str(tmp_path))
-    base = os.path.basename(SF_SMALL.rstrip("/"))
-    prefix = f"gctag_{base}_"
-    legacy = tmp_path / f"{prefix}rawfingerprint0123456789"
-    legacy.mkdir()
-    old_tmp = tmp_path / f".{prefix}deadbeef.crashed"
-    old_tmp.mkdir()
-    two_hours_ago = __import__("time").time() - 7200
-    os.utime(old_tmp, (two_hours_ago, two_hours_ago))
-    fresh_tmp = tmp_path / f".{prefix}cafebabe.live"
-    fresh_tmp.mkdir()
-
-    df = substrate.materialized_frame(
-        spark,
-        SF_SMALL,
-        "gctag",
-        "region",
-        lambda: spark.range(3).select(F.col("id").alias("k")),
-    )
-    assert df.count() == 3
-    names = {p.name for p in tmp_path.iterdir()}
-    assert legacy.name not in names, "legacy-format sibling must be pruned"
-    assert old_tmp.name not in names, "hour-old crashed temp must be pruned"
-    assert fresh_tmp.name in names, "fresh temp (live writer) must survive"

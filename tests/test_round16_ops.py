@@ -242,9 +242,7 @@ def test_store_footer_schema_equals_spark_inference(spark, tmp_path, monkeypatch
             F.struct(F.col("id").alias("a")).alias("st"),
         )
 
-    out = substrate.materialized_frame(
-        spark, SF_SMALL, "r16schema", "documents", builder
-    )
+    out = substrate.materialized_frame(spark, SF_SMALL, "r16schema", builder)
     assert out.count() == 5
     root = substrate.store_root()
     (entry,) = [d for d in os.listdir(root) if d.startswith("r16schema_")]
