@@ -504,15 +504,15 @@ _SIGS_CTE = """
 """
 
 
-#: The driver's correctness gate evaluates the FIRST 50 entries of the
+#: The external correctness gate evaluates the FIRST 50 entries of the
 #: dict queries() returns, so queries() and oracle_sql() move the current
 #: window (_R16_WINDOW, in priority order) to the front; everything else
 #: follows in registry order.  Rotation rule, applied at the start of each
 #: round: any red query takes the head; then block A, this round's
 #: pre-freeze plan/execution changes (no plan rewrite after the freeze —
-#: it waits a round); then the queries whose newest driver evidence is
+#: it waits a round); then the queries whose newest certification is
 #: oldest, cohort by cohort (alphabetical within a cohort), filling the
-#: window to 50.  No query's newest driver row may age past 2 rounds.
+#: window to 50.  No query's newest certification may age past 2 rounds.
 _R16_WINDOW: list[str] = [
     # -- block A: r16 plan/execution changes, all pre-freeze --
     "dedup_simhash",
