@@ -6,6 +6,11 @@ callable ``(spark, sf_dir) -> DataFrame``; ``oracle_sql()`` gives the DuckDB
 twin for each.  Column names/types are aligned on both sides (aggregates
 aliased identically, integer-ish derived columns cast to BIGINT, doubles
 rounded) so the order-insensitive value-hash compare is stable.
+
+``_ORACLES`` is the only registry.  Each key names both the query and the
+function that runs it: the one function of that name defined in one of the
+``_FAMILIES`` modules, resolved once at import.  To register a query, define
+the function in a family module and add its oracle under the same name.
 """
 
 from __future__ import annotations
@@ -31,6 +36,25 @@ from simple_land_registry_data_ingestion_spark.operators import (
 from simple_land_registry_data_ingestion_spark.session import apply_session_defaults
 from simple_land_registry_data_ingestion_spark.streaming import ops as stream_ops
 
+#: The modules that define query functions; see ``_resolve``.
+_FAMILIES = (
+    relational,
+    text_fns,
+    dedup,
+    similarity,
+    stream_ops,
+    evaluation,
+    udfs,
+    mining,
+    sketches,
+    scalars,
+    asof,
+    multimodal,
+    calendar,
+    skew,
+    packing,
+)
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -47,363 +71,6 @@ def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessio
     run.__doc__ = fn.__doc__
     return run
 
-
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ---- r09 window (50 slots), per VERDICT r8 item 1 + ADVICE: the 4
-    # ---- r08 hash-red queries lead (fixed at HEAD mid-round-8; a green
-    # ---- driver row is the only closure), then the 25 round-7 additions
-    # ---- never driver-checked, then the 20 round-8 additions (X219-X238),
-    # ---- then customers_rfm_segments (late r8 mechanism rewire).
-    # ---- events_lateness_audit (the other late rewire) spills to lead
-    # ---- the r10 queue — see the comment ahead of it below. ----
-    "events_global_rank_two_phase": relational.events_global_rank_two_phase,
-    "sample_ipf_raking": relational.sample_ipf_raking,
-    "events_mann_whitney": relational.events_mann_whitney,
-    "geo_nearest_hub": relational.geo_nearest_hub,
-    # ---- round-7 additions taking their FIRST driver rows ----
-    "text_bpe_word_merges": text_fns.text_bpe_word_merges,
-    "sales_hierarchy_share": relational.sales_hierarchy_share,
-    "text_heaps_law": relational.text_heaps_law,
-    "eval_multiclass_prf": evaluation.eval_multiclass_prf,
-    "graph_degree_powerlaw": mining.graph_degree_powerlaw,
-    "join_asof_nearest": asof.join_asof_nearest,
-    "events_power_analysis": relational.events_power_analysis,
-    "events_fourier_strength": relational.events_fourier_strength,
-    "graph_assortativity": mining.graph_assortativity,
-    "events_psi_drift": relational.events_psi_drift,
-    "orders_simpson_paradox": relational.orders_simpson_paradox,
-    "profile_l_diversity": relational.profile_l_diversity,
-    "text_chao1_vocab": text_fns.text_chao1_vocab,
-    "text_textrank_keywords": mining.text_textrank_keywords,
-    "events_sprt_decision": relational.events_sprt_decision,
-    "events_lag_xcorr": relational.events_lag_xcorr,
-    "events_entropy_rate": relational.events_entropy_rate,
-    "orders_hill_tail_index": relational.orders_hill_tail_index,
-    "graph_hits_scores": mining.graph_hits_scores,
-    "events_kruskal_wallis": relational.events_kruskal_wallis,
-    "events_runs_test": relational.events_runs_test,
-    "parts_xyz_classification": relational.parts_xyz_classification,
-    "customers_rfm_migration": relational.customers_rfm_migration,
-    "agg_ams_f2_sketch": sketches.agg_ams_f2_sketch,
-    "agg_kmv_distinct": sketches.agg_kmv_distinct,
-    # ---- round-8 additions (X219-X238) taking their FIRST driver rows ----
-    "customers_gini_concentration": relational.customers_gini_concentration,
-    "orders_pareto_8020": relational.orders_pareto_8020,
-    "orders_cohort_retention_triangle": relational.orders_cohort_retention_triangle,
-    "part_skyline_pareto": relational.part_skyline_pareto,
-    "orders_backlog_burndown": relational.orders_backlog_burndown,
-    "events_winsorized_order_stats": relational.events_winsorized_order_stats,
-    "events_mad_outliers": relational.events_mad_outliers,
-    "events_benford_audit": relational.events_benford_audit,
-    "customers_nps_bayes_shrinkage": relational.customers_nps_bayes_shrinkage,
-    "lineitem_price_elasticity": relational.lineitem_price_elasticity,
-    "events_gap_fill_interpolate": relational.events_gap_fill_interpolate,
-    "events_haar_wavelet_energy": relational.events_haar_wavelet_energy,
-    "events_ewma_crossover": udfs.events_ewma_crossover,
-    "events_page_hinkley_drift": udfs.events_page_hinkley_drift,
-    "text_simpson_diversity": text_fns.text_simpson_diversity,
-    "text_js_divergence": text_fns.text_js_divergence,
-    "text_minhash_jaccard_estimate": dedup.text_minhash_jaccard_estimate,
-    "orders_market_basket_lift": relational.orders_market_basket_lift,
-    "agg_kmv_setops": sketches.agg_kmv_setops,
-    "join_interval_overlap_weighted": relational.join_interval_overlap_weighted,
-    # ---- slot 50: ntile windows became closed-form two-phase rank (285bde1 rewire) ----
-    "customers_rfm_segments": relational.customers_rfm_segments,
-    # ---- r10 queue head: late-r8 rewire (bucket-merge lateness), re-cert pending ----
-    "events_lateness_audit": relational.events_lateness_audit,
-    # ---- certified backlog (driver rows r02-r08, all re-proven locally
-    # ---- every round by tests/test_oracle_parity.py) ----
-    "events_quantile_normalize": relational.events_quantile_normalize,
-    "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
-    "eval_auc_rank": evaluation.eval_auc_rank,
-    "dedup_link_prediction": dedup.dedup_link_prediction,
-    "text_pii_scan": text_fns.text_pii_scan,
-    "join_spatial_grid": relational.join_spatial_grid,
-    "q8_market_share": relational.q8_market_share,
-    "q13_customer_distribution": relational.q13_customer_distribution,
-    "q15_top_supplier": relational.q15_top_supplier,
-    "q17_small_quantity_revenue": relational.q17_small_quantity_revenue,
-    "q18_large_volume_customer": relational.q18_large_volume_customer,
-    "q21_suppliers_kept_waiting": relational.q21_suppliers_kept_waiting,
-    "events_hourly_acf": relational.events_hourly_acf,
-    "similarity_matryoshka_error": similarity.similarity_matryoshka_error,
-    "search_rank_fusion": text_fns.search_rank_fusion,
-    "eval_calibration_bins": evaluation.eval_calibration_bins,
-    "similarity_mips_transform": similarity.similarity_mips_transform,
-    "events_kalman_level": udfs.events_kalman_level,
-    "events_holt_winters_pandas": udfs.events_holt_winters_pandas,
-    "stream_state_inspect": stream_ops.stream_state_inspect,
-    "eval_qini_uplift": evaluation.eval_qini_uplift,
-    "events_ks_test": relational.events_ks_test,
-    "events_ab_srm_check": relational.events_ab_srm_check,
-    "eval_ips_offpolicy": evaluation.eval_ips_offpolicy,
-    "eval_conformal_interval": evaluation.eval_conformal_interval,
-    "eval_pinball_loss": evaluation.eval_pinball_loss,
-    "sample_kcenter_coreset": similarity.sample_kcenter_coreset,
-    "agg_join_size_sketch": sketches.agg_join_size_sketch,
-    "events_bootstrap_ci": relational.events_bootstrap_ci,
-    "sample_negative_pairs": relational.sample_negative_pairs,
-    "events_diff_in_diff": relational.events_diff_in_diff,
-    "eval_brier_decomposition": evaluation.eval_brier_decomposition,
-    "graph_modularity": dedup.graph_modularity,
-    "graph_label_propagation": dedup.graph_label_propagation,
-    "eval_ndcg_at_k": evaluation.eval_ndcg_at_k,
-    "eval_rank_correlation": evaluation.eval_rank_correlation,
-    "eval_cohens_kappa": evaluation.eval_cohens_kappa,
-    "item_item_cf": mining.item_item_cf,
-    "search_phrase_positional": text_fns.search_phrase_positional,
-    "eval_mrr_hit_rate": evaluation.eval_mrr_hit_rate,
-    "audit_referential_integrity": relational.audit_referential_integrity,
-    "text_dictionary_tagging": text_fns.text_dictionary_tagging,
-    "agg_weighted_median": relational.agg_weighted_median,
-    "eval_map_at_k": evaluation.eval_map_at_k,
-    "sample_neyman_allocation": relational.sample_neyman_allocation,
-    "events_changepoint_binseg": relational.events_changepoint_binseg,
-    "dedup_kcore_peel": dedup.dedup_kcore_peel,
-    "events_holt_pandas": udfs.events_holt_pandas,
-    "stream_full_outer_interval_join": stream_ops.stream_full_outer_interval_join,
-    "text_ngram_novelty": dedup.text_ngram_novelty,
-    "dedup_tfidf_cosine": dedup.dedup_tfidf_cosine,
-    "text_readability": text_fns.text_readability,
-    "orders_penny_allocation": relational.orders_penny_allocation,
-    "orders_mix_shift_decomposition": relational.orders_mix_shift_decomposition,
-    "users_kaplan_meier": relational.users_kaplan_meier,
-    "events_theilsen_trend": relational.events_theilsen_trend,
-    "agg_bloom_filter_fpr": sketches.agg_bloom_filter_fpr,
-    "events_audience_overlap_hll": sketches.events_audience_overlap_hll,
-    "similarity_sq8_error": similarity.similarity_sq8_error,
-    "stream_two_level_window": stream_ops.stream_two_level_window,
-    "events_cusum_pandas": udfs.events_cusum_pandas,
-    "parts_abc_classification": relational.parts_abc_classification,
-    "cdc_incremental_aggregate": relational.cdc_incremental_aggregate,
-    "q7_nation_volume": relational.q7_nation_volume,
-    "join_asof_tolerance": asof.join_asof_tolerance,
-    "sql_pipe_syntax": relational.sql_pipe_syntax,
-    "scalar_collation": relational.scalar_collation,
-    "agg_listagg_countif": relational.agg_listagg_countif,
-    "events_time_to_convert": relational.events_time_to_convert,
-    "text_rake_keywords": text_fns.text_rake_keywords,
-    "events_forecast_snaive": relational.events_forecast_snaive,
-    "events_rolling_median": relational.events_rolling_median,
-    "scalar_url_funcs": scalars.scalar_url_funcs,
-    "orders_totals_reconciliation": relational.orders_totals_reconciliation,
-    "users_longest_streak": relational.users_longest_streak,
-    "orders_same_day_repeat": relational.orders_same_day_repeat,
-    "part_prefix_autocomplete": relational.part_prefix_autocomplete,
-    "events_bot_regularity": relational.events_bot_regularity,
-    "inventory_fifo_matching": relational.inventory_fifo_matching,
-    "events_ab_cuped": relational.events_ab_cuped,
-    "agg_bitmap_distinct": sketches.agg_bitmap_distinct,
-    "q4_order_priority": relational.q4_order_priority,
-    "q14_promo_revenue": relational.q14_promo_revenue,
-    "q19_disjunctive_revenue": relational.q19_disjunctive_revenue,
-    "q22_global_sales_opportunity": relational.q22_global_sales_opportunity,
-    "customers_woe_binning": relational.customers_woe_binning,
-    "profile_merkle_ranges": relational.profile_merkle_ranges,
-    "er_edit_distance": mining.er_edit_distance,
-    "text_bm25_topk": text_fns.text_bm25_topk,
-    "sample_temperature_mix": relational.sample_temperature_mix,
-    "join_range_binned": relational.join_range_binned,
-    "stream_upsert_latest": stream_ops.stream_upsert_latest,
-    "events_session_window_batch": relational.events_session_window_batch,
-    "agg_transpose_summary": relational.agg_transpose_summary,
-    "sql_group_order_by_all": relational.sql_group_order_by_all,
-    "events_heavy_hitters": sketches.events_heavy_hitters,
-    "sample_token_budget_mix": relational.sample_token_budget_mix,
-    "events_anomaly_mad": relational.events_anomaly_mad,
-    "text_zipf_slope": text_fns.text_zipf_slope,
-    "split_leakage_free": dedup.split_leakage_free,
-    "similarity_pq_adc": similarity.similarity_pq_adc,
-    "dedup_incremental_minhash": dedup.dedup_incremental_minhash,
-    "dedup_canonical_by_quality": dedup.dedup_canonical_by_quality,
-    "events_retention_cohorts": relational.events_retention_cohorts,
-    "pandas_grouped_agg_gini": udfs.pandas_grouped_agg_gini,
-    "cogroup_activity_orders": udfs.cogroup_activity_orders,
-    "profile_numeric_corr": relational.profile_numeric_corr,
-    "text_sentence_stats": text_fns.text_sentence_stats,
-    "stream_static_enrich_join": stream_ops.stream_static_enrich_join,
-    "dedup_pagerank_hubs": dedup.dedup_pagerank_hubs,
-    "arrow_md5_digest": udfs.arrow_md5_digest,
-    "events_resample_ffill": relational.events_resample_ffill,
-    "sql_recursive_cte": relational.sql_recursive_cte,
-    "sql_udf_banding": relational.sql_udf_banding,
-    "text_lang_id_ngram": text_fns.text_lang_id_ngram,
-    "embedding_random_projection": similarity.embedding_random_projection,
-    "similarity_ivfpq_adc": similarity.similarity_ivfpq_adc,
-    "pack_sequences_documents": packing.pack_sequences_documents,
-    "text_gopher_filter": text_fns.text_gopher_filter,
-    "dedup_decontaminate": dedup.dedup_decontaminate,
-    "multimodal_frame_sample": multimodal.multimodal_frame_sample,
-    "similarity_ivf_kmeans": similarity.similarity_ivf_kmeans,
-    "stream_left_outer_interval_join": stream_ops.stream_stream_left_outer_interval_join,
-    "text_repetition_ratio": text_fns.text_repetition_ratio,
-    "dedup_containment_lsh": dedup.dedup_containment_lsh,
-    "events_funnel_conversion": relational.events_funnel_conversion,
-    "sample_weighted_aes": relational.sample_weighted_aes,
-    "agg_histogram_bins": relational.agg_histogram_bins,
-    "similarity_ann_batch": similarity.similarity_ann_batch,
-    "text_bigram_perplexity": text_fns.text_bigram_perplexity,
-    "cdc_merge_upsert": relational.cdc_merge_upsert,
-    "stream_inactivity_sessions": stream_ops.stream_inactivity_sessions,
-    "rollup_orders": relational.rollup_orders,
-    "cube_lineitem": relational.cube_lineitem,
-    "sql_grouping_sets": relational.sql_grouping_sets,
-    "pivot_orders": relational.pivot_orders,
-    "skew_salted_agg": skew.skew_salted_agg,
-    "skew_salted_join": skew.skew_salted_join,
-    "join_customer_orders": relational.join_customer_orders,
-    "join_multiway": relational.join_multiway,
-    "join_left_outer": relational.join_left_outer,
-    "join_left_semi": relational.join_left_semi,
-    "join_left_anti": relational.join_left_anti,
-    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-    "dedup_embedding_cosine": dedup.dedup_embedding_cosine,
-    "stream_user_topk": stream_ops.stream_user_topk,
-    "dedup_semdedup": dedup.dedup_semdedup,
-    "dedup_triangle_stats": dedup.dedup_triangle_stats,
-    "events_markov_transitions": relational.events_markov_transitions,
-    "events_zorder_key": scalars.events_zorder_key,
-    "text_winnowing_fingerprints": text_fns.text_winnowing_fingerprints,
-    "join_scd2_dimension": asof.join_scd2_dimension,
-    "agg_histogram_equidepth": relational.agg_histogram_equidepth,
-    "sample_source_capped": relational.sample_source_capped,
-    "text_quality_quantile_gate": text_fns.text_quality_quantile_gate,
-    "dedup_exact_substring": dedup.dedup_exact_substring,
-    "similarity_recall_at_k": similarity.similarity_recall_at_k,
-    "agg_approx_quantile_error": relational.agg_approx_quantile_error,
-    "sample_priority_estimate": relational.sample_priority_estimate,
-    "agg_hll_mergeable": sketches.agg_hll_mergeable,
-    "er_blocked_match": mining.er_blocked_match,
-    "basket_part_pairs": mining.basket_part_pairs,
-    "events_ema_decay": relational.events_ema_decay,
-    "profile_expectations": relational.profile_expectations,
-    "dedup_source_overlap_matrix": dedup.dedup_source_overlap_matrix,
-    "sql_lateral_topn": relational.sql_lateral_topn,
-    "window_range_frame": relational.window_range_frame,
-    "window_running_sum": relational.window_running_sum,
-    "window_lag_lead": relational.window_lag_lead,
-    "window_topk_per_group": relational.window_topk_per_group,
-    "sort_topk": relational.sort_topk,
-    "set_union_distinct": relational.set_union_distinct,
-    "set_intersect_except": relational.set_intersect_except,
-    "join_full_outer": relational.join_full_outer,
-    "join_range_nonequi": relational.join_range_nonequi,
-    "join_asof_rates": asof.join_asof_rates,
-    "q3_shipping_priority": relational.q3_shipping_priority,
-    "sql_exists_subquery": relational.sql_exists_subquery,
-    "sql_scalar_subquery": relational.sql_scalar_subquery,
-    "scalar_string_funcs": scalars.scalar_string_funcs,
-    "scalar_date_funcs": scalars.scalar_date_funcs,
-    "scalar_math_funcs": scalars.scalar_math_funcs,
-    "scalar_json_funcs": scalars.scalar_json_funcs,
-    "scalar_map_funcs": scalars.scalar_map_funcs,
-    "array_funcs": scalars.array_funcs,
-    "generator_explode_tokens": scalars.generator_explode_tokens,
-    "calendar_working_days": calendar.calendar_working_days,
-    "calendar_month_bounds": calendar.calendar_month_bounds,
-    "calendar_publish_dates": calendar.calendar_publish_dates,
-    "text_token_count": text_fns.text_token_count,
-    "text_quality_score": text_fns.text_quality_score,
-    "text_lang_id": text_fns.text_lang_id,
-    "er_sorted_neighborhood": mining.er_sorted_neighborhood,
-    "events_attribution_last_touch": relational.events_attribution_last_touch,
-    "text_collocations_pmi": text_fns.text_collocations_pmi,
-    "text_feature_hashing": text_fns.text_feature_hashing,
-    "events_activity_islands": relational.events_activity_islands,
-    "customers_target_encoding": relational.customers_target_encoding,
-    "events_cumulative_distinct_users": relational.events_cumulative_distinct_users,
-    "profile_benford_deviation": relational.profile_benford_deviation,
-    "events_user_entropy": relational.events_user_entropy,
-    "events_mutual_information": relational.events_mutual_information,
-    "join_null_safe": relational.join_null_safe,
-    "scan_file_metadata": relational.scan_file_metadata,
-    "events_mean_shift_detect": relational.events_mean_shift_detect,
-    "sample_mix_diversity": relational.sample_mix_diversity,
-    "parts_pareto_frontier": relational.parts_pareto_frontier,
-    "set_ops_all": relational.set_ops_all,
-    "scalar_try_funcs": relational.scalar_try_funcs,
-    "agg_bitwise": relational.agg_bitwise,
-    "events_winsorized_stats": relational.events_winsorized_stats,
-    "profile_k_anonymity": relational.profile_k_anonymity,
-    "sample_shard_routing": relational.sample_shard_routing,
-    "profile_dp_noisy_counts": relational.profile_dp_noisy_counts,
-    "events_seasonality": relational.events_seasonality,
-    "orders_cohort_revenue": relational.orders_cohort_revenue,
-    "events_path_trigrams": relational.events_path_trigrams,
-    "supplier_otif_scorecard": relational.supplier_otif_scorecard,
-    "events_regr_builtin": relational.events_regr_builtin,
-    "orders_open_backlog": relational.orders_open_backlog,
-    "compliance_erasure_simulation": relational.compliance_erasure_simulation,
-    "profile_table_checksum": relational.profile_table_checksum,
-    "events_recency_features": relational.events_recency_features,
-    "q5_local_supplier_volume": relational.q5_local_supplier_volume,
-    "q10_returned_items": relational.q10_returned_items,
-    "events_linear_trend": relational.events_linear_trend,
-    "events_chi_square": relational.events_chi_square,
-    "agg_histogram_2d": relational.agg_histogram_2d,
-    "dedup_exact_documents": dedup.dedup_exact_documents,
-    "cdc_latest_per_key": dedup.cdc_latest_per_key,
-    "dedup_jaccard_lsh": dedup.dedup_jaccard_lsh,
-    "dedup_embedding_lsh": dedup.dedup_embedding_lsh,
-    "dedup_simhash": dedup.dedup_simhash,
-    "dedup_simhash_pairs": dedup.dedup_simhash_pairs,
-    "dedup_cluster_assignments": dedup.dedup_cluster_assignments,
-    "similarity_topk_bruteforce": similarity.similarity_topk_bruteforce,
-    "similarity_ann_lsh": similarity.similarity_ann_lsh,
-    "similarity_ann_ivf": similarity.similarity_ann_ivf,
-    "similarity_ann_lsh_multiprobe": similarity.similarity_ann_lsh_multiprobe,
-    "similarity_bucket_histogram": similarity.similarity_bucket_histogram,
-    "dedup_jaccard_prefix": dedup.dedup_jaccard_prefix,
-    "dedup_prefix_index_build": dedup.dedup_prefix_index_build,
-    "multimodal_binary_metadata": multimodal.multimodal_binary_metadata,
-    "multimodal_decode_features": multimodal.multimodal_decode_features,
-    "text_fingerprint": text_fns.text_fingerprint,
-    "text_stats_pandas_udf": text_fns.text_stats_pandas_udf,
-    "grouped_zscore_pandas": udfs.grouped_zscore_pandas,
-    "udtf_chunk_documents": udfs.udtf_chunk_documents,
-    "agg_approx_distinct": relational.agg_approx_distinct,
-    "agg_collect_sorted": relational.agg_collect_sorted,
-    "agg_distinct_counts": relational.agg_distinct_counts,
-    "agg_percentiles": relational.agg_percentiles,
-    "case_when_bucketing": relational.case_when_bucketing,
-    "cdc_snapshot_diff": relational.cdc_snapshot_diff,
-    "distinct_rows": relational.distinct_rows,
-    "filter_project": relational.filter_project,
-    "ingest_max_date": relational.ingest_max_date,
-    "ingest_run_summary": relational.ingest_run_summary,
-    "profile_columns": relational.profile_columns,
-    "q1_pricing_summary": relational.q1_pricing_summary,
-    "q6_revenue_filter": relational.q6_revenue_filter,
-    "sample_hash_deterministic": relational.sample_hash_deterministic,
-    "sample_stratified_fixed": relational.sample_stratified_fixed,
-    "sessionize_events": relational.sessionize_events,
-    "stream_dedup_within_watermark": stream_ops.stream_dedup_within_watermark,
-    "stream_session_window": stream_ops.stream_session_window,
-    "stream_sliding_window": stream_ops.stream_sliding_window,
-    "stream_stateful_user_stats": stream_ops.stream_stateful_user_stats,
-    "stream_stream_interval_join": stream_ops.stream_stream_interval_join,
-    "stream_tumbling_append_watermark": stream_ops.stream_tumbling_append_watermark,
-    "stream_tumbling_window": stream_ops.stream_tumbling_window,
-    "text_tfidf_topk": text_fns.text_tfidf_topk,
-    "text_vocab_topk": text_fns.text_vocab_topk,
-    "unpivot_measures": relational.unpivot_measures,
-    "window_rank_family": relational.window_rank_family,
-    "agg_count_min_sketch": sketches.agg_count_min_sketch,
-    "dedup_minhash_error": dedup.dedup_minhash_error,
-    "text_chunk_dedup_fraction": text_fns.text_chunk_dedup_fraction,
-    "er_golden_record": mining.er_golden_record,
-    "similarity_range_search": similarity.similarity_range_search,
-    "cdc_scd2_build": relational.cdc_scd2_build,
-    "events_adoption_wilson": relational.events_adoption_wilson,
-    "text_bigram_kn_perplexity": text_fns.text_bigram_kn_perplexity,
-    "dedup_lsh_scurve": dedup.dedup_lsh_scurve,
-    "sample_importance_reweight": relational.sample_importance_reweight,
-    "agg_partial_merge": relational.agg_partial_merge,
-    "text_jsd_source_drift": text_fns.text_jsd_source_drift,
-    "events_ohlc_candles": relational.events_ohlc_candles,
-    "stream_ohlc_candles": stream_ops.stream_ohlc_candles,
-    "scalar_variant_funcs": scalars.scalar_variant_funcs,
-}
 
 #: Shared SQL fragments for the oracle twins below.
 _SHINGLES_CTE = r"""
@@ -569,19 +236,8 @@ _R16_WINDOW: list[str] = [
     "q17_small_quantity_revenue",
 ]
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2.
 
-    Ordering contract: the driver certifies a 50-entry PREFIX, so the
-    current round's window (_R16_WINDOW) is moved to the front; the rest
-    keep their registry order.
-    """
-    window = [n for n in _R16_WINDOW if n in _QUERIES]
-    rest = [n for n in _QUERIES if n not in set(window)]
-    return {name: _wrap(_QUERIES[name]) for name in window + rest}
-
-
-#: PARAMETER COUPLING (r04 advice): each oracle string inlines the literal
+#: PARAMETER COUPLING: each oracle string inlines the literal
 #: value of its operator's DEFAULT keyword arguments (e.g. basket_part_pairs
 #: min_support=2, supplier_otif sla_days=60, er_sorted_neighborhood window
 #: gap 1..3, similarity_recall_at_k k=10).  The driver always calls the
@@ -1958,7 +1614,7 @@ _ORACLES.update({
     """,
 })
 
-# Training-data export / corpus-hygiene operators (round 3).
+# Training-data export / corpus-hygiene operators.
 _ORACLES.update({
     # Concat-and-chunk sequence packing: the oracle's single global window
     # IS the semantic spec; the engine computes the same exclusive prefix
@@ -3445,7 +3101,6 @@ _ORACLES.update({
     """,
 })
 
-# ---- round-5 additions (block D2) ----
 _ORACLES.update({
     # identical CMS construction: md5-derived row hashes -> width-64 cells,
     # estimate = min over 4 rows (depth=4, width=64 are the operator
@@ -3859,7 +3514,6 @@ _ORACLES.update({
     """,
 })
 
-# ---- round-6 additions (block E) ----
 _ORACLES.update({
     # gram -> min-doc_id first occurrence; novelty credited to that doc only
     "text_ngram_novelty": f"""
@@ -5479,18 +5133,6 @@ _ORACLES["stream_full_outer_interval_join"] = """
     FROM filt GROUP BY 1
 """
 
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI twins for each ``queries()`` entry.
-
-    Ordered identically to queries() (window prefix first) so a harness
-    that takes its 50-entry prefix from EITHER dict certifies the same
-    set."""
-    window = [n for n in _R16_WINDOW if n in _ORACLES]
-    rest = [n for n in _ORACLES if n not in set(window)]
-    return {name: _ORACLES[name] for name in window + rest}
-
-# ---- round-7 oracle twins ----
 
 _ORACLES["eval_ndcg_at_k"] = """
     WITH ev AS (
@@ -7442,9 +7084,6 @@ _ORACLES["sample_ipf_raking"] = """
     FROM w6
 """
 
-# ---------------------------------------------------------------------------
-# Round 8 additions (X219-X223): inequality / retention / skyline / backlog
-# ---------------------------------------------------------------------------
 
 _ORACLES["customers_gini_concentration"] = """
     WITH rev AS (SELECT o_custkey,
@@ -7563,10 +7202,6 @@ _ORACLES["orders_backlog_burndown"] = """
     FROM months
 """
 
-
-# ---------------------------------------------------------------------------
-# Round 8 additions (X224-X228): robust / classical statistics
-# ---------------------------------------------------------------------------
 
 _ORACLES["events_winsorized_order_stats"] = """
     WITH ev AS (SELECT event_type, event_id,
@@ -7721,11 +7356,6 @@ _ORACLES["lineitem_price_elasticity"] = """
     FROM agg
 """
 
-
-# ---------------------------------------------------------------------------
-# Round 8 additions (X229-X232): timeseries repair / decomposition /
-# sequential-recursion certifications 5 and 6
-# ---------------------------------------------------------------------------
 
 _ORACLES["events_gap_fill_interpolate"] = """
     WITH hourly AS (SELECT event_type,
@@ -7922,11 +7552,6 @@ _ORACLES["events_page_hinkley_drift"] = """
 """
 
 
-# ---------------------------------------------------------------------------
-# Round 8 additions (X233-X238): corpus diversity / estimator certification /
-# basket association / KMV set ops / tariff-band overlap
-# ---------------------------------------------------------------------------
-
 _ORACLES["text_simpson_diversity"] = r"""
     WITH tok AS (SELECT source,
                         UNNEST(string_split_regex(lower(trim(text)), '\s+'))
@@ -8115,11 +7740,6 @@ _ORACLES["join_interval_overlap_weighted"] = """
 """
 
 
-
-# ---------------------------------------------------------------------------
-# Round 9 additions (r10 certification queue; see the ordering contract)
-# ---------------------------------------------------------------------------
-
 _ORACLES["events_anova_f"] = """
     WITH ev AS (SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
                 FROM events),
@@ -8153,7 +7773,6 @@ _ORACLES["events_anova_f"] = """
            df_between, df_within, f_stat
     FROM g, frow
 """
-_QUERIES["events_anova_f"] = relational.events_anova_f
 
 _ORACLES["events_welch_ttest"] = """
     WITH ev AS (SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
@@ -8185,7 +7804,6 @@ _ORACLES["events_welch_ttest"] = """
                     + seb * seb / (CAST(n_b AS DOUBLE) - 1.0)), 6) AS welch_df
     FROM j
 """
-_QUERIES["events_welch_ttest"] = relational.events_welch_ttest
 
 _ORACLES["orders_nelson_aalen"] = """
     WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d FROM orders),
@@ -8219,7 +7837,6 @@ _ORACLES["orders_nelson_aalen"] = """
                       AS DOUBLE), 6) AS cum_hazard
     FROM rk
 """
-_QUERIES["orders_nelson_aalen"] = relational.orders_nelson_aalen
 
 _ORACLES["events_stl_decompose"] = """
     WITH hourly AS (SELECT date_trunc('hour', ts) AS h,
@@ -8255,7 +7872,6 @@ _ORACLES["events_stl_decompose"] = """
                AS mean_abs_resid
     FROM resid
 """
-_QUERIES["events_stl_decompose"] = relational.events_stl_decompose
 
 _ORACLES["events_sax_motifs"] = """
     WITH hourly AS (SELECT date_trunc('hour', ts) AS h,
@@ -8286,7 +7902,6 @@ _ORACLES["events_sax_motifs"] = """
     FROM grams WHERE length(motif) = 3
     GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 10
 """
-_QUERIES["events_sax_motifs"] = relational.events_sax_motifs
 
 _ORACLES["profile_partition_skew"] = """
     WITH fams AS (
@@ -8320,7 +7935,6 @@ _ORACLES["profile_partition_skew"] = """
                AS gini
     FROM tot JOIN t10 USING (family)
 """
-_QUERIES["profile_partition_skew"] = relational.profile_partition_skew
 
 _ORACLES["join_semi_bloom_pruned"] = """
     SELECT o_orderpriority,
@@ -8333,7 +7947,6 @@ _ORACLES["join_semi_bloom_pruned"] = """
                     AND l_shipdate >= TIMESTAMP '1995-09-01')
     GROUP BY 1
 """
-_QUERIES["join_semi_bloom_pruned"] = relational.join_semi_bloom_pruned
 
 _ORACLES["text_term_burstiness"] = r"""
     WITH td AS (
@@ -8357,7 +7970,6 @@ _ORACLES["text_term_burstiness"] = r"""
     FROM terms
     ORDER BY burstiness DESC, term LIMIT 20
 """
-_QUERIES["text_term_burstiness"] = text_fns.text_term_burstiness
 
 _ORACLES["text_code_detect"] = r"""
     WITH docs AS (SELECT source, text,
@@ -8390,7 +8002,6 @@ _ORACLES["text_code_detect"] = r"""
                  / CAST(COUNT(*) AS DOUBLE), 6) AS mean_symbol_ratio
     FROM scored GROUP BY 1
 """
-_QUERIES["text_code_detect"] = text_fns.text_code_detect
 
 _ORACLES["sample_soft_dedup_weights"] = """
     WITH docs AS (SELECT source, md5(text) AS h FROM documents),
@@ -8407,7 +8018,6 @@ _ORACLES["sample_soft_dedup_weights"] = """
                AS dup_rate
     FROM weighted GROUP BY 1
 """
-_QUERIES["sample_soft_dedup_weights"] = dedup.sample_soft_dedup_weights
 
 # oracle is the DIRECT theta join the date binning replaces (lossless)
 _ORACLES["orders_duplicate_invoices"] = """
@@ -8426,7 +8036,6 @@ _ORACLES["orders_duplicate_invoices"] = """
            CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_customers
     FROM pairs GROUP BY 1
 """
-_QUERIES["orders_duplicate_invoices"] = relational.orders_duplicate_invoices
 
 _ORACLES["similarity_power_iteration"] = """
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
@@ -8464,7 +8073,6 @@ _ORACLES["similarity_power_iteration"] = """
            ROUND(CAST(m AS DOUBLE), 6) AS growth
     FROM v2, m2
 """
-_QUERIES["similarity_power_iteration"] = similarity.similarity_power_iteration
 
 _ORACLES["join_asof_forward"] = """
     WITH ev AS (SELECT user_id, ts, event_id, event_type FROM events
@@ -8492,7 +8100,6 @@ _ORACLES["join_asof_forward"] = """
                          THEN gap_us ELSE 0 END) AS BIGINT) AS max_gap_us
     FROM p GROUP BY 1
 """
-_QUERIES["join_asof_forward"] = asof.join_asof_forward
 
 _ORACLES["sample_balanced_classes"] = """
     WITH emb AS (SELECT vec_id, label FROM embeddings),
@@ -8512,7 +8119,6 @@ _ORACLES["sample_balanced_classes"] = """
                AS kept_id_sum
     FROM ranked, nm GROUP BY 1
 """
-_QUERIES["sample_balanced_classes"] = relational.sample_balanced_classes
 
 _ORACLES["profile_functional_dependency"] = """
     WITH c1 AS (SELECT o_orderkey AS det, o_orderstatus AS dep FROM orders),
@@ -8544,12 +8150,7 @@ _ORACLES["profile_functional_dependency"] = """
            CAST(MAX(nd) AS BIGINT) AS max_distinct_dep
     FROM u GROUP BY 1
 """
-_QUERIES["profile_functional_dependency"] = relational.profile_functional_dependency
 
-
-# ---------------------------------------------------------------------------
-# Round 10 — addition registrations (<= 5 per VERDICT r9 item 4)
-# ---------------------------------------------------------------------------
 
 _ORACLES["events_circular_hour_stats"] = """
     WITH angles(h, c, s) AS (VALUES
@@ -8605,7 +8206,6 @@ _ORACLES["events_circular_hour_stats"] = """
                  / CAST(n_events AS DOUBLE), 6) AS resultant_r
     FROM agg
 """
-_QUERIES["events_circular_hour_stats"] = relational.events_circular_hour_stats
 
 _ORACLES["orders_lorenz_asymmetry"] = """
     WITH rev AS (SELECT o_custkey,
@@ -8641,7 +8241,6 @@ _ORACLES["orders_lorenz_asymmetry"] = """
                AS lorenz_s
     FROM agg
 """
-_QUERIES["orders_lorenz_asymmetry"] = relational.orders_lorenz_asymmetry
 
 _ORACLES["events_turning_points"] = """
     WITH hourly AS (SELECT event_type,
@@ -8669,7 +8268,6 @@ _ORACLES["events_turning_points"] = """
                AS z_score
     FROM agg
 """
-_QUERIES["events_turning_points"] = relational.events_turning_points
 
 _ORACLES["text_length_spectrum"] = r"""
     WITH docs AS (SELECT source,
@@ -8689,7 +8287,6 @@ _ORACLES["text_length_spectrum"] = r"""
                AS doc_share
     FROM spec
 """
-_QUERIES["text_length_spectrum"] = text_fns.text_length_spectrum
 
 _ORACLES["orders_interarrival_burstiness"] = """
     WITH o AS (SELECT o_custkey,
@@ -8727,4 +8324,40 @@ _ORACLES["orders_interarrival_burstiness"] = """
     FROM scored s JOIN customer c ON s.o_custkey = c.c_custkey
     GROUP BY 1
 """
-_QUERIES["orders_interarrival_burstiness"] = relational.orders_interarrival_burstiness
+
+
+def _resolve(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The single ``_FAMILIES`` function named ``name`` defined in its module."""
+    hits = [
+        getattr(mod, name)
+        for mod in _FAMILIES
+        if getattr(getattr(mod, name, None), "__module__", None) == mod.__name__
+    ]
+    if len(hits) != 1:
+        raise ImportError(f"oracle {name!r} names {len(hits)} query functions, expected 1")
+    return hits[0]
+
+
+_FUNCS = {name: _resolve(name) for name in _ORACLES}
+
+#: Registry order: the window first, then ``_ORACLES`` order.
+_ORDER = _R16_WINDOW + [n for n in _ORACLES if n not in _R16_WINDOW]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """One entry per ``_ORACLES`` key, in the same order as ``oracle_sql()``.
+
+    Ordering contract: the driver certifies a 50-entry PREFIX, so the
+    current window (_R16_WINDOW) is moved to the front; the rest keep their
+    ``_ORACLES`` order.
+    """
+    return {name: _wrap(_FUNCS[name]) for name in _ORDER}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB-runnable ANSI twins for each ``queries()`` entry.
+
+    Ordered identically to queries() (window prefix first) so a harness
+    that takes its 50-entry prefix from EITHER dict certifies the same
+    set."""
+    return {name: _ORACLES[name] for name in _ORDER}

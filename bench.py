@@ -2,37 +2,26 @@
 """Benchmark harness: run every queries() entry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-The FINAL stdout line is one JSON record {"metric", "value", "unit",
-"sf", "n_queries", ..., "queries": {name: sec}}.  r16 (VERDICT r15 item
-5, measurement-contract fix): the per-query timing map, two_draw_total
-and detail_path are folded INTO the line (compact separators, ~11 KB)
-— the driver's round-over-round per-query comparison reads only this
-line, and without "queries" it was empty every round (PERF_r15.json
-n_common: 0).  The full multi-pass detail is still written to
-BENCH_DETAIL.json next to this script.
+The FINAL stdout line is one compact JSON record {"metric", "value",
+"unit", "sf", "n_queries", "median_query_sec", "two_draw_total",
+"detail_path", "queries": {name: sec}}; the multi-pass detail is written
+to BENCH_DETAIL.json next to this script.
 
-Execution is forced through the noop sink (df.write.format("noop")) so the
-timing covers scan -> compute -> (would-be) write without driver-side
-collect costs, matching how the engine runs in production.  A warmup query
-is run first so JVM/codegen startup does not pollute the first measurement.
-
-Noise control: this sandbox carries ambient CPU load (loadavg 3-4 idle),
-and single-shot per-query timings were observed to swing far beyond +-20%
-between runs of BYTE-IDENTICAL code.  Each query therefore runs in TWO full
-passes and reports the per-query MINIMUM — the floor is the code's actual
-cost; the excursions are the machine's.  BENCH_DETAIL.json records both
-passes and the methodology.
-
-PINNED METHODOLOGY (r9, verdict item 8): before every timed query the
-harness unpersists all lingering RDDs (localCheckpoint blocks included)
-and cached tables.  Without this, blocks left by earlier queries crowd
-the storage pool across the 340-query session and inflate later queries
-2-3x non-deterministically — this was the entire "unexplained regression"
-set of round 8 (text_dictionary_tagging 2.32 s in-session vs 0.86 s
-clean, basket_part_pairs 3.65 vs 1.62, multimodal_decode_features 3.38
-vs 0.55).  Round-over-round totals are comparable from r9 on: 2 passes,
-per-query min, noop sink, pools warmed per pass, persisted state cleared
-per query.
+Method:
+- each query is forced through the noop sink (df.write.format("noop")),
+  so timing covers scan -> compute -> (would-be) write without a collect;
+- a warmup query runs first, and the Python worker pools are warmed at
+  the start of each pass;
+- every persisted RDD and cached table is cleared before each timed query,
+  so blocks left by earlier queries cannot slow later ones;
+- two full passes, and the per-query floor is the minimum over passes:
+  single-shot timings swing by more than 20% under ambient load, while
+  the floor is reproducible;
+- a query whose two passes differ by more than 1.5x gets a third,
+  tiebreak pass;
+- comparisons between runs use two_draw_total (each query's min over its
+  first two passes): an extra draw biases a query's min downward, so the
+  compared statistic gives every query the same draw count.
 """
 
 from __future__ import annotations
@@ -87,8 +76,8 @@ def _warm_python_pools(spark) -> None:
 
 
 def _clear_persisted(spark) -> None:
-    """Drop every lingering persisted RDD and cached table (see PINNED
-    METHODOLOGY above).  Safe between queries: each query rebuilds its
+    """Drop every lingering persisted RDD and cached table (see the module
+    docstring).  Safe between queries: each query rebuilds its
     whole DAG from parquet, so nothing legitimate is lost."""
     for _rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
         rdd.unpersist()
@@ -128,12 +117,9 @@ def main() -> None:
             queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             pass_times[name] = round(time.monotonic() - start, 3)
         passes.append(pass_times)
-    # r12 amendment (VERDICT r11 item 5): queries whose two passes
-    # disagree by > 1.5x got BOTH timings inside an ambient-load window
-    # often enough that even the min was inflated (the same ~10 queries
-    # swung 2-4x between byte-identical runs).  Give exactly those a
-    # third, tiebreak pass; the recorded floor is still min-of-passes,
-    # so this can only remove noise, never hide a real regression.
+    # Queries whose two passes disagree by > 1.5x can have both timings
+    # inflated by ambient load.  Give exactly those a third, tiebreak
+    # pass; the floor is still min-of-passes.
     noisy = sorted(
         n
         for n in passes[0]
@@ -167,13 +153,9 @@ def main() -> None:
         "sf": _sf_label(SF_DIR),
         "n_queries": len(timings),
         "median_query_sec": median,
-        # r16 additions (VERDICT r15 item 5) — everything below is
-        # ADDITIVE; no key above was removed or renamed:
-        # like-for-like round-over-round statistic (uniform draw count)
+        # like-for-like statistic for comparisons (uniform draw count)
         "two_draw_total": two_draw_total,
         "detail_path": detail_path,
-        # per-query floors so the driver's per_query/scaling comparisons
-        # are no longer empty
         "queries": timings,
     }
     with open(detail_path, "w") as fh:
@@ -181,28 +163,13 @@ def main() -> None:
             {
                 **summary,
                 "methodology": (
-                    "PINNED r9: min of 2 full passes per query (noop "
-                    "sink), python worker pools warmed per pass, ALL "
-                    "persisted RDDs/cached tables cleared before every "
-                    "timed query (lingering localCheckpoint blocks "
-                    "inflated later queries 2-3x in r7/r8 sessions); "
-                    "ambient sandbox load makes single-shot timings "
-                    "swing >20%, the per-query floor is reproducible. "
-                    "r12 amendment: queries whose two passes disagree "
-                    ">1.5x get a third tiebreak pass (min over all "
-                    "passes). r13 note (ADVICE r12): extra draws "
-                    "statistically bias selected queries' min DOWNWARD "
-                    "relative to 2-draw queries, so the tiebreak is not "
-                    "noise-neutral; per-query draw counts are recorded "
-                    "(pass_counts) so round-over-round comparisons can "
-                    "be made like-for-like. r14 comparison rule (VERDICT "
-                    "r13 item 7): round-over-round comparisons use "
-                    "two_draw_total — every query's min over its FIRST "
-                    "TWO passes only — so the compared statistic has an "
-                    "identical draw count every round regardless of "
-                    "which queries happened to trip the tiebreak; the "
-                    "headline value stays min-of-all-passes (pinned r9 "
-                    "floor semantics, reproducibility unchanged)"
+                    "min of 2 full passes per query (noop sink); python "
+                    "worker pools warmed per pass; all persisted RDDs and "
+                    "cached tables cleared before every timed query; "
+                    "queries whose two passes differ by >1.5x get a third "
+                    "tiebreak pass (pass_counts records draws per query); "
+                    "compare runs with two_draw_total, the sum of each "
+                    "query's min over its first two passes"
                 ),
                 "tiebreak_queries": noisy,
                 "pass_counts": {
@@ -223,7 +190,7 @@ def main() -> None:
         )
     spark.stop()
     # One line, printed LAST, compact separators (~11 KB with the
-    # per-query map — r16 contract fix, see module docstring).
+    # per-query map).
     print(json.dumps(summary, separators=(",", ":")))
 
 

@@ -37,7 +37,3 @@ def infer_dim(df, col_name: str) -> int:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

@@ -440,7 +440,7 @@ def stream_stream_interval_join(
     )
 
 
-def stream_stream_left_outer_interval_join(
+def stream_left_outer_interval_join(
     spark: SparkSession,
     sf_dir: str,
     glob: str = "events.parquet",

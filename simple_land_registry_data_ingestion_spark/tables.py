@@ -172,9 +172,3 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     if est_splits >= target:
         return df
     return df.repartition(target)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -17,15 +17,17 @@ def con():
     con.close()
 
 
-def _query_names():
+def test_registry_is_one_ordered_map():
+    """queries() and oracle_sql() share one key order, led by the 50-entry
+    certification window, and every key names the function it runs."""
     q = entry_mod.queries()
-    o = entry_mod.oracle_sql()
-    # every oracle key must have a query
-    assert set(o) <= set(q), f"orphan oracles: {set(o) - set(q)}"
-    return sorted(o)
+    assert list(q) == list(entry_mod.oracle_sql())
+    assert list(q)[:50] == entry_mod._R16_WINDOW
+    for name, fn in q.items():
+        assert fn.__name__ == name
 
 
-@pytest.mark.parametrize("name", _query_names())
+@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql()))
 def test_query_matches_oracle(spark, con, name):
     df = entry_mod.queries()[name](spark, SF_ORACLE)
     compare_query(df, con, entry_mod.oracle_sql()[name])
@@ -48,12 +50,3 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert len(df.columns) >= 2
-
-
-def test_all_queries_have_oracle_or_are_flagged(spark):
-    """Queries without an oracle still must run and return a stable schema."""
-    q = entry_mod.queries()
-    o = entry_mod.oracle_sql()
-    for name in set(q) - set(o):
-        df = q[name](spark, SF_ORACLE)
-        assert df.columns, f"{name} returned no columns"

@@ -105,7 +105,7 @@ def test_left_outer_join_emits_nulls_only_after_watermark(spark, tmp_path):
     _write_events_file(str(d_both / "1.parquet"), late)
 
     def run(path):
-        out = ops.stream_stream_left_outer_interval_join(
+        out = ops.stream_left_outer_interval_join(
             spark, path, glob="*.parquet", max_files_per_trigger=1
         )
         return {

@@ -98,59 +98,3 @@ def test_decontaminate_detects_planted_copy(spark):
     flagged = {r["doc_id"]: r for r in decontaminate(train, eval_docs).collect()}
     assert 10_000_000 in flagged
     assert flagged[10_000_000]["containment"] == 1.0
-
-
-def test_full_training_export_pipeline(spark, tmp_path):
-    """The composed curation flow end-to-end: every manifest doc passed the
-    quality filter, is its cluster's canonical survivor, respects the
-    per-language token budget, and carries consistent packing offsets;
-    the export is range-sorted on token_offset."""
-    from simple_land_registry_data_ingestion_spark import pipeline_training
-    from simple_land_registry_data_ingestion_spark.operators.dedup import (
-        dedup_cluster_assignments,
-    )
-
-    out = str(tmp_path / "export")
-    budget = 1500
-    summary = pipeline_training.run_training_export(
-        spark, SF_ORACLE, out, tokens_per_lang=budget
-    ).collect()
-    assert len(summary) == 5  # all five languages represented
-    for r in summary:
-        assert r["n_docs"] > 0 and r["n_tokens"] >= budget  # budget reached
-
-    manifest = spark.read.parquet(out)
-    ids = {r["doc_id"] for r in manifest.select("doc_id").collect()}
-    assert len(ids) == manifest.count()  # one row per doc
-
-    # every exported doc passed the filter and is canonical
-    verdicts = {
-        r["doc_id"]: r["keep"]
-        for r in text_gopher_filter(spark, SF_ORACLE).collect()
-    }
-    canon = {
-        r["doc_id"]
-        for r in dedup_cluster_assignments(spark, SF_ORACLE)
-        .where(F.col("is_canonical"))
-        .collect()
-    }
-    assert all(verdicts[i] for i in ids)
-    assert ids <= canon
-
-    # offsets are the exact prefix-sum over the SELECTED docs in doc_id order
-    rows = sorted(manifest.collect(), key=lambda r: r["doc_id"])
-    run = 0
-    for r in rows:
-        assert r["token_offset"] == run
-        run += r["n_tokens"]
-
-    # files are range-partitioned on token_offset (disjoint spans)
-    spans = sorted(
-        (r["lo"], r["hi"])
-        for r in manifest.withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(F.min("token_offset").alias("lo"), F.max("token_offset").alias("hi"))
-        .collect()
-    )
-    for (_, hi_a), (lo_b, _) in zip(spans, spans[1:]):
-        assert hi_a <= lo_b
