@@ -159,7 +159,7 @@ def shingle_table_nowindow(docs: DataFrame, n: int = 3, distinct: bool = True) -
 NUM_HASHES = 6
 BAND_ROWS = 2  # 3 bands of 2 rows
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """MinHash signature per doc: the i-th hash function is
     md5('<i>:' || shingle); the signature component is the lexicographic min
     over the doc's shingles.  md5 gives a uniform order, and seeding by
@@ -186,17 +186,17 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     sh = shingle_table(docs, n=3, distinct=False)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_band_buckets(sig: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
+def minhash_band_buckets(sig: DataFrame) -> DataFrame:
     """(doc_id, band_key): one row per band, key = band index + its rows."""
     num_hashes = len([c for c in sig.columns if c.startswith("h")])
     bands = []
-    for b in range(num_hashes // band_rows):
-        cols = [F.col(f"h{b * band_rows + r}") for r in range(band_rows)]
+    for b in range(num_hashes // BAND_ROWS):
+        cols = [F.col(f"h{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
         bands.append(F.concat(F.lit(f"{b}:"), *cols))
     return sig.select("doc_id", F.explode(F.array(*bands)).alias("band_key"))
 
@@ -549,15 +549,13 @@ def connected_components(
     ``df.checkpoint()`` when ``checkpoint_dir`` names a fault-tolerant
     directory (see _truncate_lineage — the 100 TB setting).  Passes needed
     = max component diameter; near-dup clusters are shallow (most
-    duplicates share one hub), so small constants in practice.  For deep
-    graphs use connected_components_star below (small-star/large-star,
-    Kiveris et al.), which path-compresses to O(log n) passes.
+    duplicates share one hub), so small constants in practice.
 
     If the loop exhausts ``max_iterations`` before the fixpoint (a chain
     longer than the iteration budget), the labels are PARTIAL — some
     components would still split — so this raises rather than silently
     returning wrong cluster ids; callers with genuinely deep graphs pass a
-    bigger budget (or switch to the small-star variant above)."""
+    bigger budget."""
     und = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
@@ -591,127 +589,6 @@ def connected_components(
             f"clusters still split); raise max_iterations"
         )
     return labels
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same ``(id, component)`` contract as connected_components.
-
-    Label propagation needs DIAMETER passes; the star operations
-    path-compress, so rounds needed are O(log n) regardless of diameter —
-    on a 10^6-node chain that is ~20 rounds instead of 10^6.  Near-dup
-    graphs are usually shallow (hub-shaped), which is why label propagation
-    is the registered default; this variant is the switch to flip when a
-    corpus produces chain-shaped duplicate structure (rolling boilerplate,
-    versioned documents) and the default loop hits its iteration budget.
-
-    Per round, over the symmetrized neighbor table (edge set kept as
-    canonical undirected pairs a < b):
-    - large-star: every node u computes m = min(N(u) + {u}) and re-points
-      each LARGER neighbor v > u at m (emit edge (m, v));
-    - small-star: u re-points each smaller-or-equal neighbor and itself at
-      m (emit (m, v) for v < u, plus (m, u)).
-    Both are one groupBy(min) + one join — the identical linear-shuffle
-    dataflow as the label-prop loop, so the 100 TB posture carries over
-    unchanged (lineage truncated per round via _truncate_lineage).
-    Convergence = the canonical edge set reaches a fixpoint (star-shaped:
-    every edge (root, v)), detected by an order-insensitive fingerprint
-    (count + sum of xxhash64) — one tiny action per round.  Isolated nodes
-    never enter the edge set and label themselves.
-    """
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("x"),
-            F.col(dst_col).cast("long").alias("y"),
-        )
-        .where(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-        )
-        .distinct()
-    )
-    e = _truncate_lineage(e, checkpoint_dir)
-
-    def _fingerprint(edf: DataFrame) -> tuple:
-        row = edf.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            # decimal accumulator: a long sum of 64-bit hashes overflows
-            # (ANSI mode throws); decimal(38,0) holds ~1e19 * 1e19 headroom
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("fp"),
-        ).first()
-        return (row["cnt"], row["fp"])
-
-    def _mins(sym: DataFrame) -> DataFrame:
-        # m(u) = min over the closed neighborhood N(u) + {u}
-        return (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-
-    prev_fp = _fingerprint(e)
-    converged = False
-    for _ in range(max_iterations):
-        # -- large-star: (u,v) with v > u  ->  (m(u), v) --
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(_mins(sym), "u")
-            # m <= u < v, so (m, v) is already canonical a < b
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .distinct()
-        )
-        e = _truncate_lineage(large, checkpoint_dir)
-        # -- small-star: (u,v) with v < u -> (m(u), v); plus (m(u), u) --
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = _mins(sym)
-        small = (
-            sym.where(F.col("v") < F.col("u"))
-            .join(mins, "u")
-            # m = min(N(u)+{u}) <= v for v in N(u), so (m, v) canonical;
-            # v == m would be a self-loop — drop it
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .union(
-                mins.select(F.col("m").alias("a"), F.col("u").alias("b"))
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        e = _truncate_lineage(small, checkpoint_dir)
-        fp = _fingerprint(e)
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not reach its edge-set fixpoint "
-            f"within {max_iterations} rounds — components would be partial; "
-            f"raise max_iterations"
-        )
-    # star-shaped fixpoint: every node's component is min(N(u) + {u});
-    # isolated nodes (no edges) are their own component
-    sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    return (
-        nodes.select(F.col(node_col).alias("id"))
-        .join(_mins(sym).withColumnRenamed("u", "id"), "id", "left")
-        .select("id", F.coalesce("m", "id").alias("component"))
-    )
 
 
 def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1657,14 +1534,16 @@ def dedup_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+PAGERANK_DAMPING = 0.85
+PAGERANK_ITERATIONS = 3
+
+
 def pagerank_centrality(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "doc_id",
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    damping: float = 0.85,
-    iterations: int = 3,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Distributed PageRank by unrolled power iteration over an undirected
@@ -1709,7 +1588,7 @@ def pagerank_centrality(
         .select("node", F.round(F.lit(1.0) / F.col("_n"), 8).alias("rank")),
         checkpoint_dir,
     )
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = (
             und.join(rank.withColumnRenamed("node", "src"), "src")
             .join(outdeg, "src")
@@ -1728,8 +1607,8 @@ def pagerank_centrality(
             .select(
                 "node",
                 F.round(
-                    (1.0 - damping) / F.col("_n")
-                    + damping * F.coalesce(F.col("inflow"), F.lit(0.0)),
+                    (1.0 - PAGERANK_DAMPING) / F.col("_n")
+                    + PAGERANK_DAMPING * F.coalesce(F.col("inflow"), F.lit(0.0)),
                     8,
                 ).alias("rank"),
             ),

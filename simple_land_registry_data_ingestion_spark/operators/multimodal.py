@@ -13,11 +13,10 @@ model here:
  - per-payload metadata (size, fingerprint, magic-derived format) is typed
    columns computed JVM-side — no Python in that path.
  - the decode step is where real pipelines call PIL/ffmpeg/librosa.  Those
-   libs are absent in this container, so ``decode_payload_batches`` is a
-   DETERMINISTIC FAKE (features derived from the bytes themselves) and
-   ``decode_image_real`` raises NotImplementedError behind an import-try —
-   the Spark-side plumbing (schema, Arrow batching, partition mapping) is
-   real and tested either way.
+   libs are not dependencies here, so ``decode_payload_batches`` is a
+   DETERMINISTIC FAKE (features derived from the bytes themselves); the
+   Spark-side plumbing (schema, Arrow batching, partition mapping) is real
+   and tested.
 
 The testdata has no blob table, so payloads are derived deterministically
 from ``documents.text`` (utf-8 encode) — same corpus every engine sees.
@@ -167,20 +166,3 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents_with_payload(spark, sf_dir).select("doc_id", "payload")
     )
     return with_payload.mapInPandas(frame_sample_batches, _FRAMES_SCHEMA)
-
-
-def decode_image_real(payload: bytes):  # pragma: no cover - lib not installed
-    """The real-codec hook: decode an image payload to (width, height,
-    mode).  Gated import — environments with Pillow get real decoding, this
-    container raises."""
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decoding needs Pillow on the executors; this environment "
-            "ships without it (decode_payload_batches is the tested stub)"
-        ) from exc
-    img = Image.open(io.BytesIO(payload))
-    return img.width, img.height, img.mode

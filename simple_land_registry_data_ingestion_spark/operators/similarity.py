@@ -282,8 +282,7 @@ def _centroids(emb: DataFrame, k: int = NUM_CENTROIDS) -> DataFrame:
     """Deterministic one-pass IVF "training": the first ``k`` vectors by
     vec_id are the centroids (random-seed init without Lloyd iterations —
     assignment quality is data-dependent, determinism is what the oracle
-    needs; production swaps in k-means|| centroids, the index layout and
-    probe plan are IDENTICAL)."""
+    needs).  kmeans_refine_centroids runs Lloyd iterations from this init."""
     return emb.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("c_vec"),
@@ -342,8 +341,7 @@ def kmeans_refine_centroids(
          linear in data, never quadratic.
     Centroids are localCheckpoint'd per iteration (lineage would otherwise
     double per pass).  At 100 TB this IS k-means — Spark MLlib's own
-    KMeans runs the same assign/recenter dataflow; k-means|| only improves
-    the INIT, and plugs in by replacing _centroids.
+    KMeans runs the same assign/recenter dataflow.
 
     Determinism across engines: the per-dim means are QUANTIZED to 6
     decimals inside the loop, and the argmax compares cosines rounded to 6
@@ -395,179 +393,6 @@ def kmeans_refine_centroids(
         )
         dim_means = by_dim.groupBy("centroid_id", "pos").agg(
             F.round(F.avg(F.col("v").cast("double")), 6).alias("m")
-        )
-        cent = (
-            dim_means.groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x["m"],
-                ).alias("c_vec")
-            )
-            .select("centroid_id", "c_vec", norm(F.col("c_vec")).alias("c_norm"))
-            .localCheckpoint(eager=True)
-        )
-    return cent
-
-
-def kmeans_parallel_init(
-    emb: DataFrame,
-    k: int = NUM_CENTROIDS,
-    oversample: int | None = None,
-    rounds: int = 3,
-    refine_iterations: int = 2,
-) -> DataFrame:
-    """k-means|| oversampling init (Bahmani et al., "Scalable k-means++",
-    VLDB 2012), spherical/cosine flavor, fully distributed — the production
-    replacement for the first-K ``_centroids`` init (which stays as the
-    oracle query's init for cross-engine determinism).
-
-      1. seed the candidate set with the min-vec_id vector;
-      2. ``rounds`` passes: each point joins the candidate set with
-         probability min(1, l * d(x) / phi), where d(x) = 1 - best cosine
-         to the current candidates and phi = sum of d(x).  The Bernoulli
-         draw is a deterministic md5 hash of (vec_id, round) mapped to
-         [0, 1) — reproducible, no RNG state;
-      3. weight each candidate by how many points it attracts, then
-         re-cluster the (tiny, ~l*rounds-row) weighted candidate set down
-         to k with weighted Lloyd passes, initialized from the top-k
-         candidates by weight.
-
-    No vector ever reaches the driver: phi rides along as a broadcast
-    1-row aggregate, candidates stay a DataFrame (localCheckpoint'd per
-    round — the sampling recurrence would otherwise double lineage each
-    pass), and the weighted re-cluster reuses the posexplode/recenter
-    dataflow of kmeans_refine_centroids.  Each sampling pass is one
-    broadcast join + one aggregation over n rows — O(rounds * n) total,
-    the property that makes k-means|| the 100 TB init (k-means++ needs k
-    sequential full passes).
-
-    Returns ``(centroid_id, c_vec, c_norm)`` exactly like ``_centroids``,
-    so it plugs into ivf_cluster_stats / kmeans_refine_centroids
-    unchanged."""
-    l = float(oversample if oversample is not None else 2 * k)
-    pts = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    cand = (
-        pts.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("c_vec"),
-            F.col("nrm").alias("c_norm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for r in range(rounds):
-        dists = (
-            pts.crossJoin(F.broadcast(cand))
-            .groupBy("vec_id")
-            .agg(
-                F.max(
-                    dot(F.col("embedding"), F.col("c_vec"))
-                    / (F.col("nrm") * F.col("c_norm"))
-                ).alias("best_cos")
-            )
-            .select(
-                "vec_id",
-                F.greatest(F.lit(0.0), 1.0 - F.col("best_cos")).alias("dist"),
-            )
-        )
-        phi = dists.agg(F.sum("dist").alias("phi"))
-        # deterministic uniform draw in [0, 1): first 8 md5 hex nibbles
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f":{r}"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("double")
-            / F.lit(4294967296.0)
-        )
-        sampled = (
-            dists.crossJoin(F.broadcast(phi))
-            .where((F.col("phi") > 0) & (u < l * F.col("dist") / F.col("phi")))
-            .select("vec_id")
-            .join(pts, "vec_id")
-            .select(
-                F.col("vec_id").alias("cand_id"),
-                F.col("embedding").alias("c_vec"),
-                F.col("nrm").alias("c_norm"),
-            )
-        )
-        cand = (
-            cand.unionByName(sampled)
-            .dropDuplicates(["cand_id"])
-            .localCheckpoint(eager=True)
-        )
-
-    # weight candidates by attraction, init the re-cluster from the top-k
-    w_arg = Window.partitionBy("vec_id").orderBy(
-        F.col("a_cos").desc(), F.col("cand_id")
-    )
-    attracted = (
-        pts.crossJoin(F.broadcast(cand))
-        .select(
-            "vec_id",
-            "cand_id",
-            (
-                dot(F.col("embedding"), F.col("c_vec"))
-                / (F.col("nrm") * F.col("c_norm"))
-            ).alias("a_cos"),
-        )
-        .withColumn("rn", F.row_number().over(w_arg))
-        .where(F.col("rn") == 1)
-        .groupBy("cand_id")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    wcand = cand.join(attracted, "cand_id", "left").select(
-        "cand_id",
-        F.col("c_vec").alias("m_vec"),
-        F.col("c_norm").alias("m_norm"),
-        F.coalesce(F.col("w"), F.lit(0)).cast("double").alias("w"),
-    )
-    w_init = Window.orderBy(F.col("w").desc(), F.col("cand_id"))
-    cent = (
-        wcand.withColumn("centroid_id", F.row_number().over(w_init) - 1)
-        .where(F.col("centroid_id") < k)
-        .select(
-            "centroid_id",
-            F.col("m_vec").alias("c_vec"),
-            F.col("m_norm").alias("c_norm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # weighted Lloyd over the candidate set only (tiny both sides)
-    for _ in range(refine_iterations):
-        w_assign = Window.partitionBy("cand_id").orderBy(
-            F.col("m_cos").desc(), F.col("centroid_id")
-        )
-        assigned = (
-            wcand.crossJoin(F.broadcast(cent))
-            .select(
-                "cand_id",
-                "m_vec",
-                "w",
-                "centroid_id",
-                (
-                    dot(F.col("m_vec"), F.col("c_vec"))
-                    / (F.col("m_norm") * F.col("c_norm"))
-                ).alias("m_cos"),
-            )
-            .withColumn("rn", F.row_number().over(w_assign))
-            .where((F.col("rn") == 1) & (F.col("w") > 0))
-        )
-        by_dim = assigned.select(
-            "centroid_id", "w", F.posexplode("m_vec").alias("pos", "v")
-        )
-        dim_means = by_dim.groupBy("centroid_id", "pos").agg(
-            (
-                F.sum(F.col("w") * F.col("v").cast("double")) / F.sum("w")
-            ).alias("m")
         )
         cent = (
             dim_means.groupBy("centroid_id")
@@ -689,9 +514,8 @@ def pq_codebook(emb: DataFrame, sub_dim: int, m: int = PQ_M, k: int = PQ_K) -> D
 
     The draw is a TakeOrderedAndProject (distributed per-task heaps over
     the full corpus, k rows out) — no global sort, no collect.  Production
-    codebooks come from k-means per subspace (kmeans_parallel_init /
-    kmeans_refine_centroids are the building blocks in this module); the
-    hash-sample codebook keeps the operator exactly reproducible
+    codebooks come from k-means per subspace (kmeans_refine_centroids is
+    the building block in this module); the hash-sample codebook keeps the operator exactly reproducible
     cross-engine, which is what the oracle gate needs.  Output: one row per
     (s, code_id) with the codeword sub-vector — m*k tiny rows, always
     broadcast by consumers.
@@ -890,7 +714,7 @@ def similarity_ivfpq_adc(
 
     All three trained artifacts (centroids, assignments, codebook) are the
     deterministic variants proven by their standalone queries
-    (similarity_ann_ivf / similarity_pq_adc); production swaps k-means||
+    (similarity_ann_ivf / similarity_pq_adc); production swaps in k-means
     centroids and per-subspace k-means codebooks with the same plan shape.
     """
     emb = load(spark, sf_dir, "embeddings")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from simple_land_registry_data_ingestion_spark.tables import load
 
-DEFAULT_SALT_BUCKETS = 16
+SALT_BUCKETS = 16
 
 
 def _salt(n: int) -> Column:
@@ -36,17 +36,16 @@ def _salt(n: int) -> Column:
 def salted_two_stage_agg(
     df: DataFrame,
     key_cols: list[str],
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
     """count/sum per key via (key, salt) partials then a key-only merge.
 
     Stage 1 shuffles on (key, salt): a key with 10^9 rows becomes
-    ``salt_buckets`` reducer-sized states instead of one giant one.  Stage 2
+    ``SALT_BUCKETS`` reducer-sized states instead of one giant one.  Stage 2
     shuffles only the tiny partials.  For plain count/sum Spark's map-side
     partials usually suffice — this shape is the template for aggs whose
     per-key state is large (collect_set, exact distinct, percentile)."""
     partial = (
-        df.withColumn("__salt", _salt(salt_buckets))
+        df.withColumn("__salt", _salt(SALT_BUCKETS))
         .groupBy(*key_cols, "__salt")
         .agg(
             F.count(F.lit(1)).alias("__n"),
@@ -63,19 +62,18 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
     """Equi-join a skewed big side with a small (but not broadcastable)
     side: big rows get a random-ish salt, the small side is REPLICATED once
     per salt value, and the join key becomes (key, salt) — a hot key's rows
-    now land on ``salt_buckets`` different reducers.
+    now land on ``SALT_BUCKETS`` different reducers.
 
-    Cost model: small side inflates by ``salt_buckets``x, so this wins when
-    small * salt_buckets << big's hot-key volume.  (If small fits the
+    Cost model: small side inflates by ``SALT_BUCKETS``x, so this wins when
+    small * SALT_BUCKETS << big's hot-key volume.  (If small fits the
     broadcast threshold, just broadcast — no salt needed.)"""
-    salted_big = big.withColumn("__salt", _salt(salt_buckets))
+    salted_big = big.withColumn("__salt", _salt(SALT_BUCKETS))
     exploded_small = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
     ).withColumn("__salt", F.col("__salt").cast("int"))
     return salted_big.join(exploded_small, [on, "__salt"]).drop("__salt")
 

@@ -63,7 +63,6 @@ def materialized_frame(
     sf_dir: str,
     tag: str,
     builder: Callable[[], DataFrame],
-    n_files: int = 8,
 ) -> DataFrame:
     """Build ``builder()`` once per (tag, corpus) in this process and
     return a parquet scan of it (module docstring has the contract)."""
@@ -76,7 +75,7 @@ def materialized_frame(
         os.makedirs(root, exist_ok=True)
         tmp = tempfile.mkdtemp(prefix=f".{key}.", dir=root)
         try:
-            builder().coalesce(n_files).write.mode("overwrite").parquet(tmp)
+            builder().coalesce(8).write.mode("overwrite").parquet(tmp)
             os.rename(tmp, dest)
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)

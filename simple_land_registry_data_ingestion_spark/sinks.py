@@ -36,20 +36,27 @@ def write_parquet_atomic(
     ``partition_by`` is the at-rest partitioning (e.g. year of the
     transaction date): at 100 TB it turns date-range queries into partition
     pruning instead of full scans.
+
+    A failed write or publish removes the staging copy before re-raising,
+    and a failed publish puts the previous table back.
     """
     staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
+    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, backup)
     try:
-        os.rename(staging, path)
-    except Exception:
-        if os.path.exists(backup):  # roll back the unpublish
-            os.rename(backup, path)
+        writer.parquet(staging)
+        if os.path.exists(path):
+            os.rename(path, backup)
+        try:
+            os.rename(staging, path)
+        except BaseException:
+            if os.path.exists(backup):  # roll back the unpublish
+                os.rename(backup, path)
+            raise
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
         raise
     if os.path.exists(backup):
         shutil.rmtree(backup, ignore_errors=True)
@@ -65,30 +72,6 @@ def write_jdbc_append(df: DataFrame, table: str, jdbc_options: dict[str, str],
         .option("dbtable", table)
         .option("batchsize", str(batchsize))
         .mode("append")
-        .save()
-    )
-
-
-def write_jdbc_full_refresh(
-    df: DataFrame, table: str, jdbc_options: dict[str, str], batchsize: int = 10_000
-) -> None:
-    """Truncate-then-load (reference S6, main.py:196): JDBC overwrite with
-    ``truncate=true`` keeps the table's DDL/indexes and empties it before the
-    parallel per-partition inserts.
-
-    NOT single-transaction-atomic like the reference's COPY path — readers
-    can observe the empty table mid-load.  For strict E6 semantics load into
-    ``{table}__staging`` with this function and swap names in one DB
-    transaction (``ALTER TABLE ... RENAME``) — that swap needs a live DB
-    connection and is left to deployment scripts.
-    """
-    (
-        df.write.format("jdbc")
-        .options(**jdbc_options)
-        .option("dbtable", table)
-        .option("truncate", "true")
-        .option("batchsize", str(batchsize))
-        .mode("overwrite")
         .save()
     )
 
@@ -210,8 +193,7 @@ def write_jdbc_full_refresh_atomic(
 ) -> None:
     """Strict-E6 full refresh: load ``{table}__staging`` with parallel JDBC
     inserts, then swap names in one DB transaction (staging_swap_statements).
-    Readers never observe the mid-load state — unlike plain
-    write_jdbc_full_refresh, whose truncate is visible during the load."""
+    Readers never observe the mid-load state."""
     (
         df.write.format("jdbc")
         .options(**jdbc_options)

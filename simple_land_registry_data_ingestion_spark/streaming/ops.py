@@ -35,14 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-#: Raw parquet schema of the events table when the generator wrote ``ts``
-#: as INT64 TIMESTAMP(NANOS), which Spark cannot read natively — see
-#: tables.py.  Newer generators write TIMESTAMP(MICROS); that variant is
-#: read with _EVENTS_TS_SCHEMA directly (no conversion).
-_EVENTS_RAW_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, value double, props string"
+from simple_land_registry_data_ingestion_spark.tables import (
+    _EVENTS_RAW_SCHEMA,
+    _events_ts_from_nanos,
+    _events_ts_unit,
 )
 
+#: Stream schema of the events table when ``ts`` is TIMESTAMP(MICROS);
+#: a TIMESTAMP(NANOS) file is read with tables._EVENTS_RAW_SCHEMA instead.
 _EVENTS_TS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
@@ -52,8 +52,6 @@ def _sniff_ts_unit(sf_dir: str, glob: str) -> str | None:
     """Time unit ('ns'/'us'/'ms'/None) of events.ts under sf_dir/glob —
     a driver-side footer read of the first matching file."""
     import glob as globmod
-
-    from simple_land_registry_data_ingestion_spark.tables import _events_ts_unit
 
     matches = sorted(globmod.glob(os.path.join(sf_dir, glob)))
     return _events_ts_unit(matches[0]) if matches else None
@@ -86,7 +84,7 @@ def events_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.parquet(sf_dir)
     if nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return raw.withColumn("ts", _events_ts_from_nanos())
     return raw
 
 
@@ -673,8 +671,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Per-user top-K size for the stateful top-K operators (both the
-#: applyInPandasWithState implementation and the TWS upgrade path).
+#: Per-user top-K size for the stateful top-K operator.
 TOPK_K = 3
 
 
@@ -722,10 +719,7 @@ def stream_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     After draining the backlog the update-mode output equals the batch
     window ranking (ROW_NUMBER over value DESC, event_id), which is the
-    registered DuckDB oracle.  The Spark-4 upgrade path for this operator
-    is stream_tws_user_topk (transformWithStateInPandas with a typed
-    ListState); it is env-gated on protobuf, so THIS query is the
-    registered, driver-verified implementation of bounded streaming top-K.
+    registered DuckDB oracle.
     """
     stream = events_stream(spark, sf_dir).select("user_id", "value", "event_id")
     topk = stream.groupBy("user_id").applyInPandasWithState(
@@ -737,116 +731,6 @@ def stream_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_stream_to_table(topk, "update")
     return out.select(
-        "user_id", "rank", F.round("value", 2).alias("value"), "event_id"
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf in the Python env (its
-    driver worker speaks a protobuf protocol to validate state schemas);
-    absent/broken protobuf is an ENVIRONMENT limitation, not a code path
-    difference — gate, don't fail mid-query.
-
-    Probe log (re-checked each round): 2026-08-18 (round 15) — ``import
-    google.protobuf`` still raises ModuleNotFoundError in the sandbox
-    (PIL / ffmpeg module+binary / psycopg2 / psycopg re-probed absent
-    and localhost:5432 refused the same run; prior probes: rounds 7-14,
-    2026-08-14/15/16, all agreed); the registered bounded-state
-    fallback remains ``stream_user_topk``.  Register
-    ``stream_tws_user_topk`` the round this probe flips."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class _TopKValuesProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor: per-user running top-K events
-    by value.  ListState holds at most K (value, event_id) pairs — bounded
-    state however long the stream runs, the property applyInPandasWithState
-    users had to hand-roll inside one opaque state tuple.
-
-    The merge logic is pure (state iterable + batches -> new state + rows),
-    so tests exercise it directly against a fake handle when the TWS
-    runtime is unavailable (tests/test_streaming.py)."""
-
-    K = 3
-
-    def init(self, handle) -> None:
-        self._top = handle.getListState("top", "value double, event_id long")
-
-    def handleInputRows(self, key, rows, timer_values):
-        cur = [(float(v), int(e)) for v, e in self._top.get()]
-        for pdf in rows:
-            cur.extend(
-                zip(pdf["value"].astype(float), pdf["event_id"].astype(int))
-            )
-        cur.sort(key=lambda t: (-t[0], t[1]))
-        cur = cur[: self.K]
-        self._top.put(cur)
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])] * len(cur),
-                "rank": list(range(1, len(cur) + 1)),
-                "value": [t[0] for t in cur],
-                "event_id": [t[1] for t in cur],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user top-3 event values via transformWithStateInPandas — the
-    Spark 4 arbitrary-state API (typed composable state variables, timers,
-    RocksDB-only) that supersedes applyInPandasWithState for new operators.
-
-    State is a ListState capped at K entries per user, so state size is
-    O(users * K) regardless of stream length; the output after draining the
-    backlog equals the batch window top-3 (the oracle).  RocksDB state
-    store is REQUIRED by the API — conf is set for the query and restored
-    (the 100 TB configuration runs RocksDB everywhere anyway; see
-    tests/test_streaming.py::test_session_window_runs_on_rocksdb_state_store).
-
-    Raises NotImplementedError when the env lacks protobuf (TWS driver
-    worker dependency); the processor's merge semantics remain covered by
-    the fake-handle test either way, and the SAME operator is registered
-    and driver-verified via the applyInPandasWithState implementation
-    (stream_user_topk above) — TWS is the upgrade path, not the only proof.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, "
-            "unavailable in this environment"
-        )
-    proc = _TopKValuesProcessor()
-    stream = events_stream(spark, sf_dir).select("user_id", "value", "event_id")
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType="user_id long, rank long, value double, event_id long",
-        outputMode="Update",
-        timeMode="None",
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        res = run_stream_to_table(out, "update")
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
-    return res.select(
         "user_id", "rank", F.round("value", 2).alias("value"), "event_id"
     )
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -36,6 +36,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
 )
+
+
+def _events_ts_from_nanos() -> Column:
+    """The raw INT64-nanos ``ts`` as a TIMESTAMP (truncated to micros)."""
+    return F.timestamp_micros(F.expr("ts div 1000"))
 
 
 def _events_ts_unit(path: str) -> str | None:
@@ -128,9 +133,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         if _events_ts_unit(path) == "ns":
             raw = spark.read.schema(_EVENTS_RAW_SCHEMA).parquet(path)
-            return raw.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-            )
+            return raw.withColumn("ts", _events_ts_from_nanos().cast("timestamp_ntz"))
         schema = _footer_schema(path)
         reader = spark.read.schema(schema) if schema is not None else spark.read
         df = reader.parquet(path)
@@ -140,7 +143,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return reader.parquet(path)
 
 
-def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition to full parallelism for CPU-BOUND operators —
     only when the input is under-partitioned.
 
@@ -158,7 +161,7 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     The previous ``df.rdd.getNumPartitions()`` probe forced a full physical
     planning pass per call, doubling plan work for every query using it."""
     spark = df.sparkSession
-    target = partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         # py4j auto-converts the scala BigInt to int; str() also covers the
         # JavaObject form on builds where it does not.

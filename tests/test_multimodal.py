@@ -1,9 +1,7 @@
-"""Multimodal plumbing tests: binary column typing, Arrow batch shape
-through mapInPandas, and the gated real-codec stub."""
+"""Multimodal plumbing tests: binary column typing and Arrow batch shape
+through mapInPandas."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
@@ -51,8 +49,3 @@ def test_frame_sample_schema_and_stride(spark):
     expected = (meta["n_bytes"] + multimodal.FRAME_STRIDE - 1) // multimodal.FRAME_STRIDE
     assert row["n_frames"] == expected == len(frames)
     assert all(0 <= b <= 255 for b in frames)
-
-
-def test_real_codec_is_gated_not_silently_fake():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_real(b"\x89PNG\r\n\x1a\n")

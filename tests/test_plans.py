@@ -298,42 +298,6 @@ def test_kmeans_refinement_improves_compactness(spark):
     assert refined >= init
 
 
-def test_kmeans_parallel_init_beats_first_k(spark):
-    """k-means|| oversampling must produce a better (or equal) starting
-    clustering than the naive first-K-vectors init, and it must do so
-    without ever pulling a vector to the driver (no collect/take/toPandas
-    during construction — localCheckpoint materializes executor-side
-    only)."""
-    from unittest import mock
-
-    from pyspark.sql import DataFrame
-    from simple_land_registry_data_ingestion_spark.tables import load
-
-    emb = load(spark, SF_ORACLE, "embeddings")
-
-    def forbidden(self, *a, **kw):  # pragma: no cover - fails the test
-        raise AssertionError("driver-side materialization inside k-means||")
-
-    with mock.patch.object(DataFrame, "collect", forbidden), \
-            mock.patch.object(DataFrame, "take", forbidden), \
-            mock.patch.object(DataFrame, "toPandas", forbidden):
-        par = similarity.kmeans_parallel_init(emb)
-
-    def weighted_mean(stats):
-        rows = stats.collect()
-        total = sum(r["n_members"] for r in rows)
-        return sum(r["mean_cosine"] * r["n_members"] for r in rows) / total
-
-    first_k = weighted_mean(
-        similarity.ivf_cluster_stats(
-            emb, similarity.kmeans_refine_centroids(emb, iterations=0)
-        )
-    )
-    par_score = weighted_mean(similarity.ivf_cluster_stats(emb, par))
-    assert par.count() <= similarity.NUM_CENTROIDS
-    assert par_score >= first_k, (par_score, first_k)
-
-
 def test_connected_components_merges_transitively(spark):
     """A-B and B-C were never compared to each other, yet all three must
     land in one cluster; isolated nodes are their own singleton clusters.

@@ -225,58 +225,6 @@ def test_ngram_jaccard_stop_shingle_guard(spark, n_viral, seed):
     assert len(got) < n_viral * (n_viral - 1) // 2
 
 
-@settings(**_SETTINGS)
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)), max_size=20
-    )
-)
-def test_star_cc_matches_union_find(spark, edges):
-    """connected_components_star == union-find reference on arbitrary small
-    graphs (same contract as the label-propagation loop)."""
-    n = 16
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edf = spark.createDataFrame(
-        [(a, b) for a, b in edges] or [(0, 0)], "src long, dst long"
-    )
-    got = {
-        r["id"]: r["component"]
-        for r in dedup.connected_components_star(nodes, edf).collect()
-    }
-    assert got == _union_find_components(n, edges)
-
-
-def test_star_cc_beats_label_propagation_on_chains(spark, tmp_path):
-    """A 64-node chain has diameter 63: label propagation MUST exhaust a
-    10-iteration budget (raising, per its contract), while the small-star/
-    large-star variant path-compresses to the fixpoint within its default
-    O(log n) budget and produces the union-find answer.  Also exercises the
-    reliable-checkpoint path: the star run writes its per-round frames to a
-    real checkpoint directory instead of localCheckpoint."""
-    import pytest
-
-    n = 64
-    chain = [(i, i + 1) for i in range(n - 1)]
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edf = spark.createDataFrame(chain, "src long, dst long")
-
-    with pytest.raises(RuntimeError, match="did not reach its fixpoint"):
-        dedup.connected_components(nodes, edf, max_iterations=10).collect()
-
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        r["id"]: r["component"]
-        for r in dedup.connected_components_star(
-            nodes, edf, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-    # the reliable checkpoint dir must actually have been written
-    import os
-
-    assert any(os.scandir(ckpt)), "no reliable checkpoint data written"
-
-
 def test_label_prop_cc_reliable_checkpoint_dir(spark, tmp_path):
     """connected_components with checkpoint_dir set uses fault-tolerant
     df.checkpoint() and still produces the union-find answer."""

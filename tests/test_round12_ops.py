@@ -184,9 +184,9 @@ def test_kcore_and_link_prediction_read_simhash_store(spark, monkeypatch):
     tags = []
     real = substrate.materialized_frame
 
-    def spy(spark_, sf_dir, tag, builder, n_files=8):
+    def spy(spark_, sf_dir, tag, builder):
         tags.append(tag)
-        return real(spark_, sf_dir, tag, builder, n_files)
+        return real(spark_, sf_dir, tag, builder)
 
     monkeypatch.setattr(dedup, "materialized_frame", spy)
     dedup.dedup_kcore_peel(spark, SF_ORACLE)
@@ -221,9 +221,9 @@ def test_minhash_lenses_read_store(spark, monkeypatch):
     tags = []
     real = substrate.materialized_frame
 
-    def spy(spark_, sf_dir, tag, builder, n_files=8):
+    def spy(spark_, sf_dir, tag, builder):
         tags.append(tag)
-        return real(spark_, sf_dir, tag, builder, n_files)
+        return real(spark_, sf_dir, tag, builder)
 
     monkeypatch.setattr(dedup, "materialized_frame", spy)
     lenses = (

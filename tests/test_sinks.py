@@ -3,8 +3,8 @@ behavior (bulk load + single-transaction refresh, reference main.py:194-251)
 exercised WITHOUT a live Postgres:
 
  - Spark's JDBC write path runs for real against embedded Derby (its driver
-   ships in Spark's jars), including append, truncate-refresh, and the
-   staging-table atomic swap executed in one JVM-JDBC transaction.
+   ships in Spark's jars), including append and the staging-table atomic
+   swap executed in one JVM-JDBC transaction.
  - The COPY protocol sink runs its per-partition code (CSV encode, \\N null
    sentinel, COPY statement, commit) against an injected fake connection
    factory that captures the wire payload.
@@ -54,13 +54,28 @@ def test_write_jdbc_append_roundtrip(spark, derby_url):
     assert _read(spark, derby_url, "append_tbl").count() == 6
 
 
-def test_write_jdbc_full_refresh_truncates(spark, derby_url):
-    df1 = spark.createDataFrame([(i, f"r{i}") for i in range(5)], "id long, name string")
-    df2 = spark.createDataFrame([(9, "only")], "id long, name string")
-    sinks.write_jdbc_append(df1, "refresh_tbl", _opts(derby_url))
-    sinks.write_jdbc_full_refresh(df2, "refresh_tbl", _opts(derby_url))
-    rows = _read(spark, derby_url, "refresh_tbl").collect()
-    assert [(r["id"], r["name"]) for r in rows] == [(9, "only")]
+def test_write_parquet_atomic_failed_publish_keeps_old_table(
+    spark, tmp_path, monkeypatch
+):
+    """A publish rename that fails must leave the previous table readable
+    and must not leave the staging copy next to it."""
+    import os
+
+    path = str(tmp_path / "tbl")
+    sinks.write_parquet_atomic(spark.range(3), path)
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        if "__staging_" in os.path.basename(src):
+            raise OSError("publish failed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="publish failed"):
+        sinks.write_parquet_atomic(spark.range(10), path)
+    monkeypatch.undo()
+    assert spark.read.parquet(path).count() == 3
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
 
 
 def test_staging_swap_statements_postgres_sequence():

@@ -390,69 +390,57 @@ def test_interval_join_state_spans_triggers(spark, split_events_dir, tmp_path):
     assert got == expected and len(got) > 0
 
 
-class _FakeListState:
-    def __init__(self):
-        self.rows = []
+def _write_events(path, ts_type, ts_values):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    def get(self):
-        return iter(self.rows)
-
-    def put(self, rows):
-        self.rows = list(rows)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-
-def test_tws_topk_processor_semantics():
-    """The transformWithStateInPandas processor's merge logic, driven
-    directly (executed-stub twin — the TWS runtime needs protobuf, absent
-    here): across three batches the retained state and emitted rows equal
-    the overall top-3 by (value desc, event_id), and state never exceeds K."""
-    import pandas as pd
-
-    proc = ops._TopKValuesProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-    batches = [
-        pd.DataFrame({"value": [5.0, 9.0], "event_id": [1, 2]}),
-        pd.DataFrame({"value": [9.0, 1.0, 7.0], "event_id": [0, 3, 4]}),
-        pd.DataFrame({"value": [8.5], "event_id": [5]}),
-    ]
-    last = None
-    for b in batches:
-        (last,) = list(proc.handleInputRows((77,), iter([b]), None))
-        assert len(handle.states["top"].rows) <= proc.K
-    assert list(map(tuple, last.itertuples(index=False))) == [
-        (77, 1, 9.0, 0),   # value tie 9.0: event_id 0 beats 2
-        (77, 2, 9.0, 2),
-        (77, 3, 8.5, 5),
-    ]
-
-
-@pytest.mark.skipif(not ops.tws_available(), reason="TWS needs protobuf")
-def test_tws_topk_matches_batch(spark):
-    got = sorted(map(tuple, ops.stream_tws_user_topk(spark, SF_SMALL).collect()))
-    e = tables.load(spark, SF_SMALL, "events")
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("event_id")
+    n = len(ts_values)
+    table = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts_values, ts_type),
+            "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
+            "event_type": pa.array(["click"] * n),
+            "value": pa.array([float(i) for i in range(n)]),
+            "props": pa.array(["{}"] * n),
+        }
     )
-    want = sorted(
-        map(
-            tuple,
-            e.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= 3)
-            .select("user_id", "rank", F.round("value", 2).alias("value"), "event_id")
-            .collect(),
+    path.mkdir()
+    pq.write_table(table, str(path / "events.parquet"))
+    return str(path)
+
+
+def test_events_nanos_file_reads_like_micros(spark, tmp_path):
+    """An events file whose ts is TIMESTAMP(NANOS) (older generators) reads
+    through tables.load and events_stream with the same ts values as the
+    same rows written as TIMESTAMP(MICROS); sub-microsecond digits are
+    truncated, as DuckDB's ns->us cast does."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    micros = [1_704_067_200_000_000 + 61_000_123 * i for i in range(6)]
+    ns_dir = _write_events(
+        tmp_path / "ns", pa.timestamp("ns"), [u * 1000 + 789 for u in micros]
+    )
+    us_dir = _write_events(tmp_path / "us", pa.timestamp("us"), micros)
+
+    def batch_ts(sf_dir):
+        df = tables.load(spark, sf_dir, "events")
+        return [r["ts"] for r in df.orderBy("event_id").collect()]
+
+    def stream_ts(sf_dir):
+        out = ops.run_stream_to_table(
+            ops.events_stream(spark, sf_dir).select("event_id", "ts"), "append"
         )
-    )
-    assert got == want
+        return [r["ts"] for r in out.orderBy("event_id").collect()]
+
+    epoch = dt.datetime(1970, 1, 1)
+    expected = [epoch + dt.timedelta(microseconds=u) for u in micros]
+    assert batch_ts(ns_dir) == batch_ts(us_dir) == expected
+    streamed = stream_ts(ns_dir)
+    assert streamed == stream_ts(us_dir)
+    assert len(streamed) == len(micros) and None not in streamed
 
 
 def test_dedup_state_survives_query_restart(spark, tmp_path):
@@ -588,7 +576,7 @@ def test_user_topk_state_fn_evicts_across_triggers():
 
 def test_stream_user_topk_matches_batch(spark):
     """End-to-end applyInPandasWithState top-K against the batch window
-    ranking — the registered, runtime-executed twin of the TWS processor."""
+    ranking."""
     got = sorted(map(tuple, ops.stream_user_topk(spark, SF_SMALL).collect()))
     e = tables.load(spark, SF_SMALL, "events")
     from pyspark.sql import Window

@@ -33,7 +33,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import SparkSession, functions as F
 
-from simple_land_registry_data_ingestion_spark.operators import dedup
+import __spark_entry__ as entry_mod
+from bench import _clear_persisted
 from simple_land_registry_data_ingestion_spark.session import get_spark
 from simple_land_registry_data_ingestion_spark.tables import load
 
@@ -41,74 +42,63 @@ BASE = "/root/testdata/sf0.1"
 SCALED = "/root/repo/.scratch/sf1"
 COPIES = 10
 
-from simple_land_registry_data_ingestion_spark.functions import text as text_fns
-from simple_land_registry_data_ingestion_spark.operators import asof
-from simple_land_registry_data_ingestion_spark.operators import (
-    evaluation,
-    mining,
-    multimodal,
-    relational,
-    similarity,
-    sketches,
-)
-from simple_land_registry_data_ingestion_spark.functions import udfs
-
-QUERIES = {
+#: Registry names timed at 1x and 10x, in output order.
+QUERIES = (
     # dedup family (documents)
-    "dedup_jaccard_prefix": dedup.dedup_jaccard_prefix,
-    "dedup_prefix_index_build": dedup.dedup_prefix_index_build,
-    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-    "dedup_semdedup": dedup.dedup_semdedup,
-    "dedup_exact_substring": dedup.dedup_exact_substring,
-    "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
+    "dedup_jaccard_prefix",
+    "dedup_prefix_index_build",
+    "dedup_ngram_jaccard",
+    "dedup_semdedup",
+    "dedup_exact_substring",
+    "dedup_minhash_lsh",
     # r11: the two LSH-candidate exact scorers (shared checkpointed
     # front half — see _minhash_candidate_sets)
-    "dedup_jaccard_lsh": dedup.dedup_jaccard_lsh,
-    "dedup_containment_lsh": dedup.dedup_containment_lsh,
+    "dedup_jaccard_lsh",
+    "dedup_containment_lsh",
     # r11 close: scale rows for every remaining bench-top-40 batch query
     # that lacked one (streams excluded — the availableNow drain shape is
     # trigger-bound, not data-bound, and the tool's corpus swap does not
     # rebuild the chunked-tail checkpoints)
-    "dedup_simhash_pairs": dedup.dedup_simhash_pairs,
-    "dedup_canonical_by_quality": dedup.dedup_canonical_by_quality,
-    "dedup_cluster_assignments": dedup.dedup_cluster_assignments,
-    "dedup_decontaminate": dedup.dedup_decontaminate,
-    "dedup_pagerank_hubs": dedup.dedup_pagerank_hubs,
-    "dedup_source_overlap_matrix": dedup.dedup_source_overlap_matrix,
-    "split_leakage_free": dedup.split_leakage_free,
-    "dedup_triangle_stats": dedup.dedup_triangle_stats,
-    "events_cusum_pandas": udfs.events_cusum_pandas,
-    "multimodal_decode_features": multimodal.multimodal_decode_features,
-    "agg_approx_quantile_error": relational.agg_approx_quantile_error,
-    "similarity_ivf_kmeans": similarity.similarity_ivf_kmeans,
-    "similarity_ivfpq_adc": similarity.similarity_ivfpq_adc,
-    "text_lang_id_ngram": text_fns.text_lang_id_ngram,
-    "text_bigram_kn_perplexity": text_fns.text_bigram_kn_perplexity,
-    "text_dictionary_tagging": text_fns.text_dictionary_tagging,
+    "dedup_simhash_pairs",
+    "dedup_canonical_by_quality",
+    "dedup_cluster_assignments",
+    "dedup_decontaminate",
+    "dedup_pagerank_hubs",
+    "dedup_source_overlap_matrix",
+    "split_leakage_free",
+    "dedup_triangle_stats",
+    "events_cusum_pandas",
+    "multimodal_decode_features",
+    "agg_approx_quantile_error",
+    "similarity_ivf_kmeans",
+    "similarity_ivfpq_adc",
+    "text_lang_id_ngram",
+    "text_bigram_kn_perplexity",
+    "text_dictionary_tagging",
     # similarity family (embeddings)
-    "similarity_ann_ivf": similarity.similarity_ann_ivf,
-    "similarity_ann_batch": similarity.similarity_ann_batch,
+    "similarity_ann_ivf",
+    "similarity_ann_batch",
     # text family (documents)
-    "text_gopher_filter": text_fns.text_gopher_filter,
-    "text_winnowing_fingerprints": text_fns.text_winnowing_fingerprints,
+    "text_gopher_filter",
+    "text_winnowing_fingerprints",
     # round-6 additions: posting-list cosine join + novelty curve (both
     # corpus-linear by design — the scaling run checks the claim)
-    "dedup_tfidf_cosine": dedup.dedup_tfidf_cosine,
-    "text_ngram_novelty": dedup.text_ngram_novelty,
+    "dedup_tfidf_cosine",
+    "text_ngram_novelty",
     # events family (scaled change stream)
-    "sessionize_events": relational.sessionize_events,
-    "events_ohlc_candles": relational.events_ohlc_candles,
-    "events_lateness_audit": relational.events_lateness_audit,
+    "sessionize_events",
+    "events_ohlc_candles",
+    "events_lateness_audit",
     # round-6 late wave: FastSS ER (part vocab constant at 10x parts ->
     # name-level work FLAT, expansion linear), binned interval join
     # (events 10x, same 42 windows), BM25 (corpus-linear postings),
     # built-in session_window (10x users), Merkle localization (damage
     # grows with keyspace; fine level bounded by damaged coarse buckets)
-    "er_edit_distance": mining.er_edit_distance,
-    "join_range_binned": relational.join_range_binned,
-    "text_bm25_topk": text_fns.text_bm25_topk,
-    "events_session_window_batch": relational.events_session_window_batch,
-    "profile_merkle_ranges": relational.profile_merkle_ranges,
+    "er_edit_distance",
+    "join_range_binned",
+    "text_bm25_topk",
+    "events_session_window_batch",
+    "profile_merkle_ranges",
     # round-6 second addendum: the hourly ACF reduces to |hours| rows
     # after one shuffle (flat); AUC's global rank is the stress case
     # (10x rows through one sort lineage); calibration is scan+10-key agg
@@ -117,15 +107,15 @@ QUERIES = {
     # upgrade path — the run measures what the single-window form costs);
     # rank fusion is postings-linear; matryoshka/MIPS are candidate-scan
     # linear; link prediction is wedge-quadratic over the LSH output
-    "events_hourly_acf": relational.events_hourly_acf,
-    "eval_auc_rank": evaluation.eval_auc_rank,
-    "eval_calibration_bins": evaluation.eval_calibration_bins,
-    "text_pii_scan": text_fns.text_pii_scan,
-    "events_quantile_normalize": relational.events_quantile_normalize,
-    "search_rank_fusion": text_fns.search_rank_fusion,
-    "similarity_matryoshka_error": similarity.similarity_matryoshka_error,
-    "similarity_mips_transform": similarity.similarity_mips_transform,
-    "dedup_link_prediction": dedup.dedup_link_prediction,
+    "events_hourly_acf",
+    "eval_auc_rank",
+    "eval_calibration_bins",
+    "text_pii_scan",
+    "events_quantile_normalize",
+    "search_rank_fusion",
+    "similarity_matryoshka_error",
+    "similarity_mips_transform",
+    "dedup_link_prediction",
     # round-7 additions: bootstrap explodes 32x at the scan (linear);
     # two-phase rank is the distributed-rank pattern itself (the claim:
     # NO single-task collapse, so ~linear on fixed cores); BPE is 3x
@@ -137,17 +127,17 @@ QUERIES = {
     # validity not asserted); CM sketch state is FIXED 4x1024 (the claim);
     # NDCG/conformal are user-keyed windows; heaps is one scan + one
     # term groupBy
-    "events_bootstrap_ci": relational.events_bootstrap_ci,
-    "events_global_rank_two_phase": relational.events_global_rank_two_phase,
-    "text_bpe_word_merges": text_fns.text_bpe_word_merges,
-    "search_phrase_positional": text_fns.search_phrase_positional,
-    "item_item_cf": mining.item_item_cf,
-    "sample_negative_pairs": relational.sample_negative_pairs,
-    "agg_join_size_sketch": sketches.agg_join_size_sketch,
-    "eval_ndcg_at_k": evaluation.eval_ndcg_at_k,
-    "eval_conformal_interval": evaluation.eval_conformal_interval,
-    "events_changepoint_binseg": relational.events_changepoint_binseg,
-    "text_heaps_law": relational.text_heaps_law,
+    "events_bootstrap_ci",
+    "events_global_rank_two_phase",
+    "text_bpe_word_merges",
+    "search_phrase_positional",
+    "item_item_cf",
+    "sample_negative_pairs",
+    "agg_join_size_sketch",
+    "eval_ndcg_at_k",
+    "eval_conformal_interval",
+    "events_changepoint_binseg",
+    "text_heaps_law",
     # round-7 third wave: KS/MWU/KW run windows over the DISTINCT-cents
     # table (price-grid-bounded -> near-flat after the 10x scan); PSI adds
     # broadcast decile edges; HITS/LPA are edge-linear loop shapes like
@@ -155,62 +145,62 @@ QUERIES = {
     # vocabularies); chao1 is one vocab groupBy; hill is top-k flat;
     # SPRT/xcorr/runs consume the calendar-bounded hourly rollup; entropy
     # rate is the per-user lag window (10x rows, one shuffle)
-    "events_ks_test": relational.events_ks_test,
-    "events_mann_whitney": relational.events_mann_whitney,
-    "events_psi_drift": relational.events_psi_drift,
-    "events_kruskal_wallis": relational.events_kruskal_wallis,
-    "graph_hits_scores": mining.graph_hits_scores,
-    "graph_label_propagation": dedup.graph_label_propagation,
-    "text_textrank_keywords": mining.text_textrank_keywords,
-    "text_chao1_vocab": text_fns.text_chao1_vocab,
-    "orders_hill_tail_index": relational.orders_hill_tail_index,
-    "events_sprt_decision": relational.events_sprt_decision,
-    "events_entropy_rate": relational.events_entropy_rate,
-    "events_lag_xcorr": relational.events_lag_xcorr,
-    "events_runs_test": relational.events_runs_test,
+    "events_ks_test",
+    "events_mann_whitney",
+    "events_psi_drift",
+    "events_kruskal_wallis",
+    "graph_hits_scores",
+    "graph_label_propagation",
+    "text_textrank_keywords",
+    "text_chao1_vocab",
+    "orders_hill_tail_index",
+    "events_sprt_decision",
+    "events_entropy_rate",
+    "events_lag_xcorr",
+    "events_runs_test",
     # round-8 heavy-tail additions (r7 verdict item 9): k-core peels the
     # LSH graph (per-round degree shuffle + two semi joins; rounds bounded
     # by max core); modularity is one pass over the CC partition (edge-
     # linear); golden record = blocked ER + CC + one survivorship shuffle;
     # AMS F2 carries FIXED 16-estimator state (scan-linear) but its
     # certification row also computes the EXACT F2 per-key groupBy
-    "dedup_kcore_peel": dedup.dedup_kcore_peel,
-    "graph_modularity": dedup.graph_modularity,
-    "er_golden_record": mining.er_golden_record,
+    "dedup_kcore_peel",
+    "graph_modularity",
+    "er_golden_record",
     # r9: blocked ER now factors the quadratic onto the distinct-name
     # table (vocab² verify + output-linear expansion) — output here IS
     # ~100x pairs at 10x verbatim-name parts, so the honest target is
     # slope ~ output growth / cores, not flat
-    "er_blocked_match": mining.er_blocked_match,
-    "agg_ams_f2_sketch": sketches.agg_ams_f2_sketch,
+    "er_blocked_match",
+    "agg_ams_f2_sketch",
     # round-8 additions: gini/pareto rank over 10x customers (two-phase
     # rank path), gap-fill/haar are calendar-bounded after the 10x scan,
     # winsorized/MAD are keyed rank windows over 10x rows, skyline is
     # (price,size)-grid bounded, basket lift is basket-size bounded,
     # JSD is vocabulary-bounded (10 disjoint vocabularies at 10x),
     # interval overlap and benford are scan-stage + tiny aggregates
-    "customers_gini_concentration": relational.customers_gini_concentration,
-    "orders_pareto_8020": relational.orders_pareto_8020,
-    "events_gap_fill_interpolate": relational.events_gap_fill_interpolate,
-    "events_haar_wavelet_energy": relational.events_haar_wavelet_energy,
-    "events_winsorized_order_stats": relational.events_winsorized_order_stats,
-    "events_mad_outliers": relational.events_mad_outliers,
-    "events_benford_audit": relational.events_benford_audit,
-    "part_skyline_pareto": relational.part_skyline_pareto,
-    "orders_market_basket_lift": relational.orders_market_basket_lift,
+    "customers_gini_concentration",
+    "orders_pareto_8020",
+    "events_gap_fill_interpolate",
+    "events_haar_wavelet_energy",
+    "events_winsorized_order_stats",
+    "events_mad_outliers",
+    "events_benford_audit",
+    "part_skyline_pareto",
+    "orders_market_basket_lift",
     # r11: the other three basket-bounded co-purchase graph queries —
     # same order-key pre-partitioned frame as market-basket lift
-    "basket_part_pairs": mining.basket_part_pairs,
-    "graph_degree_powerlaw": mining.graph_degree_powerlaw,
-    "graph_assortativity": mining.graph_assortativity,
-    "text_js_divergence": text_fns.text_js_divergence,
-    "text_minhash_jaccard_estimate": dedup.text_minhash_jaccard_estimate,
-    "join_interval_overlap_weighted": relational.join_interval_overlap_weighted,
-    "lineitem_price_elasticity": relational.lineitem_price_elasticity,
+    "basket_part_pairs",
+    "graph_degree_powerlaw",
+    "graph_assortativity",
+    "text_js_divergence",
+    "text_minhash_jaccard_estimate",
+    "join_interval_overlap_weighted",
+    "lineitem_price_elasticity",
     # late round-8 rewires: RFM quintiles now three two-phase ranks over
     # the 10x customer dimension; lateness audit's running max is the
     # bucket-merged two-phase form (was the last global ordered pass)
-    "customers_rfm_segments": relational.customers_rfm_segments,
+    "customers_rfm_segments",
     # round-9 additions: the stats battery reduces to 5-group moments
     # after one 10x scan (flat); STL/SAX run on the calendar-bounded
     # hourly table; the skew profiler is 3 key-count groupBys + two-phase
@@ -220,28 +210,28 @@ QUERIES = {
     # corpus-linear matvec passes; balanced sampling is per-class rank
     # windows; FD profiling is 4 keyed groupBys; forward as-of is one
     # keyed window over 10x events
-    "events_anova_f": relational.events_anova_f,
-    "events_welch_ttest": relational.events_welch_ttest,
-    "orders_nelson_aalen": relational.orders_nelson_aalen,
-    "events_stl_decompose": relational.events_stl_decompose,
-    "events_sax_motifs": relational.events_sax_motifs,
-    "profile_partition_skew": relational.profile_partition_skew,
-    "join_semi_bloom_pruned": relational.join_semi_bloom_pruned,
-    "text_term_burstiness": text_fns.text_term_burstiness,
-    "text_code_detect": text_fns.text_code_detect,
-    "sample_soft_dedup_weights": dedup.sample_soft_dedup_weights,
-    "orders_duplicate_invoices": relational.orders_duplicate_invoices,
-    "similarity_power_iteration": similarity.similarity_power_iteration,
-    "join_asof_forward": asof.join_asof_forward,
-    "sample_balanced_classes": relational.sample_balanced_classes,
-    "profile_functional_dependency": relational.profile_functional_dependency,
+    "events_anova_f",
+    "events_welch_ttest",
+    "orders_nelson_aalen",
+    "events_stl_decompose",
+    "events_sax_motifs",
+    "profile_partition_skew",
+    "join_semi_bloom_pruned",
+    "text_term_burstiness",
+    "text_code_detect",
+    "sample_soft_dedup_weights",
+    "orders_duplicate_invoices",
+    "similarity_power_iteration",
+    "join_asof_forward",
+    "sample_balanced_classes",
+    "profile_functional_dependency",
     # round-10 additions
-    "events_circular_hour_stats": relational.events_circular_hour_stats,
-    "orders_lorenz_asymmetry": relational.orders_lorenz_asymmetry,
-    "events_turning_points": relational.events_turning_points,
-    "text_length_spectrum": text_fns.text_length_spectrum,
-    "orders_interarrival_burstiness": relational.orders_interarrival_burstiness,
-}
+    "events_circular_hour_stats",
+    "orders_lorenz_asymmetry",
+    "events_turning_points",
+    "text_length_spectrum",
+    "orders_interarrival_burstiness",
+)
 
 
 def build_scaled(spark: SparkSession) -> None:
@@ -367,21 +357,6 @@ def build_lineitem(spark: SparkSession) -> None:
     out.coalesce(8).write.mode("overwrite").parquet(f"{SCALED}/lineitem.parquet")
 
 
-def clear_persisted(spark) -> None:
-    """Unpersist every lingering RDD (localCheckpoint blocks included) and
-    cached table between measurements.
-
-    Queries in this repo localCheckpoint their iterative frames; those
-    blocks outlive the query and, across a measurement session, crowd the
-    storage pool until later queries evict/spill — measured as
-    graph_hits_scores "costing" 13 s in a session that had just run the
-    k-core 10x pass vs 4.4 s in a clean session.  Safe between queries:
-    every query rebuilds its DAG from parquet."""
-    for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-        rdd.unpersist()
-    spark.catalog.clearCache()
-
-
 def time_query(fn, spark, sf_dir, passes=2) -> tuple[float, int]:
     """Best-of-N with a MID-RUN storm retry (r13): the start-of-run load
     guard cannot see a host steal window opening between passes — twice
@@ -393,12 +368,12 @@ def time_query(fn, spark, sf_dir, passes=2) -> tuple[float, int]:
     extra pass — min over all passes can only remove ambient noise."""
     times, rows = [], -1
     for _ in range(passes):
-        clear_persisted(spark)
+        _clear_persisted(spark)
         t0 = time.monotonic()
         rows = fn(spark, sf_dir).count()
         times.append(time.monotonic() - t0)
     if len(times) >= 2 and max(times) > 2.5 * min(times):
-        clear_persisted(spark)
+        _clear_persisted(spark)
         t0 = time.monotonic()
         rows = fn(spark, sf_dir).count()
         times.append(time.monotonic() - t0)
@@ -439,9 +414,11 @@ def main() -> None:
     prior = Path("/root/repo/BENCH_SCALING.json")
     if only and prior.exists():
         result["queries"] = json.loads(prior.read_text()).get("queries", {})
-    for name, fn in QUERIES.items():
+    registry = entry_mod.queries()
+    for name in QUERIES:
         if only and name not in only:
             continue
+        fn = registry[name]
         t1, r1 = time_query(fn, spark, BASE)
         t10, r10 = time_query(fn, spark, SCALED)
         result["queries"][name] = {
