@@ -237,13 +237,7 @@ _R16_WINDOW: list[str] = [
 ]
 
 
-#: PARAMETER COUPLING: each oracle string inlines the literal
-#: value of its operator's DEFAULT keyword arguments (e.g. basket_part_pairs
-#: min_support=2, supplier_otif sla_days=60, er_sorted_neighborhood window
-#: gap 1..3, similarity_recall_at_k k=10).  The driver always calls the
-#: operators with defaults, so the pair stays in lockstep; anyone invoking an
-#: operator with a non-default argument must adjust the twin SQL to match —
-#: there is no runtime signal tying the two constants together.
+#: Each oracle inlines its operator's constants, so change both together.
 _ORACLES: dict[str, str] = {
     "ingest_max_date": "SELECT CAST(MAX(l_shipdate) AS DATE) AS auto_date FROM lineitem",
     "ingest_run_summary": """

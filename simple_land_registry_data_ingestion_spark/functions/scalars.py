@@ -137,8 +137,8 @@ def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zorder_key_col(x, y, bits: int = 11):
-    """Morton/Z-order interleave of the low ``bits`` bits of two
+def zorder_key_col(x, y):
+    """Morton/Z-order interleave of the low 11 bits of two
     non-negative integer columns: bit i of x lands at position 2i, bit i
     of y at 2i+1.
 
@@ -155,7 +155,7 @@ def zorder_key_col(x, y, bits: int = 11):
     xs = x.cast("long")
     ys = y.cast("long")
     z = _F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(11):
         z = z + _F.shiftleft(_F.shiftright(xs, i).bitwiseAND(_F.lit(1)), 2 * i)
         z = z + _F.shiftleft(
             _F.shiftright(ys, i).bitwiseAND(_F.lit(1)), 2 * i + 1

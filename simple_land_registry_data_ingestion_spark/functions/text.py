@@ -61,14 +61,14 @@ def fingerprint_md5_col(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def rolling_hash_col(text: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash over characters: h = (h*base + ascii(c)) % mod.
+def rolling_hash_col(text: Column | str) -> Column:
+    """Polynomial rolling hash over characters: h = (h*31 + ascii(c)) % 1_000_000_007.
     A left fold via ``aggregate`` — sequential per row, parallel across rows."""
     chars = F.split(F.col(text) if isinstance(text, str) else text, "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % mod,
+        lambda acc, c: (acc * 31 + F.ascii(c)) % 1_000_000_007,
     )
 
 
@@ -82,11 +82,9 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_winnowing_fingerprints(
-    spark: SparkSession, sf_dir: str, w: int = 4
-) -> DataFrame:
+def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, the MOSS
-    algorithm): hash every word 3-gram, slide a window of ``w`` consecutive
+    algorithm): hash every word 3-gram, slide a window of w = 4 consecutive
     hashes, keep each window's minimum — the guarantee is that any match of
     length >= w+2 grams between two documents shares at least one selected
     fingerprint, while storing only ~2/(w+1) of all hashes.
@@ -101,8 +99,8 @@ def text_winnowing_fingerprints(
     uses integer rolling hashes — any total order preserves the guarantee).
     Documents with fewer than w+2 words have no window and emit nothing.
 
-    r12 rewrite (VERDICT r11 item 6 — worst 10x slope in the registry at
-    5.76): the array-HOF form ran every md5 and every O(w) sliding-min
+    Why a window form (the array-HOF form had the worst 10x slope in the
+    registry, 5.76): the array-HOF form ran every md5 and every O(w) sliding-min
     INTERPRETED (higher-order-function lambdas never enter whole-stage
     codegen), which made selection the CPU bottleneck however parallel
     the layout.  This form posexplodes the words and expresses the same
@@ -114,6 +112,7 @@ def text_winnowing_fingerprints(
     replaces zero, but every expression is codegen: A/B at sf0.1
     1.24 -> 0.88 s, at 10x 5.0 -> 0.95 s, rows identical.  (fan_out and
     the bound-array workaround became unnecessary with the explode.)"""
+    w = 4
     docs = load(spark, sf_dir, "documents")
     ws_arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     toks = docs.select("doc_id", F.posexplode(ws_arr).alias("pos", "word"))
@@ -159,11 +158,9 @@ def quality_score_col(text: Column | str = "text") -> Column:
     return F.round(score, 4)
 
 
-def text_quality_quantile_gate(
-    spark: SparkSession, sf_dir: str, q: float = 0.25
-) -> DataFrame:
+def text_quality_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language quantile quality gating: each language's quality
-    threshold is its own ``q``-quantile, and a document survives when it
+    threshold is its own 0.25-quantile, and a document survives when it
     scores at or above ITS language's bar.
 
     A single global threshold over-filters whichever language the heuristic
@@ -178,7 +175,7 @@ def text_quality_quantile_gate(
         "doc_id", "lang", quality_score_col("text").alias("quality_score")
     )
     thr = scored.groupBy("lang").agg(
-        F.round(F.percentile("quality_score", q), 4).alias("lang_threshold")
+        F.round(F.percentile("quality_score", 0.25), 4).alias("lang_threshold")
     )
     return (
         scored.join(F.broadcast(thr), "lang")
@@ -256,7 +253,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_tfidf_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k TF-IDF terms per document — the keyword/salience step of a
     training-data pipeline (topic tagging, dedup feature weighting,
     retrieval indexing).
@@ -289,12 +286,12 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("token"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= 3)
         .select("doc_id", "token", "tf", "df", "tfidf", "rnk")
     )
 
 
-def text_vocab_topk(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame:
+def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary head: the k most frequent tokens with total and
     document frequencies — the vocab-building pass before tokenizer
     training.  Global top-k plans as TakeOrderedAndProject over the token
@@ -305,7 +302,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame
         F.count(F.lit(1)).alias("n_total"),
         F.countDistinct("doc_id").alias("n_docs"),
     )
-    return counts.orderBy(F.col("n_total").desc(), F.col("token")).limit(k)
+    return counts.orderBy(F.col("n_total").desc(), F.col("token")).limit(100)
 
 
 def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,7 +510,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     One token-count aggregation (map-side partial over the scan), then the
     regression runs over the VOCABULARY — sublinear in corpus size (Heaps)
     but NOT bounded, so the frequency rank comes from the certified
-    two_phase_global_rank (r11: ~30 log2-count buckets → broadcast offsets
+    two_phase_global_rank (~30 log2-count buckets → broadcast offsets
     → partitioned in-bucket row_number; count ties share a bucket and
     break on the token itself) rather than a single-task global window —
     a 100 M-type vocabulary ranks with full parallelism.  Ranks are
@@ -566,7 +563,7 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_lang_id_ngram(spark: SparkSession, sf_dir: str, top_k: int = 20) -> DataFrame:
+def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-trigram language ID — the n-gram profile method (Cavnar &
     Trenkle shape): each language's PROFILE is its top-k most frequent
     char trigrams, learned from a held-in split of the corpus itself
@@ -618,7 +615,7 @@ def text_lang_id_ngram(spark: SparkSession, sf_dir: str, top_k: int = 20) -> Dat
     w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("tri"))
     profiles = (
         counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= top_k)
+        .where(F.col("rnk") <= 20)
         .select(F.col("lang").alias("profile_lang"), "tri")
     )
 
@@ -645,9 +642,7 @@ def text_lang_id_ngram(spark: SparkSession, sf_dir: str, top_k: int = 20) -> Dat
     )
 
 
-def text_collocations_pmi(
-    spark: SparkSession, sf_dir: str, min_count: int = 5
-) -> DataFrame:
+def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation extraction by pointwise mutual information: adjacent
     token pairs that co-occur more than their unigram frequencies predict
     (PMI = log2(p(a,b) / (p(a)·p(b)))) — the classic phrase detector
@@ -681,7 +676,7 @@ def text_collocations_pmi(
     pairs = (
         big.groupBy("word_a", "word_b")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .where(F.col("n_pairs") >= min_count)
+        .where(F.col("n_pairs") >= 5)
     )
     ua = uni.select(F.col("w").alias("word_a"), F.col("n_w").alias("n_a"))
     ub = uni.select(F.col("w").alias("word_b"), F.col("n_w").alias("n_b"))
@@ -698,16 +693,14 @@ def text_collocations_pmi(
     )
 
 
-def text_feature_hashing(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 64
-) -> DataFrame:
+def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick vectorizer: tokens map to a FIXED feature space of
-    ``n_buckets`` dimensions via a hash, no vocabulary pass required —
+    64 dimensions via a hash, no vocabulary pass required —
     the unbounded-vocab answer for streaming/online featurization
     (scikit-learn HashingVectorizer, Vowpal Wabbit).
 
     The whole transform is one stateless scan: explode tokens, bucket =
-    md5-prefix mod n_buckets (engine-portable, seed-free), count per
+    md5-prefix mod 64 (engine-portable, seed-free), count per
     (doc, bucket).  No vocabulary table, no broadcast, no second pass —
     which is exactly why the trick exists at 100 TB: the TF-IDF pipeline's
     vocab aggregate disappears entirely, and collisions are the accepted
@@ -720,7 +713,7 @@ def text_feature_hashing(
     toks = docs.select("doc_id", F.explode(ws).alias("w"))
     bucket = (
         F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
-        % n_buckets
+        % 64
     )
     return (
         toks.select("doc_id", bucket.alias("bucket"))
@@ -729,12 +722,10 @@ def text_feature_hashing(
     )
 
 
-def text_chunk_dedup_fraction(
-    spark: SparkSession, sf_dir: str, chunk_words: int = 10
-) -> DataFrame:
+def text_chunk_dedup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level dedup metric (CCNet / RefinedWeb style, adapted to
     this corpus's single-paragraph docs): split each document into
-    NON-overlapping ``chunk_words``-word chunks and report, per document,
+    NON-overlapping 10-word chunks and report, per document,
     how many of its distinct chunks also appear verbatim in at least one
     OTHER document — the per-doc duplicate-content fraction a filtering
     pipeline thresholds on before near-dedup ever runs.
@@ -749,6 +740,7 @@ def text_chunk_dedup_fraction(
     join the tiny duplicated-chunk set back (broadcast at any dup rate),
     aggregate per doc.  No doc ever joins another doc.  Docs shorter than
     one full chunk carry n_chunks=0 and fraction 0."""
+    chunk_words = 10
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n_full = F.floor(F.size(words) / chunk_words).cast("int")
@@ -796,13 +788,11 @@ def text_chunk_dedup_fraction(
     )
 
 
-def text_bigram_kn_perplexity(
-    spark: SparkSession, sf_dir: str, discount: float = 0.75
-) -> DataFrame:
+def text_bigram_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document perplexity under an interpolated KNESER-NEY bigram
     model (Kneser & Ney 1995; the smoothing KenLM defaults to) — the
     production upgrade of text_bigram_perplexity's MLE: absolute
-    discounting moves ``discount`` mass off every seen bigram and backs
+    discounting moves d = 0.75 mass off every seen bigram and backs
     off to the CONTINUATION unigram (how many distinct left-contexts a
     word completes), which is what separates "common because versatile"
     from "common inside one collocation".
@@ -850,7 +840,7 @@ def text_bigram_kn_perplexity(
     )
     cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_rev"))
     total = c12.groupBy().agg(F.count(F.lit(1)).alias("n1p_all"))
-    d = F.lit(discount)
+    d = F.lit(0.75)
     scored = (
         d12.join(c12, ["w1", "w2"])
         .join(c1, "w1")
@@ -993,7 +983,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_rake_keywords(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
+def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): phrases are maximal
     runs of non-stopword tokens, each word scores deg/freq (degree = sum
     of the lengths of the phrase occurrences containing it), and a
@@ -1047,19 +1037,13 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFra
     )
     return scored.orderBy(
         F.col("rake_score").desc(), F.col("phrase")
-    ).limit(k)
+    ).limit(50)
 
 
-def text_bm25_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    k: int = 20,
-) -> DataFrame:
+def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval scoring — the search-engine ranking function
     (Robertson/Spärck Jones; Lucene's default) over the documents table
-    for a fixed 3-term query, returning the top-k hits.  Completes the
+    for a fixed 3-term query, returning the top-20 hits.  Completes the
     retrieval surface next to TF-IDF salience (text_tfidf_topk) and the
     cosine join (dedup_tfidf_cosine): BM25 adds the tf saturation (k1)
     and length normalization (b) that raw TF-IDF lacks.
@@ -1075,6 +1059,8 @@ def text_bm25_topk(
     the per-doc sum is exact and order-free; idf/lengths use the same
     left-to-right expression on both engines; final score rounds 6-dp
     before ranking, tie-broken by doc_id — a total order."""
+    k1 = 1.2
+    b = 0.75
     query_terms = ["join", "hash", "window"]
     docs = load(spark, sf_dir, "documents")
     tokens = docs.select(
@@ -1117,7 +1103,7 @@ def text_bm25_topk(
         F.round(F.sum("c").cast("double"), 6).alias("bm25"),
         F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
     )
-    return scored.orderBy(F.col("bm25").desc(), "doc_id").limit(k)
+    return scored.orderBy(F.col("bm25").desc(), "doc_id").limit(20)
 
 
 # ---------------------------------------------------------------------------
@@ -1187,18 +1173,10 @@ def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Reciprocal-rank fusion of two lexical rankers (round 6)
+# Reciprocal-rank fusion of two lexical rankers
 # ---------------------------------------------------------------------------
 
-def search_rank_fusion(
-    spark: SparkSession,
-    sf_dir: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_per_ranker: int = 50,
-    k: int = 20,
-    rrf_k: int = 60,
-) -> DataFrame:
+def search_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al.) of two rankers over the
     same 3-term query: BM25 (text_bm25_topk's scorer) and summed TF-IDF
     (text_tfidf_topk's salience formula) — the standard hybrid-retrieval
@@ -1217,9 +1195,13 @@ def search_rank_fusion(
 
     Scale shape: rank-then-fuse touches the corpus once; the two top-N
     lists and the fusion are O(N) regardless of corpus size.  Each
-    ranker's top-N IS a TakeOrdered pass (per-task heaps, r11) with the
+    ranker's top-N IS a TakeOrdered pass (per-task heaps) with the
     rank window running over the N survivors only; RRF itself never sees
     more than 2N rows."""
+    k1 = 1.2
+    b = 0.75
+    n_per_ranker = 50
+    rrf_k = 60
     query_terms = ["join", "hash", "window"]
     docs = load(spark, sf_dir, "documents")
     tokens = docs.select("doc_id", F.explode(words_col("text")).alias("token"))
@@ -1266,7 +1248,7 @@ def search_rank_fusion(
     )
     # Top-N per ranker: LIMIT first (plans as TakeOrderedAndProject —
     # per-task heaps over the candidate set, never a global sort), THEN
-    # row_number over the N surviving rows (r11: the global window over
+    # row_number over the N surviving rows (the global window over
     # the full candidate set collapsed to one task at scale; ranking
     # after the limit is bit-identical because the orders coincide).
     top_bm25 = (
@@ -1307,14 +1289,10 @@ def search_rank_fusion(
             6,
         ).alias("rrf"),
     )
-    return fused.orderBy(F.col("rrf").desc(), "doc_id").limit(k)
+    return fused.orderBy(F.col("rrf").desc(), "doc_id").limit(20)
 
 
-def search_phrase_positional(
-    spark: SparkSession,
-    sf_dir: str,
-    phrase: str = "fast table",
-) -> DataFrame:
+def search_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional phrase search over a distributed inverted index — the
     exact-phrase retrieval primitive BM25 can't express (bag-of-words
     scoring loses adjacency): build (doc, term, position) postings with
@@ -1332,8 +1310,7 @@ def search_phrase_positional(
     the join order here is fixed and correct for any df.
 
     Output: (doc_id, lang, n_occurrences, first_pos) per matching doc."""
-    terms = phrase.split(" ")
-    assert len(terms) == 2, "two-term phrase demo"
+    terms = ["fast", "table"]
     postings = (
         load(spark, sf_dir, "documents")
         .select(
@@ -1425,8 +1402,8 @@ def text_bpe_word_merges(
 
     Plan at scale, per iteration: adjacent-pair counting is a pure
     SCAN-STAGE ``zip_with`` of the token array against its own tail
-    (r11 — the earlier shape posexploded positional postings and
-    self-joined them on (doc, pos+1), two full shuffles of the token
+    (a posexplode of positional postings self-joined on (doc, pos+1)
+    would cost two full shuffles of the token
     table per round for pairs the array already holds in order), so
     the only shuffle is the map-side-combined pair count; the 1-row
     argmax broadcasts back into a scan-stage rewrite; the corpus frame
@@ -1472,7 +1449,7 @@ def text_bpe_word_merges(
             )
         )
         if i + 1 == iters:
-            # r15: the last iteration's rewrite feeds nothing — the merge
+            # The last iteration's rewrite feeds nothing — the merge
             # row is taken from ``best`` BEFORE the rewrite — so skipping
             # it drops one full corpus rewrite + eager materialization
             # per run with byte-identical output.
@@ -1539,7 +1516,7 @@ def text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 8 — corpus diversity / distribution distance (X233-X234)
+# Corpus diversity / distribution distance (X233-X234)
 # ---------------------------------------------------------------------------
 
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,12 +1651,10 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 9: term burstiness, code-vs-prose detection
+# Term burstiness, code-vs-prose detection
 # ---------------------------------------------------------------------------
 
-def text_term_burstiness(
-    spark: SparkSession, sf_dir: str, min_df: int = 20
-) -> DataFrame:
+def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Church-Gale term burstiness: for each frequent term, how much does
     it CLUMP?  burstiness = cf/df (mean occurrences per containing doc)
     and the Fano factor (variance-to-mean over containing docs) separate
@@ -1712,7 +1687,7 @@ def text_term_burstiness(
         F.sum(
             F.col("c").cast("decimal(38,0)") * F.col("c").cast("decimal(38,0)")
         ).cast("decimal(38,0)").alias("c2"),
-    ).where(F.col("df") >= F.lit(min_df))
+    ).where(F.col("df") >= F.lit(20))
     dfd = F.col("df").cast("double")
     cfd = F.col("cf").cast("double")
     mean = cfd / dfd
@@ -1751,7 +1726,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("n_chars") > 0)
     sym = F.regexp_count(F.col("text"), F.lit(r"[{}();=<>\[\]]")).cast("long")
     lines = (F.regexp_count(F.col("text"), F.lit("\n")) + 1).cast("long")
-    # explicit (^|\n) instead of (?m)^ (r9 advice): Java multiline ^ also
+    # explicit (^|\n) instead of (?m)^: Java multiline ^ also
     # fires after \r and U+0085/U+2028/U+2029 while the oracle's RE2 fires
     # only after \n — the alternation means the same thing in both engines
     indented = F.regexp_count(
@@ -1813,8 +1788,8 @@ def text_length_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     read off this table).
 
     The bucket is resolved by an explicit shared CASE chain over the
-    _LEN_BUCKETS boundaries — never runtime log2() (the r10 portability
-    discipline: both engines compare the same integers).  Token count is
+    _LEN_BUCKETS boundaries — never runtime log2() (portability: both
+    engines compare the same integers).  Token count is
     the whitespace split length on the trimmed text, the repo-standard
     tokenizer.  All outputs are BIGINT plus one int/int double share.
 

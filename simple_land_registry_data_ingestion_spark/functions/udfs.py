@@ -132,6 +132,10 @@ def _gini_np(v: pd.Series) -> float:
     return float((2.0 * (idx * x).sum()) / (n * total) - (n + 1.0) / n)
 
 
+def _count(v: pd.Series) -> int:
+    return len(v)
+
+
 def pandas_grouped_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom AGGREGATE in Python: per-status Gini concentration of order
     values, as a GROUPED_AGG pandas UDF — the Spark shape for aggregates
@@ -143,11 +147,11 @@ def pandas_grouped_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups is the DEMO of the API, not the production key choice; salt or
     pre-aggregate hot keys).  Rounded to 6 dp so numpy's pairwise summation
     and the oracle's sequential SUM agree."""
-    gini = F.pandas_udf(_gini_np, "double", F.PandasUDFType.GROUPED_AGG)
+    gini = F.pandas_udf(_gini_np, "double")
     # Spark forbids mixing GROUPED_AGG pandas UDFs with JVM aggregates in
     # one agg (INVALID_PANDAS_UDF_PLACEMENT), so the row count is a second
     # pandas aggregate over the same Arrow batch.
-    n = F.pandas_udf(lambda v: len(v), "long", F.PandasUDFType.GROUPED_AGG)
+    n = F.pandas_udf(_count, "long")
     orders = load(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
@@ -248,8 +252,8 @@ _CUSUM_SCHEMA = "user_id long, max_cusum double, n_over long"
 def _cusum_partition(batches) -> "pd.DataFrame":
     """Sequential one-sided CUSUM fold over a PARTITION of events sorted
     by (user_id, ts, event_id) — the iterator/mapInPandas form of the
-    per-group fold (guide §4: per-group machinery, not the fold, was the
-    cost; see events_cusum_pandas).
+    per-group fold (per-group machinery, not the fold, is the cost; see
+    events_cusum_pandas).
 
     Plain-Python loop on purpose: the recursion S_i = max(0, S_{i-1} +
     x_i - k) is what no window frame can express (each value depends on
@@ -305,7 +309,7 @@ def events_cusum_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-entity imperative state is the legitimate use of Python in the
     row path.
 
-    r15 execution form (guide §4.5): ``mapInPandas`` over partitions
+    Execution form: ``mapInPandas`` over partitions
     shuffle-sorted by (user_id, ts, event_id), one carry-state fold per
     partition, instead of ``groupBy().applyInPandas`` — the grouped-map
     path built one pandas frame (plus a result frame and a sort_values)
@@ -338,8 +342,21 @@ def events_cusum_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, hr, c): the per-type hourly event counts as DOUBLE —
+    the series every sequential-recursion fold below consumes."""
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(
+            "event_type",
+            F.date_trunc("hour", F.col("ts")).alias("hr"),
+        )
+        .agg(F.count(F.lit(1)).cast("double").alias("c"))
+    )
+
+
 # ---------------------------------------------------------------------------
-# Holt linear (double exponential) smoothing via applyInPandas (round 6)
+# Holt linear (double exponential) smoothing via applyInPandas
 # ---------------------------------------------------------------------------
 
 _HOLT_SCHEMA = (
@@ -417,20 +434,13 @@ def events_holt_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     (raw events -> |types|x|hours| rows); the Arrow group fold is
     O(hours) per type with O(1) state.  Output: one row per event type
     (level / trend / one-step forecast / SSE)."""
-    cnt = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
+    cnt = _hourly_counts(spark, sf_dir)
     return cnt.groupBy("event_type").applyInPandas(_holt_group, _HOLT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Holt-Winters additive (triple exponential) smoothing via applyInPandas
-# (round 7) — the THIRD sequential-recursion certification, now with
+# Holt-Winters additive (triple exponential) smoothing via applyInPandas —
+# the THIRD sequential-recursion certification, now with
 # VECTOR state: level, trend, and a 24-slot seasonal array all depend on
 # the previous smoothed state.
 # ---------------------------------------------------------------------------
@@ -527,21 +537,14 @@ def events_holt_winters_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to Holt — one full-data shuffle to the
     |types| x |hours| rollup, then an O(hours) Arrow fold with O(m)
     state per type."""
-    cnt = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
+    cnt = _hourly_counts(spark, sf_dir)
     return cnt.groupBy("event_type").applyInPandas(
         _holt_winters_group, _HW_SCHEMA
     )
 
 
 # ---------------------------------------------------------------------------
-# Kalman local-level filter via applyInPandas (round 7) — the FOURTH
+# Kalman local-level filter via applyInPandas — the FOURTH
 # sequential-recursion certification, and the first with a TIME-VARYING
 # gain: K_t = P/(P+R) changes every step, so unlike CUSUM/Holt/HW the
 # recursion is not a fixed linear fold.
@@ -609,19 +612,12 @@ def events_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the Holt family's — one shuffle to the hourly rollup,
     O(hours) Arrow fold, O(1) state per type."""
-    cnt = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
+    cnt = _hourly_counts(spark, sf_dir)
     return cnt.groupBy("event_type").applyInPandas(_kalman_group, _KALMAN_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# EWMA fast/slow crossover via applyInPandas (round 8) — the FIFTH
+# EWMA fast/slow crossover via applyInPandas — the FIFTH
 # sequential-recursion certification: two coupled exponential folds plus a
 # sign-state crossing counter, none expressible as a window frame.
 # ---------------------------------------------------------------------------
@@ -689,19 +685,12 @@ def events_ewma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly pre-aggregate is the only full-data shuffle; the
     Arrow group fold is O(hours) per type with O(1) state."""
-    cnt = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
+    cnt = _hourly_counts(spark, sf_dir)
     return cnt.groupBy("event_type").applyInPandas(_ewma_group, _EWMA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Page-Hinkley drift detector via applyInPandas (round 8) — the SIXTH
+# Page-Hinkley drift detector via applyInPandas — the SIXTH
 # sequential-recursion certification: cumulative deviation with a running
 # minimum and an alarm latch.
 # ---------------------------------------------------------------------------
@@ -767,14 +756,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly rollup -> 5-row mean broadcast -> O(hours)
     Arrow fold per type with O(1) state."""
-    cnt = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-    )
+    cnt = _hourly_counts(spark, sf_dir)
     mu = cnt.groupBy("event_type").agg(
         F.round(F.sum("c") / F.count(F.lit(1)), 6).alias("mu")
     )

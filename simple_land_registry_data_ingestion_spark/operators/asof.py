@@ -147,13 +147,11 @@ def join_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def join_asof_tolerance(
-    spark: SparkSession, sf_dir: str, tolerance_s: int = 7200
-) -> DataFrame:
+def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join with TOLERANCE (pandas ``merge_asof(tolerance=...)``
     semantics) between two LARGE event streams: each purchase matches the
     same user's most recent PRIOR click, but only if that click is within
-    ``tolerance_s`` seconds — older matches become NULL, exactly how a
+    7200 seconds — older matches become NULL, exactly how a
     stale quote must not price a trade.
 
     This is the documented large-right-side composition from this
@@ -189,7 +187,7 @@ def join_asof_tolerance(
     lag_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
         F.col("lc.c_ts").cast("timestamp")
     )
-    within = F.col("lc").isNotNull() & (lag_us <= tolerance_s * 1_000_000)
+    within = F.col("lc").isNotNull() & (lag_us <= 7200 * 1_000_000)
     return (
         enriched.where(F.col("event_type") == "purchase")
         .select(
@@ -273,9 +271,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def join_asof_forward(
-    spark: SparkSession, sf_dir: str, tolerance_s: int = 3600
-) -> DataFrame:
+def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join with direction='forward' — the fourth merge_asof
     direction, completing the matrix next to backward (join_asof_rates),
     tolerance (join_asof_tolerance), and nearest (join_asof_nearest):
@@ -285,7 +281,7 @@ def join_asof_forward(
     allow_exact_matches=False) semantics.
 
     Same one-shuffle interleaved-window shape as the nearest variant,
-    with one refinement (r9 advice: ROWS BETWEEN 1 FOLLOWING alone let
+    with one refinement (ROWS BETWEEN 1 FOLLOWING alone would let
     an equal-timestamp click that happened to sort later match at gap
     0): the window orders by (ts, is_purchase, event_id) so every
     equal-timestamp click sorts BEFORE the purchase and falls outside
@@ -321,7 +317,7 @@ def join_asof_forward(
     # the microsecond tolerance must be computed in LONG: 3600 * 1e6
     # overflows int32 under ANSI mode
     hit = F.col("gap_us").isNotNull() & (
-        F.col("gap_us") <= F.lit(int(tolerance_s) * 1_000_000).cast("long")
+        F.col("gap_us") <= F.lit(3600 * 1_000_000).cast("long")
     )
     return p.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_purchases"),

@@ -88,11 +88,11 @@ def shingle_table(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFra
     and collect_set dedupes on its own.  Only consumers that COUNT rows
     (exact Jaccard intersections) need the distinct.
 
-    r12 rewrite (the winnowing lesson applied to the engine's hottest
-    emission path): the array-HOF form assembled every n-gram inside an
-    interpreted ``transform`` lambda — higher-order functions never
-    enter whole-stage codegen, so shingle assembly was the CPU floor of
-    all 13 consumers.  This form posexplodes the words and assembles
+    Why a window form (the winnowing lesson applied to the engine's
+    hottest emission path): an array-HOF form assembles every n-gram
+    inside an interpreted ``transform`` lambda — higher-order functions never
+    enter whole-stage codegen, so shingle assembly would be the CPU floor
+    of all 13 consumers.  This form posexplodes the words and assembles
     each n-gram with ``lead()`` over one (doc_id, pos) sort — every
     expression codegen'd; a row survives exactly when its last word
     exists, i.e. the same size-n windows the array form emitted.  The
@@ -123,9 +123,9 @@ def shingle_table(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFra
     return sh.distinct() if distinct else sh
 
 
-def shingle_table_nowindow(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
+def shingle_table_nowindow(docs: DataFrame, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) with NO doc-keyed exchange: n-grams assembled by
-    zipping ``n`` shifted slices of the word array (one slice per row, a
+    zipping n = 3 shifted slices of the word array (one slice per row, a
     2-concat interpreted lambda per element), then exploded.
 
     Trade-off vs ``shingle_table`` (the default emission): shingle_table's
@@ -138,6 +138,7 @@ def shingle_table_nowindow(docs: DataFrame, n: int = 3, distinct: bool = True) -
     median 4.69 -> 3.75 s, identical rows; emission alone 0.78 -> 0.33 s).
     Docs with < n words produce empty slices and emit nothing — the same
     rows shingle_table keeps."""
+    n = 3
     ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     d = fan_out(docs).select("doc_id", ws.alias("ws"))
     k = F.greatest(F.size(F.col("ws")) - F.lit(n - 1), F.lit(0))
@@ -167,8 +168,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     Non-distinct shingles: min over the multiset equals min over the set,
     so no shingle dedup is needed.
 
-    Plan (r12, reversing the r9 array form with the measurement that
-    r9's shape lacked): the r9 "zero-shuffle scan-stage projection" ran
+    Plan: a "zero-shuffle scan-stage projection" array form would run
     every md5 inside an interpreted ``transform`` lambda — 6 interpreted
     md5 calls per shingle, outside whole-stage codegen, which made
     signature generation the CPU floor of the whole minhash family.
@@ -177,8 +177,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     min-aggregates — md5 as a TOP-LEVEL codegen projection, map-side
     partial min, and a doc-count-sized exchange (fan_out leaves each
     doc's shingles in ONE partition, so the partial collapses to one
-    row per doc per component before the wire; r9's "shuffle of the
-    widest table" objection assumed no combine).  Docs with < 3 words
+    row per doc per component before the wire; the "shuffle of the
+    widest table" objection assumes no combine).  Docs with < 3 words
     emit no shingle rows and drop out of the groupBy exactly as the
     array form's word-count filter dropped them.  A/B on the full
     candidate build: cold 7.9 -> 2.6 s / warm equal at sf0.1,
@@ -203,7 +203,6 @@ def minhash_band_buckets(sig: DataFrame) -> DataFrame:
 
 def bucket_pairs(
     grouped: DataFrame,
-    id_col: str = "ids",
     out_a: str = "doc_a",
     out_b: str = "doc_b",
     max_bucket_size: int | None = None,
@@ -230,7 +229,7 @@ def bucket_pairs(
     shuffled payload is the sum of tail lengths (n^2/2 ids per hot bucket)
     — the same rows the flat path would emit, just redistributed before the
     quadratic work instead of after."""
-    ids = F.col(id_col)
+    ids = F.col("ids")
     if max_bucket_size is not None:
         ids = F.slice(ids, 1, max_bucket_size)
 
@@ -265,7 +264,7 @@ def bucket_pairs(
     return small.unionByName(big)
 
 
-#: Default lossless hot-bucket spread for the REGISTERED minhash entries:
+#: Lossless hot-bucket spread for the REGISTERED minhash entries:
 #: buckets above this size keep all their pairs but the quadratic expansion
 #: is redistributed across the cluster (see bucket_pairs).
 DISTRIBUTE_THRESHOLD = 256
@@ -274,7 +273,6 @@ DISTRIBUTE_THRESHOLD = 256
 def minhash_candidate_pairs(
     docs: DataFrame,
     max_bucket_size: int | None = None,
-    distribute_threshold: int | None = DISTRIBUTE_THRESHOLD,
 ) -> DataFrame:
     """Near-duplicate CANDIDATE pairs: docs sharing at least one LSH band.
 
@@ -285,7 +283,7 @@ def minhash_candidate_pairs(
     subtree per side — measured 2x on this pipeline) and keeps the
     quadratic strictly in-bucket, which is the LSH contract.
     ``max_bucket_size`` bounds the in-bucket blowup (lossy truncation);
-    ``distribute_threshold`` (on by default) spreads oversized buckets'
+    buckets over DISTRIBUTE_THRESHOLD ids spread their
     pair expansion across the cluster LOSSLESSLY (see bucket_pairs)."""
     buckets = minhash_band_buckets(minhash_signatures(docs))
     grouped = buckets.groupBy("band_key").agg(
@@ -294,7 +292,7 @@ def minhash_candidate_pairs(
     return bucket_pairs(
         grouped,
         max_bucket_size=max_bucket_size,
-        distribute_threshold=distribute_threshold,
+        distribute_threshold=DISTRIBUTE_THRESHOLD,
     ).distinct()
 
 
@@ -309,9 +307,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_candidate_pairs(load(spark, sf_dir, "documents"))
 
 
-def dedup_jaccard_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard scored ONLY on MinHash-LSH candidate pairs
     — the composition that scales: candidate generation is O(n) bucketed
     (never all-pairs, never a shingle self-join whose stop-shingle hot keys
@@ -323,7 +319,7 @@ def dedup_jaccard_lsh(
     set together, and the aggregated frame is checkpoint-materialized so all
     three consumers (band buckets, pair side A, pair side B) read it once —
     column pruning specializes the aggregate per consumer, which defeats
-    plain exchange reuse (r11; measured ~2x over building signatures and
+    plain exchange reuse (measured ~2x over building signatures and
     sets in separate pipelines, and ~10% more over relying on reuse).  The
     intersection is computed per pair with array_intersect on the two sets —
     exact integer set sizes, so jac = |A∩B| / (|A|+|B|-|A∩B|) is
@@ -335,7 +331,7 @@ def dedup_jaccard_lsh(
     scored = scored.withColumn(
         "jaccard", F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 6)
     )
-    return scored.where(F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= 0.30).select(
         "doc_a", "doc_b", "jaccard"
     )
 
@@ -359,7 +355,7 @@ def _minhash_candidate_sets(docs: DataFrame) -> DataFrame:
             *sig_aggs,
         )
         .withColumn("n_sh", F.size(F.col("sh_set")).cast("long"))
-        # materialize ONCE (r11, the text_minhash_jaccard_estimate
+        # materialize ONCE (the text_minhash_jaccard_estimate
         # lesson): the frame feeds three consumers with DIFFERENT pruned
         # columns (band buckets read h0..h5, each pair side reads
         # sh_set/n_sh), so column pruning specializes the aggregate per
@@ -388,9 +384,7 @@ def _minhash_candidate_sets(docs: DataFrame) -> DataFrame:
     return cand.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def dedup_containment_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.50
-) -> DataFrame:
+def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC near-dup scoring on MinHash-LSH candidates: containment
     c(A in B) = |A∩B| / |A| (and the reverse) — the measure that catches
     SUBSET duplication Jaccard misses: a paragraph quoted whole inside a
@@ -402,6 +396,7 @@ def dedup_containment_lsh(
     candidate pairs.  Emitted when EITHER direction crosses the threshold;
     both directions are reported so the caller can tell subset from
     superset."""
+    threshold = 0.50
     scored = _minhash_candidate_sets(load(spark, sf_dir, "documents"))
     inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("long")
     out = scored.select(
@@ -442,7 +437,7 @@ def ngram_jaccard_pairs(
 
     Plan: ONE shuffle of the shingle table (groupBy shingle over the RAW
     exploded multiset — collect_set dedupes per-doc repeats in the
-    map-side partial, so the old standalone distinct shuffle is gone, r11)
+    map-side partial, so no standalone distinct shuffle is needed)
     serves three purposes at once — the df cap is just a bucket-size
     filter on that aggregate, per-doc set sizes re-derive from the
     surviving buckets (exploded + re-counted, reusing the exchange), and
@@ -453,9 +448,9 @@ def ngram_jaccard_pairs(
     pipeline (measured +1.7 s at sf0.1).  Integer set sizes -> double
     division, deterministic across engines.
 
-    r15 (the tfidf w-build cuts applied here — this query's FIRST
-    aggregation is SHINGLE-keyed, so the r13 emission rule says
-    shingle_table's doc_id exchange bought nothing): emission via
+    The tfidf w-build cuts apply here (this query's FIRST aggregation is
+    SHINGLE-keyed, so by the emission rule shingle_table's doc_id
+    exchange buys nothing): emission via
     shingle_table_nowindow, and the shingle crosses the groupBy exchange
     as an xxhash64 LONG — shingle identity is equality-only here (the
     bucket key is discarded after grouping); a collision would merge two
@@ -464,8 +459,7 @@ def ngram_jaccard_pairs(
     collision odds are BENCH-SCALE (~1e6 distinct shingles); by the
     64-bit birthday bound a collision is near-certain past ~5e9 distinct
     shingles, so an at-scale deployment of this exact-Jaccard operator
-    must widen the bucket key to 128 bits (e.g. both md5 halves) —
-    ADVICE r15."""
+    must widen the bucket key to 128 bits (e.g. both md5 halves)."""
     grouped = (
         shingle_table_nowindow(docs, distinct=False)
         .groupBy(F.xxhash64("shingle").alias("shingle"))
@@ -494,12 +488,10 @@ def ngram_jaccard_pairs(
     )
 
 
-def dedup_ngram_jaccard(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: exact n-gram Jaccard with the stop-shingle guard
     active (df cap = MAX_SHINGLE_DF; oracle applies the identical filter)."""
-    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold)
+    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), 0.30)
 
 
 # ---------------------------------------------------------------------------
@@ -598,7 +590,7 @@ def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     to themselves); is_canonical marks the per-cluster survivor a dedup
     pipeline would keep."""
     docs = load(spark, sf_dir, "documents")
-    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
+    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate
     comps = connected_components(
         docs.select("doc_id"), edges, node_col="doc_id",
         src_col="doc_a", dst_col="doc_b",
@@ -615,12 +607,12 @@ def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _simhash_votes_pandas(iterator):
-    """Per-partition SimHash vote fold (r16 — guide §4.2: hand whole
-    batches to vectorized native code instead of interpreted JVM
-    expression folds).  Input rows are ``(doc_id, hs)`` where ``hs`` is
-    the doc's DISTINCT token array — tokenization (split/lower/trim/
+    """Per-partition SimHash vote fold (whole batches go to vectorized
+    native code instead of interpreted JVM expression folds).  Input
+    rows are ``(doc_id, hs)`` where ``hs`` is the doc's DISTINCT token
+    array — tokenization (split/lower/trim/
     array_distinct) stays in Spark so its semantics are byte-identical
-    to the r10–r15 expression form; Python only md5-hashes the tokens it
+    to an expression form; Python only md5-hashes the tokens it
     is handed and counts bit votes in numpy.  Exactness: md5 over UTF-8
     bytes matches F.md5; votes are exact int64 counts; bit j of the
     fingerprint is set iff 2*votes_j > n_tok — the identical sign rule.
@@ -666,20 +658,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query materializes the fingerprints themselves (the verifiable,
     deterministic core).
 
-    Plan (r16; previously r9 -> r10 -> r11 expression folds): still a pure
-    SCAN-STAGE map with ZERO shuffles, but the per-token vote fold now
-    runs as numpy inside ``mapInPandas`` (guide §4.2) instead of an
+    Plan: a pure SCAN-STAGE map with ZERO shuffles; the per-token vote
+    fold runs as numpy inside ``mapInPandas`` instead of an
     interpreted HOF ``aggregate`` — the fold is ~150 interpreted
     expression-node evaluations per token in the JVM vs a handful of
     vectorized numpy ops per doc in Python.  Tokenization
     (split/lower/trim/array_distinct) stays in Spark, so only the
-    md5+vote arithmetic crossed the boundary and the outputs are
+    md5+vote arithmetic crosses the boundary and the outputs are
     bit-identical (pinned against the retained expression-fold reference
     in tests/test_round16_ops.py at 2 SFs, and value-checked vs the
     DuckDB oracle at 3 SFs).  Measured interleaved at sf0.1: 0.81 -> 0.47
     s (the codegen explode+packed-sum variant was ALSO measured and LOST
-    at 1.49 s — wide many-buffer aggregates again, the r15 k-means
-    refutation).  At 100 TB this stays shuffle-free and partition-
+    at 1.49 s — wide many-buffer aggregates, the same loss measured for
+    k-means).  At 100 TB this stays shuffle-free and partition-
     parallel; per-batch memory is bounded by Arrow's maxRecordsPerBatch
     and the 2^63 vote bound by int64 counts."""
     docs = load(spark, sf_dir, "documents")
@@ -697,7 +688,7 @@ def dedup_simhash_pairs(
     nibble-distance verify — the full SimHash dedup pipeline.
 
     Banding: the 64-bit fingerprint splits into ``max_nibble_distance + 1``
-    near-equal bands (r9: the band count FOLLOWS the threshold — the
+    near-equal bands (the band count FOLLOWS the threshold — the
     pigeonhole guarantee needs exactly d+1 bands for distance <= d, so a
     tighter verify earns LONGER, more selective bands: distance 2 gets 3
     bands of 24/20/20 bits instead of 4 of 16, cutting spurious band
@@ -713,32 +704,32 @@ def dedup_simhash_pairs(
     collide heavily in bands (shared stopwords bias the bits), which is
     exactly why the cheap verify stage exists.
 
-    Plan shape (one aggregation, zero joins, r16 emission rewrite): the
+    Plan shape (one aggregation, zero joins): the
     fingerprint subtree is ``localCheckpoint(eager=True)``-materialized
-    once (it used to feed three consumers and partially recompute; same
+    once (it feeds three consumers and would partially recompute; same
     pattern as connected_components).  Each doc's fingerprint is packed
     into two 32-bit longs (a full 64-bit signed cast would overflow
     under ANSI when the top bit is set), band buckets are keyed by
     ``(band_index, band_value_as_long)`` — exact, not hashed: every band
     is <= 15 hex chars, so ``conv`` fits a signed long and the band
-    exchange carries two scalars instead of a string (guide §2.3) — and
+    exchange carries two scalars instead of a string — and
     the verify runs INSIDE the pair-emission lambda: the candidate set
     is FILTERED to in-threshold pairs before any pair struct or row
     exists (measured 2.4M candidate structs -> 247k at sf0.1; guide
     §1.2 "don't compute things you throw away").  The same lambda keeps
     a pair only in its FIRST colliding band (earlier-band equality via
     constant bit masks on the xor), which makes the emitted pair set
-    globally unique by construction — the old output-wide ``distinct``
-    exchange is gone.  r16 interleaved A/B at sf0.1 (pair set identical
-    at 3 SFs): 2.28/2.42 -> 2.12/2.34 s for the emission alone, 1.76 s
-    combined with the r16 fingerprint rewrite.  The lambda predicates
+    globally unique by construction — no output-wide ``distinct``
+    exchange.  Interleaved A/B at sf0.1 (pair set identical at 3 SFs):
+    2.28/2.42 -> 2.12/2.34 s for the emission alone, 1.76 s combined
+    with the mapInPandas fingerprint.  The lambda predicates
     are SQL-text expressions (``F.expr``) because shiftright inside
-    Python-built HOF lambdas trips a py4j bug (r10 note)."""
+    Python-built HOF lambdas trips a py4j bug."""
     fp = dedup_simhash(spark, sf_dir).localCheckpoint(eager=True)
     if max_nibble_distance > 15:
         # 16 one-nibble bands can ALL differ for a pair at distance 16 —
         # the pigeonhole perfect-recall guarantee needs d+1 <= 16 bands
-        # (r9 advice: clamping silently dropped in-threshold pairs)
+        # (clamping would silently drop in-threshold pairs)
         raise ValueError(
             "dedup_simhash_pairs: max_nibble_distance must be <= 15 for "
             f"pigeonhole-complete banding over 16 nibbles, got {max_nibble_distance}"
@@ -903,10 +894,7 @@ def shared_minhash_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def dedup_embedding_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, bucketed: sign-LSH bucket -> exact in-bucket
     cosine -> threshold.  The registered PRIMARY embedding near-dup query;
     dedup_embedding_cosine is the brute-force verification baseline.
@@ -916,8 +904,8 @@ def dedup_embedding_lsh(
     layout is O(n) and the quadratic is strictly in-bucket; at 100 TB the
     bucket is the at-rest partition key and this whole job is
     partition-local.  Recall knob: fewer planes or multi-band bucketing
-    (more candidates); ``max_bucket_size`` bounds adversarial hot buckets
-    (see bucket_pairs).  Norms are computed once per vector, joined back by
+    (more candidates); bucket_pairs' ``max_bucket_size`` can bound
+    adversarial hot buckets.  Norms are computed once per vector, joined back by
     id — never re-folded per pair."""
     from simple_land_registry_data_ingestion_spark.operators.similarity import (
         signature_bits,
@@ -934,9 +922,7 @@ def dedup_embedding_lsh(
         F.array_sort(F.collect_list("vec_id")).alias("ids")
     )
     # Buckets partition the vectors, so pairs are already unique.
-    cand = bucket_pairs(
-        grouped, out_a="vec_a", out_b="vec_b", max_bucket_size=max_bucket_size
-    )
+    cand = bucket_pairs(grouped, out_a="vec_a", out_b="vec_b")
     va = with_bucket.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"),
         F.col("nrm").alias("na"),
@@ -950,13 +936,13 @@ def dedup_embedding_lsh(
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= 0.30)
     )
 
 
 def dedup_embedding_cosine(
     spark: SparkSession, sf_dir: str, threshold: float = 0.30,
-    max_vectors: int = 8000, n_blocks: int = 16,
+    max_vectors: int = 8000,
 ) -> DataFrame:
     """Near-duplicate vectors: pairs with cosine >= threshold.
 
@@ -967,19 +953,19 @@ def dedup_embedding_cosine(
     BASELINE only; the registered primary near-dup path is
     dedup_embedding_lsh (sign-LSH buckets, exact cosine in-bucket).
 
-    Plan (r13 rewrite): BLOCKED GEMM via cogrouped applyInPandas.  The r12
-    shape (theta self-join + per-pair interpreted ``aggregate`` fold)
-    evaluated the dot product one interpreted expression-tree walk per
-    PAIR — n^2 * dim interpreter steps, the exact anti-pattern the r12
-    shingle rewrite eliminated, and it regressed the driver floor ~2x.
+    Plan: BLOCKED GEMM via cogrouped applyInPandas.  A theta self-join
+    + per-pair interpreted ``aggregate`` fold evaluates the dot product
+    one interpreted expression-tree walk per PAIR — n^2 * dim
+    interpreter steps, the anti-pattern shingle_table avoids, and it
+    measured ~2x slower on the driver floor.
     Dense all-pairs scoring is the one place built-in column expressions
     genuinely lose to vectorized Python: each (block_a <= block_b) block
     pair becomes ONE Arrow-batched task computing its sub-Gram matrix with
     a float64 BLAS matmul — n^2 * dim FLOPs at memory bandwidth instead of
     interpreter dispatch (2000 vectors x dim 64 = 0.25 GFLOP, milliseconds
-    in numpy vs seconds interpreted).  Each vector ships to ``n_blocks``
-    partner groups, so the shuffle is n_blocks * corpus-sized — linear,
-    with a knob: pick n_blocks ~ cluster cores / replication tolerance.
+    in numpy vs seconds interpreted).  Each vector ships to n_blocks = 16
+    partner groups, so the shuffle is n_blocks * corpus-sized — linear;
+    n_blocks ~ cluster cores / replication tolerance.
     Pair orientation: a pair lands in exactly one (min_blk, max_blk)
     group and the in-task ``id_a < id_b`` mask emits it once.  The UDF
     pre-filters at (threshold - 1e-6); the EXACT contract — HALF_UP
@@ -997,10 +983,11 @@ def dedup_embedding_cosine(
     so an oversized input fails in the scan stage, not after the shuffle.
     Above the cap, use dedup_embedding_lsh.
 
-    The UDF pre-filter slack is 1e-6 (r14, ADVICE r13): HALF_UP rounding
-    at 6 dp admits raw cosines down to threshold - 5e-7, so the slack
-    must cover that whole band — the previous 1e-9 could drop a boundary
-    pair the oracle admits."""
+    The UDF pre-filter slack is 1e-6: HALF_UP rounding at 6 dp admits
+    raw cosines down to threshold - 5e-7, so the slack must cover that
+    whole band — a 1e-9 slack could drop a boundary pair the oracle
+    admits."""
+    n_blocks = 16
     import pandas as pd  # local import: keep module import light
 
     guard_msg = (
@@ -1038,9 +1025,9 @@ def dedup_embedding_cosine(
 
     left = _guarded_side("blk_a")
     right = _guarded_side("blk_b")
-    # Slack must cover the WHOLE band HALF_UP rounding can admit (r13
-    # ADVICE): round(cos, 6) >= t accepts raw cosines down to t - 5e-7,
-    # so a 1e-9 pre-cut silently dropped boundary pairs in
+    # Slack must cover the WHOLE band HALF_UP rounding can admit:
+    # round(cos, 6) >= t accepts raw cosines down to t - 5e-7, so a
+    # 1e-9 pre-cut would silently drop boundary pairs in
     # [t - 5e-7, t - 1e-9) before the exact Spark-side filter could judge
     # them.  1e-6 strictly contains the rounding band; the exact filter
     # below still discards every false admit.
@@ -1103,12 +1090,7 @@ def dedup_embedding_cosine(
 # ---------------------------------------------------------------------------
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 3,
-    min_overlap: int = 2,
-) -> DataFrame:
+def decontaminate(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing >=
     ``min_overlap`` distinct word n-gram shingles with an evaluation set.
 
@@ -1122,9 +1104,9 @@ def decontaminate(
       degrades gracefully to a shuffled hash join on the shingle key;
     - the train side shingles once (distinct within doc), LEFT-joins the
       broadcast eval set as a hit MARKER, and computes shingle count and
-      overlap count in ONE doc-keyed aggregation (r12: the r11 shape ran
-      two separate aggregations — totals and hits — over the same
-      shingle frame plus a final doc-keyed join to reunite them; the
+      overlap count in ONE doc-keyed aggregation (rather than two
+      separate aggregations — totals and hits — over the same shingle
+      frame plus a final doc-keyed join to reunite them; the
       conditional count folds all of that into a single shuffle after
       the distinct.  A/B: 2.35 -> 1.45 s at sf0.1, 9.3 -> 5.4 s at 10x,
       rows identical).
@@ -1134,6 +1116,7 @@ def decontaminate(
     of the doc's shingles that collide with the eval set).  Documents with
     fewer than ``n`` words have no shingles and are trivially clean.
     """
+    n = 3
     tr_sh = shingle_table(train, n=n)  # distinct: overlap COUNTS rows
     ev_sh = (
         shingle_table(eval_docs, n=n)
@@ -1149,7 +1132,7 @@ def decontaminate(
             # count() skips nulls, so this counts exactly the marked rows
             F.count("__hit").alias("n_overlap"),
         )
-        .where(F.col("n_overlap") >= min_overlap)
+        .where(F.col("n_overlap") >= 2)
     )
     containment = F.col("n_overlap").cast("double") / F.col("n_shingles")
     return agg.select(
@@ -1196,9 +1179,7 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_incremental_minhash(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup: score a new batch against the existing corpus
     without ever comparing corpus x corpus.
 
@@ -1267,7 +1248,7 @@ def dedup_incremental_minhash(
     scored = scored.withColumn(
         "jaccard", F.round(inter / (F.col("n_c") + F.col("n_i") - inter), 6)
     )
-    return scored.where(F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= 0.30).select(
         "inc_doc", "corpus_doc", "jaccard"
     )
 
@@ -1361,7 +1342,7 @@ def dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: triangle/clustering-coefficient triage over the
     MinHash-LSH candidate graph (every document, zeros for isolated)."""
     docs = load(spark, sf_dir, "documents")
-    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
+    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate
     return triangle_stats(
         docs.select("doc_id"), edges, node_col="doc_id",
         src_col="doc_a", dst_col="doc_b",
@@ -1369,7 +1350,7 @@ def dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_semdedup(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.32,
+    spark: SparkSession, sf_dir: str,
     row_block: int = 2048,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by
@@ -1393,6 +1374,7 @@ def dedup_semdedup(
        id — deterministic, and the paper's keep-one-per-group semantics).
 
     Output: every vector with its cluster and the keep/drop decision."""
+    threshold = 0.32
     from simple_land_registry_data_ingestion_spark.operators.similarity import (
         kmeans_refine_centroids,
     )
@@ -1413,7 +1395,7 @@ def dedup_semdedup(
             6,
         ).alias("c_cos"),
     )
-    # argmax as a max_by HASH AGGREGATE, not a sort window (r13): the
+    # argmax as a max_by HASH AGGREGATE, not a sort window: the
     # ordering struct (c_cos desc, centroid_id asc via negation) is the
     # same total order the row_number window applied, but the aggregate
     # map-side-combines each vector's K centroid rows down to one before
@@ -1437,23 +1419,23 @@ def dedup_semdedup(
         )
         .localCheckpoint(eager=True)
     )
-    # In-cluster pair scoring as per-cluster GEMM (r13, the
-    # dedup_embedding_cosine lesson): the self-join form evaluated an
+    # In-cluster pair scoring as per-cluster GEMM (the
+    # dedup_embedding_cosine lesson): a self-join form evaluates an
     # interpreted ``aggregate`` fold per PAIR — n^2/k * dim interpreter
     # steps.  Each cluster is one applyInPandas task computing its own
     # sub-Gram matrix with a float64 numpy matmul and pre-filtering at
     # (threshold - 1e-6) — the slack covers the whole band HALF_UP 6-dp
-    # rounding can admit (raw cosines down to t - 5e-7; ADVICE r13: the
-    # old 1e-9 slack could drop boundary pairs the oracle admits); the
+    # rounding can admit (raw cosines down to t - 5e-7; a 1e-9 slack
+    # could drop boundary pairs the oracle admits); the
     # EXACT contract — HALF_UP round to 6 dp then >= threshold — is
     # applied Spark-side on the surviving pairs, so rounding semantics
     # match the oracle and the slack only admits boundary pairs for the
     # exact filter to re-judge.  Cluster size is the partition-local
     # bound exactly as in the join form — and the gram is computed in
-    # ROW BLOCKS of 2048 (ADVICE r13): a degenerate cluster of c vectors
+    # ROW BLOCKS of 2048: a degenerate cluster of c vectors
     # would otherwise hold an O(c^2) float64 matrix in one Python worker;
     # blocking caps resident memory at O(2048 * c).  Results are
-    # identical up to BLAS reproducibility (ADVICE r14: dgemm may block/
+    # identical up to BLAS reproducibility (dgemm may block/
     # thread differently per matrix shape, so a dot product can drift an
     # ulp between block sizes); any such drift is absorbed by the 1e-6
     # pre-cut slack plus the Spark-side exact 6-dp filter below — an
@@ -1623,7 +1605,7 @@ def dedup_pagerank_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties broken by doc_id in consumers; full table out so the oracle hash
     covers every rank, not just the head."""
     docs = load(spark, sf_dir, "documents")
-    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
+    edges = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate
     pr = pagerank_centrality(docs.select("doc_id"), edges)
     return pr.select(F.col("node").alias("doc_id"), F.col("rank").alias("pagerank"))
 
@@ -1693,7 +1675,7 @@ def build_prefix_index(docs: DataFrame) -> DataFrame:
     read-time slice, so the index is threshold-independent).
 
     Tokens are xxHash64 HASHES of the word 3-gram shingles, not the
-    strings (r14): the index's payload is arrays of ~25-char strings
+    strings: the index's payload is arrays of ~25-char strings
     otherwise, and the hash cuts the doc-keyed shuffle, the at-rest
     parquet, and every downstream array_intersect to 8 bytes/token.
     Exactness modulo 64-bit collisions — the same accepted risk class as
@@ -1707,10 +1689,10 @@ def build_prefix_index(docs: DataFrame) -> DataFrame:
     per-doc repeats in the map-side partial) replaces the old distinct
     -> df-aggregate -> join chain: the raw exploded shingles shuffle
     ONCE, df is just the bucket size, and the (df, h, doc) rows explode
-    back out shuffle-free ahead of the doc-keyed aggregate (r11).
+    back out shuffle-free ahead of the doc-keyed aggregate.
     Emission is the NO-WINDOW zip form: this pipeline's first
     aggregation is shingle-keyed, so shingle_table's doc_id exchange +
-    sort buys nothing back here (r13 interleaved A/B: median 4.69 ->
+    sort buys nothing back here (interleaved A/B: median 4.69 ->
     3.75 s)."""
     buckets = (
         shingle_table_nowindow(docs, distinct=False)
@@ -1736,7 +1718,7 @@ def _jaccard_prefix_build(
     docs: DataFrame, threshold: float, positional_filter: bool
 ) -> "_JaccardPrefixParts":
     # LIVE path (tests and ad-hoc corpora): build the index in-query.
-    # EAGERLY localCheckpoint'd (r12): three consumers read this frame
+    # EAGERLY localCheckpoint'd: three consumers read this frame
     # (prefix generation, both wide set fetches), and with a LAZY
     # checkpoint their first concurrent job raced the un-checkpointed
     # subtree and replayed the full shingle-emission + two-aggregation
@@ -1755,7 +1737,7 @@ def _prefix_join_from_index(
     plen = (sz - F.ceil(F.lit(threshold) * sz) + 1).cast("int")
     # posexplode keeps each prefix token's 1-based POSITION in the doc's
     # full df-sorted token list — the input to the positional filter below.
-    # n_sh rides along INTO the bucket structs (r13): the candidate
+    # n_sh rides along INTO the bucket structs: the candidate
     # aggregation then already holds both sizes, so the LENGTH filter
     # needs no join back to per_doc — two narrow probe joins removed.
     prefix = per_doc.select(
@@ -1855,8 +1837,8 @@ def shared_prefix_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rarity-ordered prefix-filter token index at rest —
     ``(doc_id, toks array<struct<df,h>>, n_sh)``, threshold-independent
     (the prefix length is a read-time slice), serving every PPJoin
-    threshold from one corpus pass.  Live producer (r13 accounting
-    rule): ``dedup_prefix_index_build`` pays the benched build."""
+    threshold from one corpus pass.  Live producer (the substrate
+    accounting rule): ``dedup_prefix_index_build`` pays the benched build."""
     return materialized_frame(
         spark,
         sf_dir,
@@ -1865,30 +1847,28 @@ def shared_prefix_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_jaccard_prefix(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: lossless prefix-filtered exact Jaccard join at
     t=0.5; the oracle is the UNPRUNED brute-force join, so a green row
     certifies the completeness guarantee end-to-end.
 
-    r14: reads the token index from the at-rest substrate store (like
+    Reads the token index from the at-rest substrate store (like
     every other lens over a shared expensive frame) instead of
-    rebuilding it per query — the rebuild was this query's whole 10x
-    residual (the index build is emission + two corpus shuffles + an
+    rebuilding it per query — the rebuild would be this query's whole
+    10x residual (the index build is emission + two corpus shuffles + an
     eager checkpoint write, all corpus-linear; the join itself is
     candidate-bounded).  The build cost stays on the scoreboard through
-    the ``dedup_prefix_index_build`` producer row, registered the same
-    round per the r13 substrate accounting rule."""
+    the ``dedup_prefix_index_build`` producer row, per the substrate
+    accounting rule."""
     return _prefix_join_from_index(
-        shared_prefix_index(spark, sf_dir), threshold, True
+        shared_prefix_index(spark, sf_dir), 0.5, True
     ).verified
 
 
 def dedup_prefix_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE producer for the prefix-filter token index: builds the
     rarity-ordered index from the raw corpus in-query (NO store read —
-    the r13 accounting rule: every stored substrate keeps a benched
+    the substrate accounting rule: every stored substrate keeps a benched
     producer so the corpus-pass cost stays certified) and emits per-doc
     index stats the oracle can recompute in SQL:
 
@@ -1980,7 +1960,7 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is corpus-sized, not broadcastable, which is fine — the PAIR side is
     the small one).  least/greatest normalizes the unordered source pair
     so the matrix is upper-triangular."""
-    pairs = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
+    pairs = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate
     srcs = load(spark, sf_dir, "documents").select("doc_id", "source")
     sa = srcs.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a")
@@ -2080,7 +2060,7 @@ def dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_lsh_scurve(spark: SparkSession, sf_dir: str, sample: int = 200) -> DataFrame:
+def dedup_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical LSH S-CURVE certification: on a bounded doc sample, score
     EVERY pair's exact Jaccard, flag whether the banded MinHash made it a
     candidate, and compare the per-decile candidate rate against the
@@ -2095,12 +2075,12 @@ def dedup_lsh_scurve(spark: SparkSession, sf_dir: str, sample: int = 200) -> Dat
     fact, not a docstring claim.
 
     Scale shape: the all-pairs scoring is deliberately bounded to
-    ``sample`` docs (sample^2/2 pairs — an EVALUATION, like
+    200 docs (200^2/2 pairs — an EVALUATION, like
     similarity_recall_at_k, never run corpus-wide); signature and band
     computation reuse the per-doc pipeline.  The theoretical curve uses
     explicit multiplication (q*q*q), not pow(), so both engines produce
     identical doubles."""
-    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < sample)
+    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     sh = shingle_table(docs)
     sets = sh.groupBy("doc_id").agg(
         F.collect_set("shingle").alias("sh_set"),
@@ -2146,7 +2126,7 @@ def dedup_lsh_scurve(spark: SparkSession, sf_dir: str, sample: int = 200) -> Dat
 
 
 # ---------------------------------------------------------------------------
-# Round 6: corpus novelty curve + sparse TF-IDF cosine join
+# Corpus novelty curve + sparse TF-IDF cosine join
 # ---------------------------------------------------------------------------
 
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2195,8 +2175,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_tfidf_cosine(
     spark: SparkSession,
     sf_dir: str,
-    threshold: float = 0.30,
-    df_cap: int = 10,
     docs: DataFrame | None = None,
 ) -> DataFrame:
     """Sparse TF-IDF cosine similarity join via an INVERTED INDEX — the
@@ -2213,7 +2191,7 @@ def dedup_tfidf_cosine(
 
     Scale discipline is candidates-then-verify (the LSH/PPJoin split):
     pair CANDIDATES are generated only inside posting lists with
-    df in [2, df_cap] (stopword-grade lists would go quadratic), but
+    df in [2, 10] (stopword-grade lists would go quadratic), but
     every candidate is then VERIFIED with its FULL cosine over all
     shared terms — so the cap bounds the quadratic without biasing the
     score (a first cut that also dropped capped terms from SCORING went
@@ -2223,11 +2201,11 @@ def dedup_tfidf_cosine(
     filtering is built on.  Hot surviving lists spread through
     bucket_pairs(distribute_threshold).
 
-    Cross-engine float discipline (the whole design problem here), r14
-    form — INTEGER FIXED-POINT with DEFERRED normalization: idf is
+    Cross-engine float discipline (the whole design problem here) —
+    INTEGER FIXED-POINT with DEFERRED normalization: idf is
     quantized to a 1e-6-unit BIGINT (ln may differ by an ulp across
-    libms; the integer quantum is the same guard the old 6-dp round
-    gave), so every weight w_int = tf * idf6 is an exact integer, the
+    libms; the integer quantum is the same guard a 6-dp round
+    gives), so every weight w_int = tf * idf6 is an exact integer, the
     per-doc norm is sqrt of an exact DECIMAL(38,0) sum of squares, and a
     pair's dot product is an exact DECIMAL(38,0) sum of long products
     over its shared terms.  Normalization happens ONCE per surviving
@@ -2235,10 +2213,10 @@ def dedup_tfidf_cosine(
     dot cancelling the two 1e-6-unit norms — instead of once per
     (doc, term) coordinate.  Every float reduction is exact integer
     arithmetic until the final per-pair division, the same trick as the
-    k-means oracles but with three fewer rounding sites: the r13 shape's
-    per-coordinate DOUBLE divide + 6-dp round and per-contribution 9-dp
-    DECIMAL(18,9) round are gone, and with them the full-frame doc_id
-    WINDOW the per-coordinate normalization forced (the norm is now a
+    k-means oracles but with three fewer rounding sites: no
+    per-coordinate DOUBLE divide + 6-dp round and no per-contribution
+    9-dp DECIMAL(18,9) round, and with them no full-frame doc_id
+    WINDOW the per-coordinate normalization would force (the norm is a
     map-side-combined groupBy whose exchange carries |docs| rows, not
     the corpus).  Magnitude bound: w_int <= tf * ln(n)*1e6 keeps the
     long product wa*wb exact below tf ~ 3e2 at ln(n) ~ 12; a 100 TB
@@ -2253,30 +2231,29 @@ def dedup_tfidf_cosine(
     n_docs = docs.agg(
         F.count_distinct("doc_id").cast("double").alias("n_corpus")
     )
-    # df as a KEYED WINDOW over the (doc, term) tf frame (r11, kept):
-    # count(*) OVER (PARTITION BY term) pays the keyed shuffle the
-    # groupBy+join form paid, with no join and no checkpoint barrier —
-    # and the r12 shuffle cut stands: the explode is repartitioned by
+    # df as a KEYED WINDOW over the (doc, term) tf frame:
+    # count(*) OVER (PARTITION BY term) pays the keyed shuffle a
+    # groupBy+join form would, with no join and no checkpoint barrier —
+    # and the explode is repartitioned by
     # TERM before the tf aggregate (hash partitioning on a subset of the
     # grouping keys satisfies the (doc, term) clustering), so the tf
     # aggregate runs partition-local AND the df window reuses the same
     # term partitioning with no exchange.  (The traded-away map-side
     # partial aggregation is ~free here: shingles barely repeat within a
     # doc — pre-/post-aggregate row counts within 4%, measured 2.60M vs
-    # 2.70M at 10x.)  r14 removes the OTHER keyed window: the per-doc
-    # norm no longer runs OVER (PARTITION BY doc_id) on the full frame
-    # (see ``norms`` below), so this repartition is now the query's ONLY
-    # full-frame exchange.
+    # 2.70M at 10x.)  The per-doc norm does not run OVER (PARTITION BY
+    # doc_id) on the full frame (see ``norms`` below), so this
+    # repartition is the query's ONLY full-frame exchange.
     #
-    # r15 (the two measured w-build cuts, A/B'd pre-freeze in r14 and
-    # queued): (1) emission via shingle_table_nowindow — this query's
-    # first aggregation is TERM-keyed after the repartition, so
-    # shingle_table's doc_id exchange + sort bought nothing back (the
-    # r13 emission rule, same as jaccard_prefix); (2) terms cross the
+    # Two measured w-build cuts: (1) emission via
+    # shingle_table_nowindow — this query's first aggregation is
+    # TERM-keyed after the repartition, so shingle_table's doc_id
+    # exchange + sort buys nothing back (the emission rule, same as
+    # jaccard_prefix); (2) terms cross the
     # exchange/window/joins as xxhash64 LONGS, not 25-byte shingle
     # strings — term identity is equality-only here (the idf only needs
-    # df per term), the same ~1e-7/corpus collision class the r14
-    # prefix index documented.  The oracle is untouched: it scores
+    # df per term), the same ~1e-7/corpus collision class the
+    # prefix index documents.  The oracle is untouched: it scores
     # cosine from raw terms, and term identity is all the hash
     # replaces.  A 64-bit collision would merge two terms' posting
     # lists (inflating df and a pair's shared-term count); if this
@@ -2284,7 +2261,7 @@ def dedup_tfidf_cosine(
     # The ~1e-7 odds are BENCH-SCALE (~1e6 distinct terms); past ~5e9
     # distinct terms the 64-bit birthday bound makes a merge
     # near-certain, so an at-scale deployment must widen term identity
-    # to 128 bits (e.g. both md5 halves) — ADVICE r15.
+    # to 128 bits (e.g. both md5 halves).
     tf = (
         shingle_table_nowindow(docs, distinct=False)
         .select("doc_id", F.xxhash64("shingle").alias("term"))
@@ -2295,11 +2272,11 @@ def dedup_tfidf_cosine(
     w_term = Window.partitionBy("term")
     # w_int = tf * idf6: exact 1e-6-unit integer weight (docstring).
     # LAZILY checkpointed for its four consumers (norms, postings, both
-    # verify sides) — the frame is narrower than the r13 unit frame
-    # (one long instead of a 6-dp double + per-row norm).  eager=True
-    # was A/B'd (r14) and lost ~1.5 s at sf0.1: this query's consumers
+    # verify sides) — the frame is narrow (one long per row, not a
+    # 6-dp double + per-row norm).  eager=True
+    # was A/B'd and lost ~1.5 s at sf0.1: this query's consumers
     # run stage-by-stage, never concurrently from a cold start, so the
-    # r12 lazy-race hazard doesn't bite and the eager form only adds an
+    # lazy-race hazard doesn't bite and the eager form only adds an
     # up-front materialization barrier before any downstream stage can
     # overlap.  The >= 3-consumers -> eager rule is therefore scoped: it
     # applies when consumers launch CONCURRENT jobs (jaccard_prefix's
@@ -2320,21 +2297,21 @@ def dedup_tfidf_cosine(
         .localCheckpoint(eager=False)
     )
     # per-doc norm in 1e-6 units: map-side-combined aggregate — the
-    # exchange moves |docs| partial rows, replacing the r13 full-frame
-    # doc_id window (its repartition + sort were this query's second
-    # full-frame exchange)
-    # nrm > 0 guard (ADVICE r14): on a degenerate corpus where a doc's
+    # exchange moves |docs| partial rows, instead of a full-frame
+    # doc_id window (whose repartition + sort would be this query's
+    # second full-frame exchange)
+    # nrm > 0 guard: on a degenerate corpus where a doc's
     # every term has df == n_corpus, all w_int are 0, nrm is 0, and a
     # surviving pair would emit NaN (0/0) — which Spark's NaN ordering
     # would pass through the >= threshold filter.  Free on real corpora
-    # (no zero norms at any tested sf), restores the r13 contract.
+    # (no zero norms at any tested sf).
     norms = w.groupBy("doc_id").agg(
         F.sqrt(
             F.sum((F.col("w_int") * F.col("w_int")).cast("decimal(38,0)"))
             .cast("double")
         ).alias("nrm")
     ).where(F.col("nrm") > 0)
-    postings = w.where((F.col("df") >= 2) & (F.col("df") <= df_cap))
+    postings = w.where((F.col("df") >= 2) & (F.col("df") <= 10))
     grouped = postings.groupBy("term").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
@@ -2343,12 +2320,11 @@ def dedup_tfidf_cosine(
     # formed at sf0.1, while genuine near-dups share dozens of rare
     # shingles.  The count is over bucket_pairs' per-term emissions (one
     # row per shared term), identical to the oracle's HAVING COUNT(*).
-    # r12 raised 2 -> 3 (VERDICT r11 item 4): at sf0.1 the >= 2 gate
-    # admitted 17.2k candidates of which 16.3k shared exactly two
-    # medium-df shingles — 19x verify work for 6 of 255 result pairs;
-    # >= 3 keeps 894 candidates.  This is a RECALL knob, not a scoring
-    # change: every admitted pair still gets its full exact cosine, and
-    # the oracle applies the identical gate.
+    # 3, not 2: at sf0.1 a >= 2 gate admits 17.2k candidates of which 16.3k
+    # share exactly two medium-df shingles — 19x verify work for 6 of 255
+    # result pairs; >= 3 keeps 894 candidates.  This is a RECALL knob, not a
+    # scoring change: every admitted pair still gets its full exact cosine,
+    # and the oracle applies the identical gate.
     min_shared = 3
     cand = (
         bucket_pairs(grouped, distribute_threshold=256)
@@ -2357,20 +2333,19 @@ def dedup_tfidf_cosine(
         .where(F.col("n_shared") >= min_shared)
         .select("doc_a", "doc_b")
     )
-    # Verify as a SHARED-TERM equi join + exact integer sum (the r11
-    # join-verify shape, kept: expand each candidate by doc_a's weight
-    # rows, inner-join doc_b's on (doc_b, term) so exactly the SHARED
-    # terms survive, sum per pair — pure codegen end to end, replacing
-    # the r9 interpreted map-lookup fold).  The verify sides read the
-    # checkpointed w frame whole: a candidate-doc broadcast semi-join
-    # prune was A/B'd here (r14) and REFUTED at both scales — 1x 3.18 ->
-    # 3.71 s, 10x 5.29 -> 6.88 s — because the prune serializes the
-    # candidate subtree ahead of the verify scans and pays two broadcast
-    # builds, while the exchanges it saves move narrow (doc, term, long)
-    # rows a local shuffle handles at memory speed.  On a 1000-executor
-    # corpus where the weight frame is 100 TB and candidates are sparse,
-    # the economics invert — that deployment would re-add the semi prune
-    # (or a bloom filter on doc_id) in front of these two selects.
+    # Verify as a SHARED-TERM equi join + exact integer sum (expand each
+    # candidate by doc_a's weight rows, inner-join doc_b's on (doc_b, term) so
+    # exactly the SHARED terms survive, sum per pair — pure codegen end to
+    # end, not an interpreted map-lookup fold).  The verify sides read the
+    # checkpointed w frame whole: a candidate-doc broadcast semi-join prune
+    # was A/B'd here and REFUTED at both scales — 1x 3.18 -> 3.71 s, 10x 5.29
+    # -> 6.88 s — because the prune serializes the candidate subtree ahead of
+    # the verify scans and pays two broadcast builds, while the exchanges it
+    # saves move narrow (doc, term, long) rows a local shuffle handles at
+    # memory speed.  On a 1000-executor corpus where the weight frame is 100
+    # TB and candidates are sparse, the economics invert — that deployment
+    # would re-add the semi prune (or a bloom filter on doc_id) in front of
+    # these two selects.
     wa = w.select(
         F.col("doc_id").alias("doc_a"), "term", F.col("w_int").alias("wa")
     )
@@ -2402,19 +2377,18 @@ def dedup_tfidf_cosine(
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
         .select("doc_a", "doc_b", cosine.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= 0.30)
     )
 
 
 # ---------------------------------------------------------------------------
-# Link prediction on the near-duplicate candidate graph (round 6)
+# Link prediction on the near-duplicate candidate graph
 # ---------------------------------------------------------------------------
 
 def dedup_link_prediction(
     spark: SparkSession,
     sf_dir: str,
     k: int = 50,
-    verify_distance: int = 2,
     degree_cap: int = 64,
 ) -> DataFrame:
     """Common-neighbor link prediction over the SimHash candidate graph —
@@ -2426,7 +2400,7 @@ def dedup_link_prediction(
     Kleinberg 2003).
 
     Dataflow: STRICTLY-verified pairs (dedup_simhash_pairs at nibble
-    distance <= ``verify_distance`` = 2 — one notch TIGHTER than the
+    distance <= 2 — one notch TIGHTER than the
     dedup threshold, deliberately: the prediction targets are exactly
     the pairs the loose threshold would have admitted, and wedge cost is
     Σdeg² over the graph, which the tighter verify cuts ~4x on a
@@ -2442,19 +2416,18 @@ def dedup_link_prediction(
 
     At 100 TB the candidate graph is orders of magnitude smaller than the
     corpus (it is the LSH OUTPUT), and wedge work is sum-of-deg² over that
-    graph, so hubs are the blowup: ``degree_cap`` (r8 verdict item 3 —
-    previously documented, now implemented) bounds every node's adjacency
+    graph, so hubs are the blowup: ``degree_cap`` bounds every node's adjacency
     list at the cap BEFORE the wedge join, keeping wedge work <= n·cap²
     no matter how viral a template-farm hub gets.  The kept neighbors are
     chosen in deterministic md5(n:nbr) order (a seedless uniform sample,
     reproducible in any engine — the oracle applies the identical cap),
     so the score is defined ON THE CAPPED GRAPH: common counts, degrees,
     and neighborhood Jaccard all refer to the same bounded graph.  The
-    cap is made SYMMETRIC (r9 advice): an undirected edge survives only
+    cap is made SYMMETRIC: an undirected edge survives only
     if it survives in BOTH endpoints' capped lists (one canonical-pair
     hash aggregate over the capped rows — each undirected edge has
-    exactly two directed rows, so count == 2 is the symmetric test; r10
-    replaced the semi join against the reversed adjacency), so degrees,
+    exactly two directed rows, so count == 2 is the symmetric test, with
+    no semi join against the reversed adjacency), so degrees,
     wedge centers, and common counts all describe ONE consistent
     undirected graph — structurally guaranteeing common <= min(deg_u,
     deg_w), hence union_size >= common > 0 (no negative Jaccard or
@@ -2465,12 +2438,13 @@ def dedup_link_prediction(
 
     Output: (u, w, common, union_size, nbr_jaccard), top ``k``.
     """
-    # r12: thresholds <= 3 slice the shared at-rest graph (banding-
+    # Thresholds <= 3 slice the shared at-rest graph (banding-
     # invariance makes the slice exact — shared_simhash_graph docstring);
     # wider thresholds fall back to a live build.  The parquet scan is
-    # cheap and re-executable, so the old eager checkpoint (which existed
-    # to keep the fingerprint subtree from replaying into the adjacency
-    # AND the anti-join) is no longer needed.
+    # cheap and re-executable, so no eager checkpoint is needed to keep
+    # the fingerprint subtree from replaying into the adjacency AND the
+    # anti-join.
+    verify_distance = 2
     if verify_distance <= 3:
         edges = (
             shared_simhash_graph(spark, sf_dir)
@@ -2501,9 +2475,9 @@ def dedup_link_prediction(
     adj_capped = adj_full.withColumn("__r", F.row_number().over(wcap)).where(
         F.col("__r") <= F.lit(degree_cap)
     )
-    # symmetric restriction in ONE exchange (r10 verdict item 6; the r9
-    # form semi-joined the capped adjacency against its own reverse —
-    # two more compound-key shuffles): every undirected edge appears as
+    # symmetric restriction in ONE exchange (a semi-join of the capped
+    # adjacency against its own reverse would cost two more
+    # compound-key shuffles): every undirected edge appears as
     # exactly TWO directed rows in adj_full (the pair list is unique),
     # so grouping the capped survivors by the canonical (least, greatest)
     # pair and keeping count == 2 IS "survived in BOTH endpoints' capped
@@ -2561,12 +2535,10 @@ def dedup_link_prediction(
 
 
 # ---------------------------------------------------------------------------
-# k-core peeling over the candidate graph (round 6)
+# k-core peeling over the candidate graph
 # ---------------------------------------------------------------------------
 
-def dedup_kcore_peel(
-    spark: SparkSession, sf_dir: str, k: int = 2, rounds: int = 3
-) -> DataFrame:
+def dedup_kcore_peel(spark: SparkSession, sf_dir: str, rounds: int = 3) -> DataFrame:
     """k-core decomposition (bounded peel) of the SimHash candidate graph
     — the third graph-structure lens next to triangle_stats (clique vs
     star) and dedup_link_prediction (missed edges): nodes that survive
@@ -2588,21 +2560,22 @@ def dedup_kcore_peel(
     Scale shape: the graph is the LSH OUTPUT (orders smaller than the
     corpus); the adjacency is hash-partitioned by the degree key ONCE
     up front (repartition + eager checkpoint preserves the known
-    partitioning — the HITS r10 lesson), so every round's degree
+    partitioning — the HITS lesson), so every round's degree
     aggregate is PARTITION-LOCAL and the two LEFT SEMI restrictions
     (AQE-broadcast at test SF, partitioning-preserving) never re-shuffle
     the edge list; the verified-pair subtree is localCheckpoint'd once
-    so the per-round lineage stays flat.  r11 A/B at sf0.1: 5.0 -> 4.6 s
+    so the per-round lineage stays flat.  A/B at sf0.1: 5.0 -> 4.6 s
     floor, cold pass 19 -> 8 s, rows identical.
 
     Output: (doc_id, peeled_round, last_degree) — peeled_round 1..R, or
     0 for survivors (last_degree = degree in the final graph)."""
+    k = 2
     if rounds < 1:
         raise ValueError(f"dedup_kcore_peel requires rounds >= 1, got {rounds}")
-    # r12: the edge list comes from the shared at-rest graph store
+    # The edge list comes from the shared at-rest graph store
     # (materialized_graph) instead of an in-query rebuild — the rebuild
-    # was the floor's dominant term (dedup_simhash_pairs is itself a
-    # ~3.5 s query at sf0.1; VERDICT r11 item 2).  The parquet scan is
+    # would be the floor's dominant term (dedup_simhash_pairs is itself
+    # a ~3.5 s query at sf0.1).  The parquet scan is
     # re-executable, so no checkpoint is needed on the raw edges.
     edges = shared_simhash_graph(spark, sf_dir).select("doc_a", "doc_b")
     adj = (
@@ -2657,7 +2630,7 @@ def dedup_kcore_peel(
             # adjacency feeds the NEXT round's degree aggregate and both
             # of its semi joins.  The FINAL round's adjacency feeds only
             # final_cnt once, so materializing it would be a pure extra
-            # pass over the edge blocks (r11: ~0.3 s of the floor).
+            # pass over the edge blocks (~0.3 s of the floor).
             cur_adj = cur_adj.localCheckpoint(eager=True)
     final_cnt = cur_adj.groupBy("n").agg(F.count(F.lit(1)).alias("cnt"))
     survivors = remaining.join(
@@ -2674,7 +2647,7 @@ def dedup_kcore_peel(
 
 
 # ---------------------------------------------------------------------------
-# Community modularity of the duplicate-cluster partition (round 7)
+# Community modularity of the duplicate-cluster partition
 # ---------------------------------------------------------------------------
 
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2707,7 +2680,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (cluster_id, n_nodes, degree_sum, intra_edges, q_contrib)
     for every non-singleton cluster."""
     docs = load(spark, sf_dir, "documents")
-    # at-rest lens substrate (r12); the parquet scan replays per consumer
+    # at-rest lens substrate; the parquet scan replays per consumer
     # for free, so the old eager checkpoint is gone
     edges = shared_minhash_graph(spark, sf_dir)
     comp = connected_components(
@@ -2751,9 +2724,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def graph_label_propagation(
-    spark: SparkSession, sf_dir: str, rounds: int = 3
-) -> DataFrame:
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (Raghavan et al.) over the
     MinHash-LSH candidate graph — COMMUNITY detection, the softer
     cousin of connected components: where CC merges everything
@@ -2770,10 +2741,11 @@ def graph_label_propagation(
     one per-node top-1 window over the count table (bounded by degree),
     the same linear-shuffle loop as pagerank_centrality, lineage
     truncated per round.  Output: every document's community label."""
+    rounds = 3
     if rounds < 1:
         raise ValueError("rounds >= 1 required")
     docs = load(spark, sf_dir, "documents")
-    cand = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
+    cand = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate
     und = (
         cand.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -2839,7 +2811,7 @@ def text_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("n_sh", F.size(F.col("sh_set")).cast("long"))
         # three consumers (band buckets + both verify sides) — without
         # the checkpoint the corpus shingle explode replays per consumer
-        # (r11: 1x 2.1 -> 1.5 s, 10x 9.4 -> 5.8 s, rows identical)
+        # (1x 2.1 -> 1.5 s, 10x 9.4 -> 5.8 s, rows identical)
         .localCheckpoint(eager=False)
     )
     buckets = minhash_band_buckets(

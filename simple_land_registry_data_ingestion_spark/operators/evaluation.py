@@ -151,7 +151,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def eval_ndcg_at_k(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user NDCG@k of "value ranks engagement" — the standard
     ranking-quality metric for a retrieval / recommendation model,
     computed the distributed way: ONE window per ordering, no per-query
@@ -169,6 +169,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     groupBy(user) aggregate — at 100 TB this is two keyed shuffles on
     the same key, AQE-coalesced.  Output is one row per user with >= 1
     event (bounded by the user dimension, not the event count)."""
+    k = 10
     rel = (
         F.when(F.col("event_type") == "purchase", 3)
         .when(F.col("event_type") == "click", 2)
@@ -382,7 +383,7 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def eval_mrr_hit_rate(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def eval_mrr_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MRR@k and HitRate@k for the same "value ranks engagement" model
     eval_ndcg_at_k grades — the binary-relevance pair of metrics every
     recommender eval reports next to NDCG.  Relevant = purchase events;
@@ -403,7 +404,7 @@ def eval_mrr_hit_rate(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFram
     w = Window.partitionBy("user_id").orderBy(F.col("value").desc(), "event_id")
     topk = (
         ev.withColumn("pos", F.row_number().over(w).cast("long"))
-        .where(F.col("pos") <= k)
+        .where(F.col("pos") <= 10)
     )
     per_user = topk.groupBy("user_id").agg(
         F.min(F.when(F.col("y") == 1, F.col("pos"))).alias("first_rel")
@@ -491,9 +492,7 @@ def eval_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def eval_conformal_interval(
-    spark: SparkSession, sf_dir: str, alpha_permille: int = 100
-) -> DataFrame:
+def eval_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction intervals with measured coverage — the
     distribution-free way to attach honest error bars to ANY point
     model (Vovk; the method every modern uncertainty pipeline ships):
@@ -534,7 +533,7 @@ def eval_conformal_interval(
     # k = ceil((n+1) * (1 - alpha)) with alpha in permille; ceiling via
     # (a + 999) div 1000 (operands positive on both engines)
     k = F.expr(
-        f"((n_calib + 1) * (1000 - {alpha_permille}) + 999) div 1000"
+        "((n_calib + 1) * (1000 - 100) + 999) div 1000"
     ).cast("long")
     q_hat = (
         scored.withColumn("k", k)
@@ -579,7 +578,7 @@ def eval_conformal_interval(
     )
 
 
-def eval_map_at_k(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def eval_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP@k — mean average precision, completing the IR metric suite
     (NDCG X162 = graded position-discounted, MRR X167 = first hit, MAP =
     all hits' precision averaged): AP@k sums precision-at-each-hit over
@@ -593,6 +592,7 @@ def eval_map_at_k(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     once.  Same scan + user window as the NDCG/MRR queries.
 
     Output: 1 row (n_users_eval, sum_hits, map_at_k)."""
+    k = 10
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "value",
         (F.col("event_type") == "purchase").cast("int").alias("y"),
@@ -726,9 +726,7 @@ def eval_multiclass_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def eval_pinball_loss(
-    spark: SparkSession, sf_dir: str, q_permille: int = 900
-) -> DataFrame:
+def eval_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-forecast evaluation with pinball (quantile) loss — the
     scoring rule that makes a q-quantile forecast honest (expected loss
     is minimized exactly at the true quantile): forecast the 0.9
@@ -743,14 +741,6 @@ def eval_pinball_loss(
 
     Scale: hourly rollup (calendar-bounded) -> per-type order-statistic
     window -> one test-half aggregate."""
-    if q_permille % 100 != 0 or not 0 < q_permille < 1000:
-        # the x10 loss weights are q_permille // 100 and
-        # (1000 - q_permille) // 100: any non-multiple of 100 would floor
-        # one weight silently wrong (e.g. 950 -> 9/0), so reject it
-        raise ValueError(
-            f"eval_pinball_loss carries the loss x10, so q_permille must be "
-            f"a multiple of 100 in (0, 1000); got {q_permille}"
-        )
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hr"),
@@ -773,7 +763,7 @@ def eval_pinball_loss(
             ).cast("long"),
         )
         .withColumn(
-            "k", F.expr(f"(n_calib * {q_permille} + 999) div 1000").cast("long")
+            "k", F.expr("(n_calib * 900 + 999) div 1000").cast("long")
         )
     )
     q_hat = ranked.where(F.col("rk") == F.col("k")).select(
@@ -788,11 +778,8 @@ def eval_pinball_loss(
         F.sum(
             F.when(
                 under,
-                F.lit(q_permille // 100) * (F.col("c") - F.col("q_hat")),
-            ).otherwise(
-                F.lit((1000 - q_permille) // 100)
-                * (F.col("q_hat") - F.col("c"))
-            )
+                F.lit(9) * (F.col("c") - F.col("q_hat")),
+            ).otherwise(F.col("q_hat") - F.col("c"))
         ).cast("long").alias("sum_pinball_x10"),
         F.round(
             F.sum(F.when(F.col("c") <= F.col("q_hat"), 1).otherwise(0))

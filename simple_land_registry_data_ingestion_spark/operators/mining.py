@@ -27,12 +27,12 @@ from simple_land_registry_data_ingestion_spark.tables import load
 
 def shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct ``(order_id, part_id)`` basket at rest — the root
-    frame of every part-level market-basket query.  Before r12 each of
-    the four basket queries re-scanned lineitem, re-shuffled it by the
-    order key, re-deduped, and eagerly checkpointed at CONSTRUCTION time
-    (ADVICE r11: merely building the query executed a job, and the
-    cached blocks were executor-lifetime-bound); the shared frame pays
-    that once per corpus per run."""
+    frame of every part-level market-basket query.  Without it each of
+    the four basket queries would re-scan lineitem, re-shuffle it by the
+    order key, re-dedup, and eagerly checkpoint at CONSTRUCTION time
+    (merely building the query would execute a job, and the cached
+    blocks are executor-lifetime-bound); the shared frame pays that once
+    per corpus per run."""
 
     def _build() -> DataFrame:
         return (
@@ -74,10 +74,10 @@ def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def user_part_edges(spark: SparkSession, sf_dir: str, part_col: str = "p") -> DataFrame:
     """The distinct (customer, part) purchase edge list from
-    lineitem x orders — built LIVE (r13): graph_hits_scores is its only
+    lineitem x orders — built LIVE: graph_hits_scores is its only
     consumer, so an at-rest store entry would just move the build cost
-    off the scoreboard without sharing it with anyone (the r12 verdict's
-    cost-shifting objection); a frame earns a store entry only when
+    off the scoreboard without sharing it with anyone (cost shifting,
+    not saving); a frame earns a store entry only when
     several lenses read it.
 
     The dedup rides the consumer's OWN partitioning: rows repartition by
@@ -97,11 +97,7 @@ def user_part_edges(spark: SparkSession, sf_dir: str, part_col: str = "p") -> Da
     )
 
 
-def er_blocked_match(
-    spark: SparkSession,
-    sf_dir: str,
-    max_edit_distance: int = 4,
-) -> DataFrame:
+def er_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution by blocking + in-block edit-distance scoring over
     the part catalog: candidate pairs form only inside a
     ``(name noun, brand)`` block, then ``levenshtein`` scores each pair.
@@ -111,9 +107,9 @@ def er_blocked_match(
     deterministic key, and only candidates pay the expensive similarity
     function.
 
-    Scale rework (r8 verdict item 2 — the first cut self-joined the PART
-    table on the block key, so one viral block paid an in-block corpus
-    quadratic: er_golden_record measured a 23x time slope on 10x rows):
+    Scale shape (a self-join of the PART table on the block key would
+    make one viral block pay an in-block corpus quadratic:
+    er_golden_record measured a 23x time slope on 10x rows that way):
     the match predicate depends only on the NAME pair, and the name
     vocabulary is bounded (64 distinct names at every SF — the same
     structural fact er_edit_distance factors on), so the quadratic runs on
@@ -128,6 +124,7 @@ def er_blocked_match(
     A viral block now costs vocab² DP + output-linear expansion instead
     of corpus² DP.
     """
+    max_edit_distance = 4
     part = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -186,11 +183,7 @@ def er_blocked_match(
     )
 
 
-def basket_part_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    min_support: int = 2,
-) -> DataFrame:
+def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence with lift: which part pairs appear in
     the same order more often than chance (A-priori's frequent-pair pass,
     and the same shape as token-PMI in a text pipeline).
@@ -205,8 +198,8 @@ def basket_part_pairs(
     ``lift = P(a,b) / (P(a)·P(b))`` rounded to 6 dp (count ratios —
     engine-exact).
 
-    r13 (reversing the r12 store read — the verdict's accounting
-    objection): this query is the basket family's LIVE PRODUCER.  It
+    This query is the basket family's LIVE PRODUCER (reading the store
+    here would hide the build cost from the bench).  It
     builds the distinct basket and the pair counts from the lineitem
     scan in-query — the exact dataflow the store builders run — so the
     corpus-pass cost the four lens queries avoid by reading the at-rest
@@ -242,7 +235,7 @@ def basket_part_pairs(
         .where(F.col("part_a") < F.col("part_b"))
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_orders"))
-        .where(F.col("pair_orders") >= F.lit(min_support))
+        .where(F.col("pair_orders") >= F.lit(2))
     )
     freq_a = item_freq.select(
         F.col("part_id").alias("part_a"), F.col("item_orders").alias("orders_a")
@@ -270,19 +263,14 @@ def basket_part_pairs(
     )
 
 
-def er_sorted_neighborhood(
-    spark: SparkSession,
-    sf_dir: str,
-    neighborhood: int = 3,
-    max_edit_distance: int = 4,
-) -> DataFrame:
+def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood record linkage (Hernandez-Stolfo merge/purge):
     sort candidates by a discriminating key and compare each record only
-    to its ``neighborhood`` successors in sort order.
+    to its 3 successors in sort order.
 
     The complement to er_blocked_match: blocking bounds pairs by block
     size (and dies on one viral block), sorted-neighborhood bounds pairs
-    at exactly ``n * neighborhood`` regardless of key skew — a hot key
+    at exactly ``n * 3`` regardless of key skew — a hot key
     just means similar records sit adjacent, which is the method working
     as intended.  Here both compose: rank within the (noun) block by
     (name, key), then pair ranks at gap 1..w via a pure EQUI-join on
@@ -303,7 +291,7 @@ def er_sorted_neighborhood(
         "p_name",
         F.row_number().over(w).alias("rnk"),
     )
-    offsets = F.array(*[F.lit(g) for g in range(1, neighborhood + 1)])
+    offsets = F.array(*[F.lit(g) for g in range(1, 4)])
     probes = ranked.select(
         "block_noun",
         F.col("p_partkey").alias("p1"),
@@ -328,13 +316,11 @@ def er_sorted_neighborhood(
             F.col("gap").cast("long").alias("rank_gap"),
             F.levenshtein("name1", "name2").cast("long").alias("edit_distance"),
         )
-        .where(F.col("edit_distance") <= F.lit(max_edit_distance))
+        .where(F.col("edit_distance") <= F.lit(4))
     )
 
 
-def er_golden_record(
-    spark: SparkSession, sf_dir: str, max_edit_distance: int = 2
-) -> DataFrame:
+def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record construction (survivorship) on top of entity
     resolution: blocked edit-distance matches (er_blocked_match, but at
     a TIGHTER max_edit_distance=2 — merging is destructive, so the match
@@ -352,10 +338,10 @@ def er_golden_record(
     Singleton entities are excluded — they have no merge decision to
     certify and would multiply the output 30x for zero information.
 
-    Plan at scale (r9 rework — the r8 cut materialized every part-pair
-    match edge and union-found over PART KEYS, so a verbatim-name corpus
-    paid ~SF² edges before CC even started; measured 10x slope 9.2 even
-    after the blocked join was name-factored): the match predicate
+    Plan at scale (materializing every part-pair match edge and
+    union-finding over PART KEYS would make a verbatim-name corpus pay
+    ~SF² edges before CC even started; measured 10x slope 9.2 even after
+    the blocked join was name-factored): the match predicate
     depends only on the NAME pair, so same-(block, brand, name) parts
     are a clique and the part graph CONTRACTS losslessly to the
     name-GROUP graph — nodes = distinct (noun, brand, name) groups,
@@ -370,6 +356,7 @@ def er_golden_record(
     once and no part-pair edge is ever materialized.  Edgeless
     multi-member groups survive as single-group entities (coalesce to
     own root); singleton parts with no match drop at n_members >= 2."""
+    max_edit_distance = 2
     import pandas as pd
 
     part = load(spark, sf_dir, "part").select(
@@ -454,9 +441,7 @@ def er_golden_record(
     )
 
 
-def er_edit_distance(
-    spark: SparkSession, sf_dir: str, max_ed: int = 1
-) -> DataFrame:
+def er_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant entity resolution via FastSS / SymSpell DELETION
     NEIGHBORHOODS: two strings are within edit distance 1 only if they
     share a member of {s} ∪ {s with one char deleted} — so candidates
@@ -508,7 +493,7 @@ def er_edit_distance(
         .select("nm_a", "nm_b")
         .distinct()
     )
-    matched = cand.where(F.levenshtein("nm_a", "nm_b") <= max_ed)
+    matched = cand.where(F.levenshtein("nm_a", "nm_b") <= 1)
     sym = matched.unionAll(
         matched.select(
             F.col("nm_b").alias("nm_a"), F.col("nm_a").alias("nm_b")
@@ -550,12 +535,7 @@ def er_edit_distance(
     )
 
 
-def item_item_cf(
-    spark: SparkSession,
-    sf_dir: str,
-    min_cooc: int = 3,
-    top_k: int = 3,
-) -> DataFrame:
+def item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering ("customers who bought X also
     bought Y"): cosine similarity on the order co-occurrence matrix with
     top-k neighbor selection per item — the classic Amazon-style
@@ -577,7 +557,7 @@ def item_item_cf(
     Output: (part_id, neighbor_id, cooc, cosine, rk) — both directions
     of each pair, rk 1..top_k per part.
 
-    r12: the basket and its pair counts come from the shared at-rest
+    The basket and its pair counts come from the shared at-rest
     substrate (shared_basket_items / shared_copurchase_pairs) — the
     min_cooc cut pushes into the pair-store scan, and no order-key
     shuffle remains anywhere in the plan."""
@@ -587,7 +567,7 @@ def item_item_cf(
     )
     pairs = shared_copurchase_pairs(spark, sf_dir).select(
         "part_a", "part_b", F.col("pair_orders").alias("cooc")
-    ).where(F.col("cooc") >= F.lit(min_cooc))
+    ).where(F.col("cooc") >= F.lit(3))
     # both directions so every item sees its full neighbor list
     sym = pairs.select("part_a", "part_b", "cooc").unionAll(
         pairs.select(
@@ -623,7 +603,7 @@ def item_item_cf(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= top_k)
+        .where(F.col("rk") <= 3)
     )
 
 
@@ -643,7 +623,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: 1 row (n_nodes, n_edges, n_points, slope, intercept) —
     slope ~ -alpha of the power law.
 
-    r12: the edge list is the at-rest co-purchase pair store's row set
+    The edge list is the at-rest co-purchase pair store's row set
     (each unordered pair exactly once — shared_copurchase_pairs), so no
     basket rebuild, no order-key shuffle, and no construction-time
     checkpoint remain."""
@@ -717,7 +697,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the basket-bounded edge list, one degree aggregate, a
     broadcast degree lookup onto both endpoints, one 1-row moment
-    aggregate.  r12: the edge list is the at-rest co-purchase pair
+    aggregate.  The edge list is the at-rest co-purchase pair
     store's row set (shared_copurchase_pairs) — no basket rebuild, no
     order-key shuffle, no construction-time checkpoint."""
     edges = shared_copurchase_pairs(spark, sf_dir).select(
@@ -758,9 +738,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_textrank_keywords(
-    spark: SparkSession, sf_dir: str, top_k: int = 15
-) -> DataFrame:
+def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau): PageRank over the
     word-adjacency graph — a keyword is a word that co-occurs with many
     other well-connected words, which catches multi-word-topic anchors
@@ -813,7 +791,7 @@ def text_textrank_keywords(
     return (
         pr.select(F.col("node").alias("word"), F.col("rank").alias("textrank"))
         .orderBy(F.col("textrank").desc(), F.col("word"))
-        .limit(top_k)
+        .limit(15)
     )
 
 
@@ -829,21 +807,21 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final score re-rounded 8dp (the pagerank_centrality float
     discipline — summation order cannot leak).
 
-    Plan (r10 rewrite — the edge list never re-shuffles): the DISTINCT
+    Plan (the edge list never re-shuffles): the DISTINCT
     (customer, part) edge list materializes TWICE, hash-partitioned by
     each side's aggregation key (localCheckpoint preserves the known
     partitioning), so every round is a BROADCAST join of the
     node-sized score frame onto the co-partitioned edges followed by a
     PARTITION-LOCAL aggregation — zero edge shuffles after the two
-    initial builds (previously 6 full-edge shuffles per run, the ~2 s
-    residual the r9 verdict flagged).  Round 1 skips its join entirely:
+    initial builds (a per-round join shuffles the edges 6 times per run,
+    ~2 s).  Round 1 skips its join entirely:
     hub scores start at 1.0, so the first authority partial is a plain
     per-part edge count.  At 100 TB the score frames are node-sized
     (drop the broadcast hint past ~100M nodes); the pre-partitioned
     edges still co-locate both joins, keeping one shuffle per side
     total.  Output: top-10 authorities and top-10 hubs by the total
     order (score desc, id asc), unioned with a kind tag."""
-    # r13: the distinct edge list builds LIVE (user_part_edges — HITS is
+    # The distinct edge list builds LIVE (user_part_edges — HITS is
     # the frame's only consumer, so an at-rest entry would shift the
     # build cost off the scoreboard without sharing it).  The p-side
     # copy IS the build: user_part_edges repartitions by p before its
@@ -860,9 +838,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth = None
     hub = None
     for r in range(3):
-        # checkpoint each raw partial BEFORE its max-broadcast (r8 verdict
-        # item 7): the broadcast is a driver job, so an un-checkpointed
-        # a_raw would be executed once for the max and AGAIN inside every
+        # checkpoint each raw partial BEFORE its max-broadcast: the
+        # broadcast is a driver job, so an un-checkpointed a_raw would be
+        # executed once for the max and AGAIN inside every
         # downstream consumer — the checkpoint must sit upstream of the
         # normalize, not after it
         if r == 0:

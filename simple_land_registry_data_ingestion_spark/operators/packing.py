@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from simple_land_registry_data_ingestion_spark.functions.text import token_count_col
 from simple_land_registry_data_ingestion_spark.tables import load
 
-#: Default output sequence length (tokens per packed training sequence).
+#: Output sequence length (tokens per packed training sequence).
 SEQ_LEN = 64
 
 #: Documents per prefix-sum shard.  At 100 TB tune so one shard's rows fit
@@ -81,19 +81,17 @@ def global_token_offsets(
     )
 
 
-def pack_sequences(
-    docs: DataFrame, seq_len: int = SEQ_LEN, shard_size: int = SHARD_SIZE
-) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Map every document to the packed sequences it occupies.
 
     Output: (doc_id, n_tokens, token_offset, seq_start, seq_end, n_seqs)
-    where sequence ``i`` holds token positions [i*seq_len, (i+1)*seq_len).
+    where sequence ``i`` holds token positions [i*SEQ_LEN, (i+1)*SEQ_LEN).
     A downstream writer groups by seq_start (or explodes the span) to emit
     the actual training shards; this operator is the placement computation.
     """
-    off = global_token_offsets(docs, shard_size=shard_size)
-    seq_start = F.floor(F.col("token_offset") / seq_len)
-    seq_end = F.floor((F.col("token_offset") + F.col("n_tokens") - 1) / seq_len)
+    off = global_token_offsets(docs)
+    seq_start = F.floor(F.col("token_offset") / SEQ_LEN)
+    seq_end = F.floor((F.col("token_offset") + F.col("n_tokens") - 1) / SEQ_LEN)
     return off.select(
         "doc_id",
         "n_tokens",

@@ -291,10 +291,8 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_stratified_fixed(
-    spark: SparkSession, sf_dir: str, per_stratum: int = 50
-) -> DataFrame:
-    """Fixed-size stratified sample: exactly ``per_stratum`` rows per
+def sample_stratified_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-size stratified sample: exactly 50 rows per
     market segment, chosen by KEY-HASH order — every stratum is represented
     equally regardless of its population (the eval-set/holdout construction
     a training pipeline needs; uniform sampling starves rare strata).
@@ -309,7 +307,7 @@ def sample_stratified_fixed(
     )
     return (
         customer.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= per_stratum)
+        .where(F.col("sample_rank") <= 50)
         .select("c_custkey", "c_mktsegment", "sample_rank")
     )
 
@@ -320,16 +318,14 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer.select("c_mktsegment", "c_nationkey").distinct()
 
 
-def sample_source_capped(
-    spark: SparkSession, sf_dir: str, cap: int = 10
-) -> DataFrame:
+def sample_source_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap — the per-domain cap every crawl-derived
     training pipeline applies so one prolific domain cannot dominate the
     mix (the C4/RefinedWeb 'top sites' guard).
 
     Within each source, documents are ranked by md5(doc_id) (pseudorandom
     but reproducible across runs/engines/partitionings, tie-break on the
-    id) and only the first ``cap`` survive.  One shuffle on source; the
+    id) and only the first 10 survive.  One shuffle on source; the
     per-group state is the window's bounded rank counter, so a source with
     10^9 docs costs the same per-row work as one with 10.  A skewed mega-
     source is the one hot key — at 100 TB pre-aggregate with the salted
@@ -340,7 +336,7 @@ def sample_source_capped(
     )
     return (
         docs.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= cap)
+        .where(F.col("sample_rank") <= 10)
         .select("doc_id", "source", "sample_rank")
     )
 
@@ -554,19 +550,17 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize_events(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: assign each event a per-user session id — a new
     session starts when the gap to the previous event reaches
-    ``gap_minutes``.  The batch twin of the streaming session window
+    30 minutes.  The batch twin of the streaming session window
     (streaming/ops.stream_session_window): same lag -> new-session flag ->
     running-sum pattern, one shuffle on user_id, both window frames reuse
     the same sorted run.  session_id is (user_id, seq) — deterministic and
     stable under reprocessing, which is what downstream joins key on."""
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.lag(ts_us).over(w)
     new_session = F.when(
@@ -669,12 +663,10 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_weighted_aes(
-    spark: SparkSession, sf_dir: str, k: int = 50
-) -> DataFrame:
+def sample_weighted_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis-Spirakis A-ES):
     each doc draws a deterministic uniform u from md5(doc_id) and ranks by
-    ln(u)/weight — the top-k by that key is an exact weighted sample, here
+    ln(u)/weight — the top-50 by that key is an exact weighted sample, here
     weighted by token count (the quality-weighted subsampling step of a
     training-data pipeline: longer/heavier docs proportionally likelier,
     yet the draw is reproducible across runs, engines, partitionings).
@@ -701,20 +693,18 @@ def sample_weighted_aes(
             key.alias("sample_key"),
         )
         .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
-        .limit(k)
+        .limit(50)
     )
 
 
-def agg_histogram_bins(
-    spark: SparkSession, sf_dir: str, bin_width: float = 5000.0
-) -> DataFrame:
+def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of lineitem extended prices: bin index, row
     count, bin min/max — the numeric-distribution profiling pass.  One
     scan + one hash aggregate on the bin key; partial aggregation does the
     heavy lifting map-side, so the exchange carries only n_bins rows per
     task."""
     lineitem = load(spark, sf_dir, "lineitem")
-    bin_idx = F.floor(F.col("l_extendedprice") / bin_width).cast("long")
+    bin_idx = F.floor(F.col("l_extendedprice") / 5000.0).cast("long")
     return (
         lineitem.groupBy(bin_idx.alias("bin"))
         .agg(
@@ -726,9 +716,7 @@ def agg_histogram_bins(
     )
 
 
-def agg_histogram_equidepth(
-    spark: SparkSession, sf_dir: str, n_bins: int = 10
-) -> DataFrame:
+def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (quantile) histogram of order prices: ~equal rows per
     bin, data-adaptive boundaries — the distribution profile that stays
     informative under skew where fixed-width bins collapse into one bar.
@@ -742,6 +730,7 @@ def agg_histogram_equidepth(
     aggregate, no global sort, no shuffle of the fact table.  Bins are
     ~equi-depth up to boundary ties (exact equality on the cent-rounded
     boundary keeps a tie deterministic rather than splitting it)."""
+    n_bins = 10
     orders = load(spark, sf_dir, "orders")
     fracs = [i / n_bins for i in range(1, n_bins)]
     bounds = orders.agg(
@@ -873,7 +862,6 @@ def merge_upsert(
     target: DataFrame,
     changes: DataFrame,
     key: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """MERGE INTO semantics (the Delta/Iceberg upsert) as plain DataFrame
     ops: the change batch carries an op per key — I(nsert)/U(pdate) rows
@@ -891,13 +879,11 @@ def merge_upsert(
     for c in value_cols:
         if c not in changes.columns:
             chg = chg.withColumn(c, F.lit(None))
-    chg = chg.select(key, op_col, *[F.col(c).alias(f"__chg_{c}") for c in value_cols])
+    chg = chg.select(key, "op", *[F.col(c).alias(f"__chg_{c}") for c in value_cols])
     joined = target.join(chg, key, "full_outer")
-    merged = joined.where(
-        F.col(op_col).isNull() | (F.col(op_col) != "D")
-    )
+    merged = joined.where(F.col("op").isNull() | (F.col("op") != "D"))
     out_vals = [
-        F.when(F.col(op_col).isNotNull(), F.col(f"__chg_{c}"))
+        F.when(F.col("op").isNotNull(), F.col(f"__chg_{c}"))
         .otherwise(F.col(c))
         .alias(c)
         for c in value_cols
@@ -1106,7 +1092,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data mixing and robust statistics (round 3)
+# Training-data mixing and robust statistics
 # ---------------------------------------------------------------------------
 
 def sample_token_budget_mix(
@@ -1279,9 +1265,7 @@ def profile_numeric_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_resample_ffill(
-    spark: SparkSession, sf_dir: str, max_user_id: int = 50
-) -> DataFrame:
+def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization: per-user hourly grid with forward-fill —
     the gap-filling step that turns an irregular event stream into the
     fixed-step series sequence models and feature stores consume.
@@ -1295,10 +1279,10 @@ def events_resample_ffill(
     3. forward fill: last non-null value over an ordered per-user window
        (ignorenulls) — one window, linear shuffle on user_id.
 
-    ``max_user_id`` scopes the demo corpus (grid rows = users x span);
+    Users below id 50 scope the demo corpus (grid rows = users x span);
     at scale the same plan runs per entity with the window as the only
     wide op."""
-    events = load(spark, sf_dir, "events").where(F.col("user_id") < max_user_id)
+    events = load(spark, sf_dir, "events").where(F.col("user_id") < 50)
     hours = events.select(
         "user_id",
         F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hour_ts"),
@@ -1436,7 +1420,7 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "monetary",
         )
     )
-    # ntile(5) from the TWO-PHASE global rank (round 8): Spark's NTile
+    # ntile(5) from the TWO-PHASE global rank: Spark's NTile
     # gives the first n%5 tiles ceil(n/5) rows and the rest floor(n/5) —
     # reproduced in closed form from (rank, n), so each quintile costs a
     # keyed window + broadcast offsets instead of a single-task sort
@@ -1504,9 +1488,7 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_ema_decay(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.3
-) -> DataFrame:
+def events_ema_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially-weighted engagement score — the standard
     feature-store recency decay (s_i = α·x_i + (1-α)·s_{i-1}, s_1 = x_1).
 
@@ -1521,6 +1503,7 @@ def events_ema_decay(
     iteration, no driver state.  6-dp round keeps the double sum
     hash-stable cross-engine.
     """
+    alpha = 0.3
     events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
@@ -1734,9 +1717,7 @@ def events_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customers_target_encoding(
-    spark: SparkSession, sf_dir: str, n_folds: int = 5
-) -> DataFrame:
+def customers_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free target encoding: each (market segment, fold) gets the
     mean order value computed from the OTHER folds only — the K-fold
     out-of-fold scheme that keeps a row's own target out of its feature
@@ -1759,7 +1740,7 @@ def customers_target_encoding(
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         "c_mktsegment",
-        F.pmod(F.col("o_orderkey"), F.lit(n_folds)).alias("fold"),
+        F.pmod(F.col("o_orderkey"), F.lit(5)).alias("fold"),
         "o_totalprice",
     )
     per_fold = seg_orders.groupBy("c_mktsegment", "fold").agg(
@@ -1894,12 +1875,10 @@ def events_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_approx_quantile_error(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10000
-) -> DataFrame:
+def agg_approx_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-certifying accuracy harness for approx_percentile: for each
     requested quantile q, the sketch's returned element must sit within
-    the published rank guarantee (rank within (q ± 1/accuracy)·n), checked
+    the published rank guarantee (rank within (q ± 1/10000)·n), checked
     tie-aware against the EXACT data — count(< v) may not exceed the upper
     rank bound and count(<= v) must reach the lower one.
 
@@ -1909,11 +1888,11 @@ def agg_approx_quantile_error(
     asserts the exact percentiles AND `within_rank_bound = TRUE`, so a
     sketch regression flips a driver row red.
 
-    Plan (r16 — VERDICT r15 item 3): the exact percentiles no longer run
-    through Spark's ``percentile`` aggregate, whose TypedImperativeAggregate
+    Plan: the exact percentiles do not run through Spark's
+    ``percentile`` aggregate, whose TypedImperativeAggregate
     merges EVERY distinct (value, count) pair in one final task (583k
     entries at sf0.1, measured 2.5 s alone; at 100 TB that single-task
-    merge is corpus-sized).  They are now a DISTRIBUTED SELECTION with
+    merge is corpus-sized).  They are a DISTRIBUTED SELECTION with
     the two-phase bucket discipline (two_phase_global_rank's certified
     mechanism): per-range-bucket counts (one codegen scan; buckets =
     floor(price/64), bounded by the PRICE DOMAIN, not row count) ->
@@ -1928,6 +1907,7 @@ def agg_approx_quantile_error(
     localCheckpoint'd (1 row) so its three consumers cannot re-run it.
     Corpus scans: sketch, bucket counts, bucket-row pick, rank check —
     all full-parallel; the only global window folds the bucket table."""
+    accuracy = 10000
     li = load(spark, sf_dir, "lineitem").select("l_extendedprice")
     qs = [0.25, 0.5, 0.75, 0.9]
     q_arr = ", ".join(str(q) for q in qs)
@@ -2072,9 +2052,7 @@ def events_cumulative_distinct_users(
     )
 
 
-def sample_priority_estimate(
-    spark: SparkSession, sf_dir: str, k: int = 100
-) -> DataFrame:
+def sample_priority_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup): estimate the corpus total
     token count from a k-item sample — THE estimator for subset-sum
     queries over heavy-tailed data, provably near-optimal variance among
@@ -2092,6 +2070,7 @@ def sample_priority_estimate(
     (k+1)-row frame; the exact total is one map-side-combined sum riding
     the same scan family.  At 100 TB the estimate costs one scan + a
     k-row reduction."""
+    k = 100
     docs = load(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     u_int = sum(
@@ -2212,12 +2191,10 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_mean_shift_detect(
-    spark: SparkSession, sf_dir: str, w: int = 5, threshold: float = 80.0
-) -> DataFrame:
+def events_mean_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean-shift change detection per user: flag events where the average
-    value over the following ``w`` events diverges from the preceding
-    ``w`` by more than ``threshold`` — the windowed two-sample test that
+    value over the following 5 events diverges from the preceding
+    5 by more than 80.0 — the windowed two-sample test that
     catches regime changes (price jumps, bot takeover, sensor drift)
     without CUSUM's sequential recursion, which no window function can
     express.
@@ -2226,6 +2203,7 @@ def events_mean_shift_detect(
     one sorted pass, both frames read from the single sorted run.  Only
     full windows test (count == w on both sides), so edges never
     false-positive.  Output is the flagged rows only: corpus-sparse."""
+    w = 5
     events = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -2244,7 +2222,7 @@ def events_mean_shift_detect(
         measured.where(
             (F.col("n_before") == w)
             & (F.col("n_after") == w)
-            & (F.abs(F.col("mean_after") - F.col("mean_before")) > threshold)
+            & (F.abs(F.col("mean_after") - F.col("mean_before")) > 80.0)
         )
         .select(
             "user_id",
@@ -2308,16 +2286,14 @@ def parts_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the integer price tick — prices are 0.1-granular, and price TIES
     must not dominate each other (a ROWS frame would get that wrong).
 
-    Scale shape (r11 — VERDICT r10 item 1, replacing the global
-    single-task RANGE window): the running max factors through the TICK
-    GRID.  Per-tick max size is a keyed aggregate (the only shuffle of
-    the part table); the exclusive running max then runs over the tick
-    table alone — DOMAIN-bounded at ~12k rows (TPC-H prices span
+    Scale shape (no global single-task RANGE window): the running max factors
+    through the TICK GRID.  Per-tick max size is a keyed aggregate (the only
+    shuffle of the part table); the exclusive running max then runs over the
+    tick table alone — DOMAIN-bounded at ~12k rows (TPC-H prices span
     900.00-2098.99, one tick per 0.1) independent of catalog size — and
-    broadcast-joins back to the parts.  Equivalent to the single-task
-    window because max over cheaper rows == max over per-tick maxes of
-    cheaper ticks; at 100 TB the part table sees one hash shuffle and
-    zero global sorts."""
+    broadcast-joins back to the parts.  Equivalent to the single-task window
+    because max over cheaper rows == max over per-tick maxes of cheaper ticks;
+    at 100 TB the part table sees one hash shuffle and zero global sorts."""
     part = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -2471,12 +2447,10 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def profile_k_anonymity(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+def profile_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-anonymity audit over a quasi-identifier tuple: every
     (nation, market-segment) equivalence class with its size and a flag
-    for classes smaller than k — the table a privacy review asks for
+    for classes smaller than k = 5 — the table a privacy review asks for
     before a dataset leaves the building (small classes re-identify).
 
     One groupBy on the quasi-identifier; the summary row (min class size,
@@ -2492,26 +2466,24 @@ def profile_k_anonymity(
         F.col("c_nationkey").cast("long").alias("nationkey"),
         "c_mktsegment",
         "class_size",
-        (F.col("class_size") < k).alias("violates_k"),
+        (F.col("class_size") < 5).alias("violates_k"),
     )
 
 
-def sample_shard_routing(
-    spark: SparkSession, sf_dir: str, n_shards: int = 8
-) -> DataFrame:
+def sample_shard_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (highest-random-weight) routing of documents to shards:
     each doc goes to argmax over shards of md5(doc:shard) — the
     consistent-placement scheme where adding or removing a shard moves
     ONLY that shard's keys (1/n of data), unlike mod-n which reshuffles
     everything.
 
-    The argmax is a row-local fold over n_shards generated hash strings
+    The argmax is a row-local fold over 8 generated hash strings
     (lexicographic max — any total order works), zero shuffle; the
     output aggregates to per-shard counts plus each shard's min/max doc
     ids as a placement fingerprint.  Balance follows from md5 uniformity;
     the count spread in the output IS the balance audit."""
     docs = load(spark, sf_dir, "documents")
-    shard_ids = F.sequence(F.lit(0), F.lit(n_shards - 1))
+    shard_ids = F.sequence(F.lit(0), F.lit(7))
     best = F.array_max(
         F.transform(
             shard_ids,
@@ -2536,11 +2508,9 @@ def sample_shard_routing(
     )
 
 
-def profile_dp_noisy_counts(
-    spark: SparkSession, sf_dir: str, epsilon: float = 1.0
-) -> DataFrame:
+def profile_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laplace-mechanism count release, mechanism demo: per-segment
-    counts plus Laplace(1/ε) noise drawn by inverse-CDF from a
+    counts plus Laplace(1/ε) noise (ε = 1) drawn by inverse-CDF from a
     DETERMINISTIC md5 uniform — the exact arithmetic of an ε-DP count
     release, reproducible across engines and runs.
 
@@ -2567,7 +2537,7 @@ def profile_dp_noisy_counts(
     noise = (
         F.when(centered >= 0, F.lit(1.0)).otherwise(F.lit(-1.0))
         * -F.log(1.0 - 2.0 * F.abs(centered))
-        / F.lit(epsilon)
+        / F.lit(1.0)
     )
     return counts.select(
         "c_mktsegment",
@@ -2685,7 +2655,7 @@ def events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     sxx_c = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
     sxy_c = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
     syy_c = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
-    # Degenerate-group guards (r04 advice): a group whose events all share
+    # Degenerate-group guards: a group whose events all share
     # one timestamp has sxx_c == 0 (slope undefined), one whose values are
     # constant has syy_c == 0 (r2 undefined).  Unguarded division yields
     # engine-dependent NULL/inf; the oracle mirrors the same CASE guards.
@@ -2747,9 +2717,7 @@ def events_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_histogram_2d(
-    spark: SparkSession, sf_dir: str, value_bin: float = 25.0
-) -> DataFrame:
+def agg_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D histogram (hour-of-day × value bin) — the heatmap backing
     every monitoring dashboard, computed as one scan to a bounded cell
     table (24 × value-range/bin cells, map-side combined).
@@ -2762,7 +2730,7 @@ def agg_histogram_2d(
     return (
         events.groupBy(
             F.hour("ts").cast("long").alias("hour_of_day"),
-            F.floor(F.col("value") / value_bin).cast("long").alias("value_bin"),
+            F.floor(F.col("value") / 25.0).cast("long").alias("value_bin"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -2836,7 +2804,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: the top customers by revenue LOST to returned
     items in one quarter — the classic churn-investigation report.
 
@@ -2846,10 +2814,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
     semi-fact (SF·150k rows) and a forced broadcast would OOM at 100×;
     AQE still broadcasts it below the 64 MiB threshold and otherwise
     shuffles the (already k-bounded-ish) per-customer aggregate against
-    it on the customer key.  The top-k is
+    it on the customer key.  The top-20 is
     TakeOrderedAndProject on the per-customer aggregate, ordered by the
     ROUNDED revenue with the customer key as tiebreak so the cut at
-    position k is engine-exact."""
+    position 20 is engine-exact."""
     li = load(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     orders = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01")
@@ -2886,7 +2854,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
         )
         .select("c_custkey", "c_name", F.col("n_name").alias("nation"), "revenue", "n_returned")
         .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -3053,9 +3021,7 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_path_trigrams(
-    spark: SparkSession, sf_dir: str, min_count: int = 10
-) -> DataFrame:
+def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top behavioral paths of length 3 — the Sankey-diagram feed: every
     consecutive (t₋₂ → t₋₁ → t) event-type triple per user, counted
     corpus-wide.
@@ -3063,8 +3029,8 @@ def events_path_trigrams(
     Two lags over ONE per-user sorted pass (the same sort run as the
     Markov transitions — first-order chains miss exactly the patterns a
     length-3 path exposes, e.g. view→click→error vs view→click→purchase).
-    Output is bounded by |types|³ however large the corpus; min_count
-    keeps the long tail out of the report."""
+    Output is bounded by |types|³ however large the corpus; a minimum of
+    10 paths keeps the long tail out of the report."""
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     triples = events.select(
@@ -3075,13 +3041,11 @@ def events_path_trigrams(
     return (
         triples.groupBy("step_1", "step_2", "step_3")
         .agg(F.count(F.lit(1)).alias("n_paths"))
-        .where(F.col("n_paths") >= min_count)
+        .where(F.col("n_paths") >= 10)
     )
 
 
-def supplier_otif_scorecard(
-    spark: SparkSession, sf_dir: str, sla_days: int = 60
-) -> DataFrame:
+def supplier_otif_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier on-time scorecard: per supplier, the share of line items
     shipped within the SLA window of the order date — the
     vendor-performance KPI behind every procurement review.
@@ -3101,7 +3065,7 @@ def supplier_otif_scorecard(
         .groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).alias("n_lineitems"),
-            F.sum(F.when(lag_days <= sla_days, 1).otherwise(0))
+            F.sum(F.when(lag_days <= 60, 1).otherwise(0))
             .cast("long")
             .alias("n_on_time"),
             F.round(F.avg(lag_days), 4).alias("avg_ship_days"),
@@ -3144,7 +3108,7 @@ def events_regr_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     centered = events.join(F.broadcast(mins), "event_type").select(
         "event_type", (F.col("x_raw") - F.col("x0")).alias("x"), "y"
     )
-    # Degenerate-group guards (r04 advice): the builtins' zero-variance
+    # Degenerate-group guards: the builtins' zero-variance
     # behavior is engine-defined (Spark NULLs, other engines may inf/NaN),
     # so both sides compute the regression only when var(x) > 0 (and
     # var(y) > 0 for r2) — identical CASE in the DuckDB oracle.
@@ -3454,7 +3418,7 @@ def events_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 6: financial allocation, variance decomposition, survival analysis,
+# Financial allocation, variance decomposition, survival analysis,
 # robust trend estimation
 # ---------------------------------------------------------------------------
 
@@ -3778,7 +3742,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative share is a single deterministic division and class
     boundaries cannot wobble on float summation order.  The running sum
     over the PART-level aggregate runs through
-    :func:`two_phase_prefix_sum` (r11 — VERDICT r10 item 1): parts land
+    :func:`two_phase_prefix_sum`: parts land
     in ~40 log2-magnitude revenue buckets (order-preserving in the
     descending revenue order; equal revenues share a bucket so the
     partkey tiebreak never straddles buckets), per-bucket sums
@@ -4263,9 +4227,9 @@ def orders_same_day_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def part_prefix_autocomplete(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+def part_prefix_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search-as-you-type PREFIX INDEX build: for every 2-6 character
-    prefix of every part-name word, the top-k parts by lineitem revenue —
+    prefix of every part-name word, the top-3 parts by lineitem revenue —
     the offline artifact an autocomplete service serves from.  Prefix
     explosion is bounded (<= 5 prefixes per word), revenue is the exact
     integer-cent aggregate joined once, and per-prefix top-k is a
@@ -4299,7 +4263,7 @@ def part_prefix_autocomplete(spark: SparkSession, sf_dir: str, k: int = 3) -> Da
     )
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select(
             "prefix",
             F.col("rank").cast("long").alias("rank"),
@@ -4686,8 +4650,8 @@ def customers_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: labels come from ONE anti-join-free aggregation
     (left join orders pre-aggregated to distinct custkeys); the quintile
     assignment comes from the certified :func:`two_phase_global_rank`
-    (r11 — VERDICT r10 item 1 retired the NTILE(5) global window here,
-    the repo's last dimension-sized single-task sort), so the customer
+    (not an NTILE(5) global window, which would be a dimension-sized
+    single-task sort), so the customer
     table is ranked with full parallelism and only the ~11k-row
     floor(acctbal) bucket table sees an unpartitioned fold.  Tie-broken
     by custkey, so the quintile assignment is deterministic and
@@ -4706,8 +4670,8 @@ def customers_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
         F.coalesce(F.col("is_good"), F.lit(0)).alias("is_good"),
     )
-    # Quintile assignment WITHOUT a single-task global ntile window
-    # (r11 — VERDICT r10 item 1): the global ordinal comes from the
+    # Quintile assignment WITHOUT a single-task global ntile window:
+    # the global ordinal comes from the
     # certified two_phase_global_rank (floor(acctbal) range buckets →
     # per-bucket counts → broadcast exclusive offsets → partitioned
     # in-bucket row_number), then bin = ((rank-1)*5) div n + 1 — the
@@ -4870,12 +4834,10 @@ def profile_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_temperature_mix(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.3
-) -> DataFrame:
+def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source sampling (the multilingual pretraining
     recipe, mC4/XLM-R style): sampling probability q_i ∝ p_i^alpha where
-    p_i is a source's natural token share — alpha < 1 flattens the mix,
+    p_i is a source's natural token share — alpha = 0.3 < 1 flattens the mix,
     upweighting tail sources without drowning the head.  Complements
     sample_token_budget_mix (which CUTS to a budget) by producing the
     closed-form DISTRIBUTION a weighted sampler would draw from.
@@ -4902,7 +4864,7 @@ def sample_temperature_mix(
         .withColumn("p", F.col("tokens") / F.col("tot"))
         .withColumn(
             "q_raw",
-            F.round(F.pow(F.col("p"), F.lit(alpha)), 9).cast(
+            F.round(F.pow(F.col("p"), F.lit(0.3)), 9).cast(
                 "decimal(18,9)"
             ),
         )
@@ -4985,14 +4947,12 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_session_window_batch(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def events_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BUILT-IN session_window aggregate in batch mode — Spark's
     native merging-interval operator (each event opens [ts, ts+gap);
     overlapping intervals merge), complementing the hand-rolled
     lag/cumsum sessionize_events: same session boundaries (a gap of
-    exactly ``gap_minutes`` starts a NEW session on both paths), but
+    exactly 30 minutes starts a NEW session on both paths), but
     expressed as ONE aggregation the engine merges internally — no
     window function, no running sum, and the same operator runs
     unchanged as a streaming query.
@@ -5006,7 +4966,7 @@ def events_session_window_batch(
     return (
         events.groupBy(
             F.session_window(
-                F.col("ts").cast("timestamp"), f"{gap_minutes} minutes"
+                F.col("ts").cast("timestamp"), "30 minutes"
             ).alias("sw"),
             "user_id",
         )
@@ -5075,7 +5035,7 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quantile normalization across sources (round 6)
+# Quantile normalization across sources
 # ---------------------------------------------------------------------------
 
 def events_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5144,12 +5104,10 @@ def events_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Grid-binned spatial join (round 6)
+# Grid-binned spatial join
 # ---------------------------------------------------------------------------
 
-def join_spatial_grid(
-    spark: SparkSession, sf_dir: str, radius: int = 25_000
-) -> DataFrame:
+def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial radius join via grid binning — the 2-D extension of
     join_range_binned and the standard distributed-geospatial technique
     (Sedona/GeoMesa grid partitioning): points land in radius-sized square
@@ -5163,12 +5121,13 @@ def join_spatial_grid(
     engines), and the radius predicate is SQUARED EUCLIDEAN in BIGINT —
     no doubles anywhere, so the hash gate certifies candidate completeness
     against the oracle's direct theta join (3x3 neighborhood covers every
-    pair within ``radius`` by construction: axis offsets beyond one cell
+    pair within the radius by construction: axis offsets beyond one cell
     exceed the cell width).
 
     Output: (s_suppkey, n_within, min_dist2) for suppliers with >= 1
     customer inside the radius.
     """
+    radius = 25_000
     r2 = radius * radius
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -5207,7 +5166,7 @@ def join_spatial_grid(
 
 
 # ---------------------------------------------------------------------------
-# TPC-H shapes wave 3 (round 6): Q8 / Q13 / Q15 / Q17 / Q18 / Q21
+# TPC-H shapes wave 3: Q8 / Q13 / Q15 / Q17 / Q18 / Q21
 # ---------------------------------------------------------------------------
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5535,12 +5494,10 @@ def events_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Poisson-bootstrap confidence intervals (round 7)
+# Poisson-bootstrap confidence intervals
 # ---------------------------------------------------------------------------
 
-def events_bootstrap_ci(
-    spark: SparkSession, sf_dir: str, n_reps: int = 32
-) -> DataFrame:
+def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap confidence interval for the mean event value per
     event type — THE distributed bootstrap (each replicate reweights
     every row by an independent Poisson(1) draw, so resampling needs no
@@ -5560,6 +5517,7 @@ def events_bootstrap_ci(
     Scale shape: explode x32 happens AT THE SCAN (map-side), the only
     shuffle is the (event_type, rep) groupBy — map-side combined to
     5 x 32 partial rows; the order-statistic window runs on 160 rows."""
+    n_reps = 32
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
@@ -5612,28 +5570,26 @@ def events_bootstrap_ci(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic negative sampling for contrastive pairs (round 7)
+# Deterministic negative sampling for contrastive pairs
 # ---------------------------------------------------------------------------
 
-def sample_negative_pairs(
-    spark: SparkSession, sf_dir: str, k: int = 2
-) -> DataFrame:
+def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Negative sampling for contrastive training pairs — the step that
     turns an interaction log into (anchor, positive, negative) triples:
-    for every observed (customer, part) purchase pair, generate k
+    for every observed (customer, part) purchase pair, generate 2
     deterministic candidate parts by hash, then ANTI-JOIN the positives
     so no accidental positive survives (rejection step).  The same
     recipe samples hard negatives for embedding training at corpus
     scale.
 
-    Plan at scale (r14 rewrite): candidate generation is SCAN-STAGE
+    Plan at scale: candidate generation is SCAN-STAGE
     arithmetic (hash mod |catalog| — no sampling state, no RNG service)
     applied to the RAW interaction rows, not to a pre-deduped positives
     frame: the generated value depends only on (custkey, j, partkey), so
     duplicate interactions emit duplicate candidates that the single
     (custkey, part) aggregate collapses anyway.  Positives and candidates
     flow as ONE tagged stream from a single generate (j = -1 emits the
-    positive, j in [0, k) the candidates — the interaction join scans
+    positive, j in [0, 2) the candidates — the interaction join scans
     once, not once per stream), and the whole rejection logic is
     TWO stacked aggregations on ONE custkey hash partitioning:
     groupBy(custkey, part) folds duplicates and marks each cell
@@ -5643,10 +5599,10 @@ def sample_negative_pairs(
     custkey satisfies the (custkey, part) clustering, so the second
     aggregate and the final projection run exchange-free: the query is
     ONE order-join shuffle plus ONE custkey repartition of the tagged
-    union, replacing the r11 shape's distinct + eager checkpoint +
-    candidate distinct + rejection join + two aggregate exchanges + final
-    join (driver floor 3.31 s; the checkpoint alone rewrote the positives
-    frame to cache every run).  The traded-away map-side partial
+    union, instead of distinct + eager checkpoint + candidate distinct +
+    rejection join + two aggregate exchanges + final join (driver floor
+    3.31 s that way; the checkpoint alone rewrote the positives frame to
+    cache every run).  The traded-away map-side partial
     aggregation is cheap here: an interaction repeats per (customer,
     part) only a handful of times.  The part-count scalar rides a 1-row
     broadcast.  No step touches |customers| x |catalog|.
@@ -5664,13 +5620,13 @@ def sample_negative_pairs(
         F.col("l_partkey").alias("partkey"),
     )
     # one generate per interaction row covers BOTH streams: j = -1 is the
-    # positive itself, j in [0, k) the hash candidates — the join output
+    # positive itself, j in [0, 2) the hash candidates — the join output
     # scans once instead of once per stream
     tagged = (
         raw.crossJoin(F.broadcast(n_parts))
         .select(
             "custkey",
-            F.explode(F.sequence(F.lit(-1), F.lit(k - 1))).alias("j"),
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("j"),
             "partkey",
             "np",
         )
@@ -5707,7 +5663,7 @@ def sample_negative_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Referential-integrity audit (round 7)
+# Referential-integrity audit
 # ---------------------------------------------------------------------------
 
 def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5768,7 +5724,7 @@ def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-phase distributed global rank (round 7)
+# Two-phase distributed global rank
 # ---------------------------------------------------------------------------
 
 def two_phase_global_rank(
@@ -5797,7 +5753,7 @@ def two_phase_global_rank(
     descending bucket order; ``order`` must already be the descending
     expressions).
 
-    NULL order keys are supported (r8 advice): the bucket join is
+    NULL order keys are supported: the bucket join is
     null-safe (``<=>`` is a legal hash-join key, so the broadcast plan is
     unchanged), and a NULL bucket sorts the same way NULLs sort in the
     in-bucket window (asc = nulls first, desc = nulls last — Spark's
@@ -5898,9 +5854,9 @@ def events_global_rank_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max value per decile: any off-by-one anywhere shifts sum_rank
     and breaks the hash.
 
-    Output contract (r10): min_v/max_v leave the engine as DOUBLE —
+    Output contract: min_v/max_v leave the engine as DOUBLE —
     DECIMAL output columns proved environment-fragile on the driver
-    (r08+r09 red with locally bit-exact values: a harness may render
+    (red with locally bit-exact values: a harness may render
     Decimal('5.20') vs float 5.2 differently), and decimal(18,2)→double
     is correctly rounded and engine-identical while the scaled integer
     stays under 2^53.  The decimal discipline stays INTERNAL.
@@ -5932,7 +5888,7 @@ def events_global_rank_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact weighted median (round 7)
+# Exact weighted median
 # ---------------------------------------------------------------------------
 
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5989,13 +5945,11 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Neyman-optimal stratified allocation (round 7)
+# Neyman-optimal stratified allocation
 # ---------------------------------------------------------------------------
 
-def sample_neyman_allocation(
-    spark: SparkSession, sf_dir: str, budget: int = 1000
-) -> DataFrame:
-    """Neyman-optimal allocation of a sampling budget across strata —
+def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Neyman-optimal allocation of a 1000-row sampling budget across strata —
     the survey-sampling answer to "how many rows should each stratum
     contribute": n_h ∝ N_h·S_h, so high-variance strata get
     proportionally more than their row share (versus the proportional
@@ -6044,7 +5998,7 @@ def sample_neyman_allocation(
         F.round(F.col("sv").cast("double") / F.col("n_h"), 6).alias("mean_v"),
         "s_h",
         F.floor(
-            F.lit(float(budget))
+            F.lit(1000.0)
             * F.col("nhsh").cast("double")
             / F.col("sum_nhsh").cast("double")
         ).cast("long").alias("alloc"),
@@ -6052,7 +6006,7 @@ def sample_neyman_allocation(
 
 
 # ---------------------------------------------------------------------------
-# Binary-segmentation changepoint (round 7)
+# Binary-segmentation changepoint
 # ---------------------------------------------------------------------------
 
 def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6129,7 +6083,7 @@ def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Difference-in-differences (round 7)
+# Difference-in-differences
 # ---------------------------------------------------------------------------
 
 def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6188,7 +6142,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hierarchical share-of-parent (round 7)
+# Hierarchical share-of-parent
 # ---------------------------------------------------------------------------
 
 def sales_hierarchy_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6267,7 +6221,7 @@ def sales_hierarchy_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Heaps-law vocabulary growth (round 7)
+# Heaps-law vocabulary growth
 # ---------------------------------------------------------------------------
 
 def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6326,7 +6280,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A/B test power analysis (round 7)
+# A/B test power analysis
 # ---------------------------------------------------------------------------
 
 def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6374,7 +6328,7 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fourier seasonal strength (round 7)
+# Fourier seasonal strength
 # ---------------------------------------------------------------------------
 
 #: Python-precomputed daily-phase trig table (phase = hour-of-day):
@@ -6468,7 +6422,7 @@ def events_fourier_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-sample distribution tests (round 7): KS, Mann-Whitney U, PSI drift
+# Two-sample distribution tests: KS, Mann-Whitney U, PSI drift
 # ---------------------------------------------------------------------------
 
 def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6596,7 +6550,7 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
         # BIGINT at the output boundary (integer-valued DECIMAL(38,0)
-        # proved driver-fragile r08/r09: a harness rendering it as float
+        # proved driver-fragile: a harness rendering it as float
         # hashes '1031924.0' vs the Decimal's '1031924')
         (F.col("r2") - F.col("n_a") * (F.col("n_a") + 1))
         .cast("long")
@@ -6628,7 +6582,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     skeleton left-join guarantees current-period zero buckets
     contribute, and +1 Laplace smoothing keeps ln finite there.  Each
     bin term (p-q)*ln(p/q) is quantized 6dp into DECIMAL(28,6) so the
-    per-type sum is order-free and engine-identical — 6dp, not 12 (r10):
+    per-type sum is order-free and engine-identical — 6dp, not 12:
     the oracle's LN is the driver box's libm, which may differ from the
     local one in the last ulp; a 1e-12 quantum sits ~2e-4 per term from
     a ulp flip while a 1e-6 quantum is ~4e-10 from one (PSI error bound
@@ -6709,7 +6663,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first(F.col("t_ref").cast("long")).alias("n_ref"),
             F.first(F.col("t_cur").cast("long")).alias("n_cur"),
             # exact order-free decimal sum INTERNALLY, double at the
-            # output boundary (DECIMAL outputs driver-fragile r08/r09)
+            # output boundary (DECIMAL outputs driver-fragile)
             F.sum("term").cast("decimal(38,6)").cast("double").alias("psi"),
         )
     )
@@ -6781,13 +6735,11 @@ def orders_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def profile_l_diversity(
-    spark: SparkSession, sf_dir: str, l: int = 3
-) -> DataFrame:
+def profile_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L-diversity audit — the companion to profile_k_anonymity: a
     k-anonymous class is still unsafe if everyone in it shares the same
     SENSITIVE value (homogeneity attack), so each (nation, account-band)
-    quasi-identifier class must contain >= l distinct market segments.
+    quasi-identifier class must contain >= l = 3 distinct market segments.
     Also reports entropy l-diversity's integer core: the modal-segment
     count, since a class dominated by one segment leaks probabilistically
     even when distinct-l passes.
@@ -6816,7 +6768,7 @@ def profile_l_diversity(
             "class_size",
             "l_distinct",
             "modal_count",
-            (F.col("l_distinct") < l).alias("violates_l"),
+            (F.col("l_distinct") < 3).alias("violates_l"),
         )
     )
 
@@ -6884,7 +6836,7 @@ def events_sprt_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decision_hour",
             (F.col("cpos") + F.col("cneg")).cast("long").alias("n_at_decision"),
             # decimal(28,12) -> double at the output boundary (driver-
-            # fragile DECIMAL lesson r08/r09); comparisons above stay
+            # fragile DECIMAL lesson); comparisons above stay
             # decimal-exact
             F.col("llr").cast("double").alias("llr_at_decision"),
             F.when(F.col("llr") >= upper, F.lit("accept_h1"))
@@ -6980,7 +6932,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), then all arithmetic happens on the 25-cell count table:
     each ln term is one double expression over two exact integers,
     quantized 6dp into DECIMAL(28,6) before the 5-term sums, so the
-    fold is order-free on both engines — 6dp, not 12 (r10): the
+    fold is order-free on both engines — 6dp, not 12: the
     oracle's LN is the driver box's libm, and a 1e-6 quantum is
     ulp-flip-proof where a 1e-12 quantum flips ~2e-4 per term
     (entropy error bound 5e-7 x 5 terms)."""
@@ -7006,7 +6958,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.first("c_from").alias("n_from"),
             # exact order-free decimal sum internally, double at the
-            # output boundary (DECIMAL outputs driver-fragile r08/r09)
+            # output boundary (DECIMAL outputs driver-fragile)
             F.sum("term")
             .cast("decimal(38,6)")
             .cast("double")
@@ -7456,14 +7408,14 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.groupBy("hub_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
         # decimal(·,6) -> double at the output boundary (driver-fragile
-        # DECIMAL lesson r08/r09); the 6dp quantization stays internal so
+        # DECIMAL lesson); the 6dp quantization stays internal so
         # the sum is still order-free and exact
         F.min("d2q").cast("double").alias("min_d2"),
         F.sum("d2q").cast("decimal(38,6)").cast("double").alias("sum_d2"),
     )
 
 
-def sample_ipf_raking(spark: SparkSession, sf_dir: str, rounds: int = 3) -> DataFrame:
+def sample_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative proportional fitting (raking) — the survey-statistics /
     training-mix reweighting primitive: scale the (event_type x day-part)
     count table so BOTH margins match target shares (uniform here, the
@@ -7496,7 +7448,7 @@ def sample_ipf_raking(spark: SparkSession, sf_dir: str, rounds: int = 3) -> Data
     )
     # uniform targets: 1/5 per type row, 1/4 per day-part column
     row_t, col_t = 0.2, 0.25
-    for _ in range(rounds):
+    for _ in range(3):
         rm = w.groupBy("event_type").agg(F.sum("w").alias("row_sum"))
         w = (
             w.join(F.broadcast(rm), "event_type")
@@ -7536,13 +7488,13 @@ def sample_ipf_raking(spark: SparkSession, sf_dir: str, rounds: int = 3) -> Data
         "n",
         # output boundary: decimal(28,9) -> double (scaled int << 2^53, so
         # the conversion is correctly rounded and engine-identical); raw
-        # DECIMAL output columns proved driver-fragile r08/r09
+        # DECIMAL output columns proved driver-fragile
         F.col("w").cast("double").alias("weight"),
     )
 
 
 # ---------------------------------------------------------------------------
-# Round 8 — inequality / concentration analytics (two-phase-rank consumers)
+# Inequality / concentration analytics (two-phase-rank consumers)
 # ---------------------------------------------------------------------------
 
 def customers_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7605,7 +7557,7 @@ def customers_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("seg").alias("segment"),
             "n_customers",
             # cents-exact decimal internally, double at the output
-            # boundary (DECIMAL outputs driver-fragile r08/r09)
+            # boundary (DECIMAL outputs driver-fragile)
             F.col("sum_rev").cast("decimal(18,2)").cast("double").alias("sum_rev"),
             F.round(gini, 6).alias("gini"),
         )
@@ -7667,7 +7619,7 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             "n_cust",
             # cents-exact decimal internally, double at the output
-            # boundary (DECIMAL outputs driver-fragile r08/r09)
+            # boundary (DECIMAL outputs driver-fragile)
             F.col("cum_rev").cast("decimal(18,2)").cast("double").alias("cum_rev"),
             F.round(
                 F.col("cum_rev").cast("double") / F.col("tot").cast("double"), 6
@@ -7680,9 +7632,7 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_cohort_retention_triangle(
-    spark: SparkSession, sf_dir: str, horizon_months: int = 12
-) -> DataFrame:
+def orders_cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic cohort-retention triangle: customers grouped by FIRST
     order month; cell (cohort, m) = the fraction of the cohort that
     ordered again m months later — the growth-analytics readout every
@@ -7713,7 +7663,7 @@ def orders_cohort_retention_triangle(
             .cast("long")
             .alias("months_since"),
         )
-        .where(F.col("months_since") <= horizon_months)
+        .where(F.col("months_since") <= 12)
         .distinct()
         .groupBy("cohort_month", "months_since")
         .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
@@ -7782,7 +7732,7 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             # decimal(12,2) -> double at the output boundary (DECIMAL
-            # outputs driver-fragile r08/r09); dominance tests above ran
+            # outputs driver-fragile); dominance tests above ran
             # on the exact decimal
             F.col("price").cast("double").alias("p_retailprice"),
             F.col("size").alias("p_size"),
@@ -7838,7 +7788,7 @@ def orders_backlog_burndown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 8 — robust / classical statistics (X224-X228)
+# Robust / classical statistics (X224-X228)
 # ---------------------------------------------------------------------------
 
 def events_winsorized_order_stats(
@@ -7849,7 +7799,7 @@ def events_winsorized_order_stats(
     the plain average.
 
     Sibling of the interpolated-percentile events_winsorized_stats
-    (round 5): this variant is ALL-INTEGER — the order-statistic
+   : this variant is ALL-INTEGER — the order-statistic
     formulation whose thresholds are PICKED, never interpolated.
 
     Everything is INTEGER until the final division: values become cents
@@ -8097,7 +8047,7 @@ def customers_nps_bayes_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame
         "n_cust",
         "k_conv",
         # decimal(9,6) -> double at the output boundary (DECIMAL outputs
-        # driver-fragile r08/r09); the 6dp quantization stays internal
+        # driver-fragile); the 6dp quantization stays internal
         F.col("rate").cast("double").alias("raw_rate"),
         shrunk.alias("shrunk_rate"),
     )
@@ -8119,14 +8069,14 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast join (part dimension) + one brand-keyed
     aggregate — the whole regression is map-side partial-aggregatable.
 
-    r16: ``fan_out`` before the projection — the byte-small lineitem file
+    ``fan_out`` before the projection — the byte-small lineitem file
     yields only 3 input splits, so the per-row ln + 12-dp round +
     DECIMAL(28,12) work (the exactness contract, unchanged) ran on 3 of
     32 cores.  One cheap shuffle of the narrow projected rows buys full
     parallelism for the expensive stage; conditional, so a 100 TB scan
     (thousands of splits) skips it.  ABBA interleaved A/B at sf0.1:
     2.44/2.82 -> 1.21/1.31 s (min/med of 6), values identical at 2 SFs.
-    Also examined and refuted this round: decimal(18,12) per-row terms
+    Also examined and refuted: decimal(18,12) per-row terms
     (compact-long decimals; same values, same sum type) — a wash, the
     cost was never the decimal width."""
     li = load(spark, sf_dir, "lineitem").select(
@@ -8168,7 +8118,7 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 8 — timeseries repair / decomposition (X229-X230)
+# Timeseries repair / decomposition (X229-X230)
 # ---------------------------------------------------------------------------
 
 def events_gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8314,16 +8264,14 @@ def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 8 — market-basket association + tariff-band interval overlap
+# Market-basket association + tariff-band interval overlap
 # (X236-X237)
 # ---------------------------------------------------------------------------
 
-def orders_market_basket_lift(
-    spark: SparkSession, sf_dir: str, min_support: int = 5
-) -> DataFrame:
+def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules over order baskets (brand level):
     support / confidence / lift for every brand pair bought together in
-    at least ``min_support`` orders — the one-pass co-occurrence core of
+    at least 5 orders — the one-pass co-occurrence core of
     apriori when the itemset depth is 2 (which is what retail dashboards
     actually ship).
 
@@ -8336,13 +8284,13 @@ def orders_market_basket_lift(
     brand supports broadcast back (brand dimension is small).  The
     basket frame feeds FOUR consumers (order count, supports, both pair
     sides), so it is hash-partitioned by the order key once and
-    checkpointed (r11): the distinct dedup becomes partition-local
+    checkpointed: the distinct dedup becomes partition-local
     (orderkey partitioning satisfies the (orderkey, brand) clustering),
     the pair self-join co-partitions with zero further shuffles, and
     the countDistinct partial runs in place.  1x 1.8 -> 1.4 s,
     10x 3.0 -> 2.6 s, slope 3.23 -> ~1.9, rows identical.
 
-    Checkpoint trade-off (ADVICE r11, same note as dedup._truncate_lineage):
+    Checkpoint trade-off (same note as dedup._truncate_lineage):
     the eager localCheckpoint executes the basket build at CONSTRUCTION
     time and its blocks are executor-lifetime-bound — on a real cluster a
     lost executor kills the frame and the job must restart.  eager=True is
@@ -8377,7 +8325,7 @@ def orders_market_basket_lift(
         .where(F.col("brand_a") < F.col("brand_b"))
         .groupBy("brand_a", "brand_b")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_n"))
-        .where(F.col("pair_n") >= min_support)
+        .where(F.col("pair_n") >= 5)
     )
     sa = supp.select(F.col("brand").alias("brand_a"), F.col("supp").alias("supp_a"))
     sb = supp.select(F.col("brand").alias("brand_b"), F.col("supp").alias("supp_b"))
@@ -8454,7 +8402,7 @@ def join_interval_overlap_weighted(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Round 9: parametric test battery (ANOVA F, Welch t), Nelson-Aalen hazard
+# Parametric test battery (ANOVA F, Welch t), Nelson-Aalen hazard
 # ---------------------------------------------------------------------------
 
 def events_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8734,10 +8682,10 @@ def events_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sax_motifs(spark: SparkSession, sf_dir: str, motif_len: int = 3) -> DataFrame:
+def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAX symbolization + motif mining of the hourly volume series:
     each hour's count maps to a quartile symbol a-d, consecutive
-    symbols form ``motif_len``-grams, and the most frequent motifs are
+    symbols form 3-grams, and the most frequent motifs are
     the series' recurring shapes (Lin et al.'s SAX, the standard
     discretization for time-series pattern mining at scale).
 
@@ -8752,6 +8700,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str, motif_len: int = 3) -> D
     table, like events_stl_decompose.
 
     Output: top 10 (motif, n_occurrences) by (count desc, motif)."""
+    motif_len = 3
     hourly = (
         load(spark, sf_dir, "events")
         .groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))
@@ -8926,7 +8875,7 @@ def join_semi_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         # cents-exact decimal sum internally, double at the output
-        # boundary (DECIMAL outputs driver-fragile r08/r09)
+        # boundary (DECIMAL outputs driver-fragile)
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
         .cast("decimal(18,2)")
         .cast("double")
@@ -8982,8 +8931,8 @@ def orders_duplicate_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # no dedup needed: the build side keeps each order in exactly ONE
         # bin and the three exploded probe bins are distinct, so every
-        # (k, k2) pair joins exactly once (r9 advice: the former
-        # .distinct() re-shuffled the full verified-pair set for nothing)
+        # (k, k2) pair joins exactly once (a .distinct() here would
+        # re-shuffle the full verified-pair set for nothing)
         .select("o_custkey", "k", "k2", "ed", "ed2")
     )
     return (
@@ -9088,9 +9037,8 @@ def profile_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Round 10 — additions (<= 5 per VERDICT r9 item 4); every output column is
-# BIGINT / STRING / double-from-exact-moments — the r10 fragility audit
-# proved DECIMAL output columns are driver-fragile, so none are emitted.
+# Every output column below is BIGINT / STRING / double-from-exact-moments:
+# DECIMAL output columns proved driver-fragile, so none are emitted.
 # ---------------------------------------------------------------------------
 
 # 24 hour-angle unit vectors, PYTHON-precomputed 12dp literals (the geo-hub
@@ -9153,7 +9101,7 @@ def events_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour(F.col("ts").cast("timestamp")).cast("long").alias("h"),
     )
     # Drop unparseable timestamps (NULL hour) BEFORE the grid aggregate
-    # (r10 ADVICE): the DuckDB oracle's angle lookup is an INNER join
+    #: the DuckDB oracle's angle lookup is an INNER join
     # that silently drops such rows, while a when-chain would keep them
     # with NULL c/s terms — filtering here makes both engines treat bad
     # ts data identically instead of diverging the day it appears.
@@ -9233,7 +9181,7 @@ def orders_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     with integer cents) take the Damgaard-Weiner HALF-WEIGHT in both
     F(mu) and L(mu) (each such customer's revenue share IS 1/n, so the
     half-weight adds e/2n to both terms), making perfectly equal
-    revenues yield the conventional S = 1 instead of 0 (r10 ADVICE);
+    revenues yield the conventional S = 1 instead of 0;
     n_below_mean still reports the strict-below count.
 
     Scale: one customer-keyed revenue aggregate, one broadcast of the
@@ -9311,7 +9259,7 @@ def events_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     over them, 6dp.  Strictness (prev < cur > next) makes ties a
     non-event deterministically on both engines.
 
-    OBSERVED-HOURS assumption (r10 ADVICE, deliberate): the series is
+    OBSERVED-HOURS assumption (deliberate): the series is
     built from hours that HAVE events — calendar gaps collapse to
     adjacency and n_hours counts observed, not elapsed, hours.  On this
     corpus every type fires every hour, so the two definitions coincide;
@@ -9375,7 +9323,7 @@ def orders_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
     are one double expression, and the per-customer B quantizes 6dp
     into DECIMAL(18,6) BEFORE the segment sum so the fold is order-free
     — the mean_burstiness output is that exact decimal sum divided
-    once, cast double (no DECIMAL leaves the engine: r10 output
+    once, cast double (no DECIMAL leaves the engine: the output
     contract).
 
     Scale: one (custkey) window over customer-sized partitions (the

@@ -42,18 +42,16 @@ def _cosine_vs_query(vec: Column) -> Column:
     return dot(vec, F.col("q_vec")) / (norm(vec) * F.col("q_norm"))
 
 
-def similarity_topk_bruteforce(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for one query vector.
 
     The 1-row query side broadcasts; the candidate scan never shuffles and
     Spark plans TakeOrderedAndProject for the limit (per-task heaps, no
     global sort).  This plan is unchanged at 10^9 candidates."""
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -61,7 +59,7 @@ def similarity_topk_bruteforce(
             F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
         )
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(10)
 
 
 def _plane_weight(plane: int, dim_index: Column) -> Column:
@@ -102,9 +100,7 @@ def signature_bits(vec: Column, num_planes: int = NUM_PLANES) -> Column:
     return F.concat(*bits)
 
 
-def similarity_ann_lsh(
-    spark: SparkSession, sf_dir: str, k: int = 5, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ann_lsh(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """Approximate NN: candidates = vectors in the query's sign-LSH bucket,
     ranked by exact cosine, top-k.  At 100 TB the bucket key is also the
     at-rest partition key, so a probe reads one partition, not the corpus.
@@ -114,13 +110,13 @@ def similarity_ann_lsh(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") == query_vec_id)
+        emb.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("embedding").alias("q_vec"),
                 norm(F.col("embedding")).alias("q_norm"),
                 F.col("bucket").alias("q_bucket"))
     )
-    candidates = emb.where(F.col("vec_id") != query_vec_id).join(
+    candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(q), F.col("bucket") == F.col("q_bucket")
     )
     scored = candidates.select(
@@ -131,12 +127,9 @@ def similarity_ann_lsh(
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def similarity_ann_lsh_multiprobe(
-    spark: SparkSession, sf_dir: str, k: int = 5,
-    query_vec_id: int = QUERY_VEC_ID, max_hamming: int = 1,
-) -> DataFrame:
+def similarity_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH ANN: candidates come from the query's bucket
-    AND every bucket within hamming distance ``max_hamming`` of it — the
+    AND every bucket within hamming distance 1 of it — the
     standard recall knob for sign-LSH (a near neighbor that lands just
     across one hyperplane is recovered from the adjacent bucket).  Probing
     b+1 of the 2^b buckets reads ~(1+b)/2^b of the corpus instead of
@@ -146,7 +139,7 @@ def similarity_ann_lsh_multiprobe(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") == query_vec_id)
+        emb.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("q_vec"),
                 norm(F.col("embedding")).alias("q_norm"),
                 F.col("bucket").alias("q_bucket"))
@@ -158,15 +151,15 @@ def similarity_ann_lsh_multiprobe(
         ).otherwise(0)
         for i in range(1, NUM_PLANES + 1)
     )
-    candidates = emb.where(F.col("vec_id") != query_vec_id).join(
-        F.broadcast(q), hamming <= max_hamming
+    candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).join(
+        F.broadcast(q), hamming <= 1
     )
     scored = candidates.select(
         "vec_id",
         "bucket",
         F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(5)
 
 
 def write_ann_bucket_layout(emb: DataFrame, path: str) -> None:
@@ -217,15 +210,13 @@ def probe_ann_bucket_layout(
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def similarity_ann_batch(
-    spark: SparkSession, sf_dir: str, k: int = 3, n_queries: int = 8
-) -> DataFrame:
+def similarity_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED ANN: top-k neighbors for a whole batch of query vectors in
     ONE bucketed pass — the production serving shape (queries arrive in
     batches; running the single-query plan per query re-scans the corpus
     batch-size times).
 
-    Plan: the query batch (vec_id < n_queries) broadcasts with its
+    Plan: the query batch (vec_id < 8) broadcasts with its
     buckets; candidates equi-join on bucket equality — every query only
     meets its own bucket's candidates, so the scored pair count is
     sum-over-queries of bucket sizes, never |batch| x |corpus|.  One
@@ -235,7 +226,7 @@ def similarity_ann_batch(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") < n_queries)
+        emb.where(F.col("vec_id") < 8)
         .select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("q_vec"),
@@ -256,7 +247,7 @@ def similarity_ann_batch(
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= 3)
         .select("q_id", "vec_id", "cosine", "rnk")
     )
 
@@ -325,9 +316,7 @@ def ivf_assignments(emb: DataFrame, k: int = NUM_CENTROIDS) -> DataFrame:
     )
 
 
-def kmeans_refine_centroids(
-    emb: DataFrame, k: int = NUM_CENTROIDS, iterations: int = 2
-) -> DataFrame:
+def kmeans_refine_centroids(emb: DataFrame, iterations: int = 2) -> DataFrame:
     """Lloyd refinement of the IVF centroids — the k-means step the
     first-K-vectors init (_centroids) stands in for.  Returns the refined
     centroid table ``(centroid_id, c_vec, c_norm)``.
@@ -351,7 +340,7 @@ def kmeans_refine_centroids(
     computed from them — are bit-identical on any engine running the same
     recurrence.  That is what lets the full 2-iteration Lloyd loop carry a
     plain SQL oracle instead of a rows-only check."""
-    cent = _centroids(emb, k).localCheckpoint(eager=True)
+    cent = _centroids(emb, NUM_CENTROIDS).localCheckpoint(eager=True)
     with_norm = emb.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
@@ -366,7 +355,7 @@ def kmeans_refine_centroids(
                 6,
             ).alias("c_cos"),
         )
-        # argmax as a max_by hash aggregate (r13): the ordering struct
+        # argmax as a max_by hash aggregate: the ordering struct
         # (c_cos desc, centroid_id asc via negation) is the same total
         # order the previous row_number window applied, but the
         # aggregate map-side-combines each vector's K centroid rows to
@@ -456,9 +445,7 @@ def ivf_cluster_stats(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def similarity_ann_ivf(
-    spark: SparkSession, sf_dir: str, k: int = 5, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via IVF probe: assign all vectors to centroids, find
     the query's centroid, rank only that cluster by exact cosine, top-k.
 
@@ -468,14 +455,14 @@ def similarity_ann_ivf(
     assign = ivf_assignments(emb)
     with_cluster = emb.join(assign, "vec_id")
     q = (
-        with_cluster.where(F.col("vec_id") == query_vec_id)
+        with_cluster.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(
             F.col("embedding").alias("q_vec"),
             norm(F.col("embedding")).alias("q_norm"),
             F.col("centroid_id").alias("q_centroid"),
         )
     )
-    candidates = with_cluster.where(F.col("vec_id") != query_vec_id).join(
+    candidates = with_cluster.where(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(q), F.col("centroid_id") == F.col("q_centroid")
     )
     scored = candidates.select(
@@ -483,7 +470,7 @@ def similarity_ann_ivf(
         F.col("centroid_id").cast("long").alias("centroid_id"),
         F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(5)
 
 
 # ---------------------------------------------------------------------------
@@ -508,7 +495,7 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def pq_codebook(emb: DataFrame, sub_dim: int, m: int = PQ_M, k: int = PQ_K) -> DataFrame:
+def pq_codebook(emb: DataFrame, sub_dim: int) -> DataFrame:
     """Deterministic PQ codebook: the k vectors with the smallest
     (md5(vec_id), vec_id) act as codewords, split into m sub-vectors.
 
@@ -527,20 +514,20 @@ def pq_codebook(emb: DataFrame, sub_dim: int, m: int = PQ_M, k: int = PQ_K) -> D
             F.md5(F.col("vec_id").cast("string")).alias("draw"),
         )
         .orderBy("draw", "vec_id")
-        .limit(k)
+        .limit(PQ_K)
     )
     w = Window.orderBy("draw", "vec_id")
     coded = train.withColumn("code_id", (F.row_number().over(w) - 1).cast("int"))
     return coded.select(
         "code_id",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
+        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
         F.slice(
             "embedding", F.col("s") * sub_dim + 1, F.lit(sub_dim)
         ).alias("cvec"),
     )
 
 
-def pq_encode(emb: DataFrame, codebook: DataFrame, sub_dim: int, m: int = PQ_M) -> DataFrame:
+def pq_encode(emb: DataFrame, codebook: DataFrame, sub_dim: int) -> DataFrame:
     """Encode every vector to m code ids (nearest codeword per subspace).
 
     The codebook is pre-grouped to one row per subspace (an array of
@@ -560,7 +547,7 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, sub_dim: int, m: int = PQ_M) 
     )
     sub = emb.select(
         "vec_id", "embedding",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
+        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
     ).select(
         "vec_id", "s",
         F.slice(
@@ -582,9 +569,7 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, sub_dim: int, m: int = PQ_M) 
     )
 
 
-def similarity_pq_adc(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed ANN: top-k by asymmetric distance computation.
 
     The corpus is PQ-encoded (PQ_M nibbles per vector — a 512x compression
@@ -600,7 +585,7 @@ def similarity_pq_adc(
     sub_dim = max(1, infer_dim(emb, "embedding") // PQ_M)
     cb = pq_codebook(emb, sub_dim)
     enc = pq_encode(fan_out(emb), cb, sub_dim)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
         F.col("embedding").alias("q_vec"),
     ).select(
@@ -618,7 +603,7 @@ def similarity_pq_adc(
     )
     nib = F.lower(F.conv(F.col("code_id").cast("string"), 10, 16))
     return (
-        enc.where(F.col("vec_id") != query_vec_id)
+        enc.where(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(qtab), ["s", "code_id"])
         .withColumn("nib", nib)
         .groupBy("vec_id")
@@ -633,7 +618,7 @@ def similarity_pq_adc(
             F.round(F.sum("qd"), 6).alias("adc_dist"),
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -644,11 +629,9 @@ def similarity_pq_adc(
 JL_OUT_DIM = 16
 
 
-def embedding_random_projection(
-    spark: SparkSession, sf_dir: str, out_dim: int = JL_OUT_DIM
-) -> DataFrame:
+def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss sketch: project 64-dim embeddings to
-    ``out_dim`` with a deterministic Rademacher (+-1/sqrt(k)) matrix derived
+    JL_OUT_DIM with a deterministic Rademacher (+-1/sqrt(k)) matrix derived
     from md5 — 4x smaller vectors whose pairwise distances are preserved in
     expectation, the standard pre-ANN compression when PQ's lossy codes are
     too coarse.
@@ -661,7 +644,7 @@ def embedding_random_projection(
     emb = load(spark, sf_dir, "embeddings")
     projected = fan_out(emb).select(
         "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(out_dim - 1))).alias("out_dim"),
+        F.explode(F.sequence(F.lit(0), F.lit(JL_OUT_DIM - 1))).alias("out_dim"),
         F.col("embedding").alias("e"),
     )
 
@@ -696,9 +679,7 @@ def _jl_weight_dyn(j_col: Column, dim_index: Column) -> Column:
     return F.when(sign_bit, F.lit(scale)).otherwise(F.lit(-scale))
 
 
-def similarity_ivfpq_adc(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the billion-scale ANN composition — an IVF coarse quantizer
     narrows the search to one centroid's inverted list, and PQ codes of the
     RESIDUALS (vector minus its centroid) replace the float vectors inside
@@ -741,7 +722,7 @@ def similarity_ivfpq_adc(
     cb = pq_codebook(res, sub_dim)
     enc = pq_encode(fan_out(res), cb, sub_dim)
 
-    q_res = res.where(F.col("vec_id") == query_vec_id).select(
+    q_res = res.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("centroid_id").alias("q_centroid"),
         F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
         F.col("embedding").alias("q_re"),
@@ -757,7 +738,7 @@ def similarity_ivfpq_adc(
     )
     nib = F.lower(F.conv(F.col("code_id").cast("string"), 10, 16))
     return (
-        enc.where(F.col("vec_id") != query_vec_id)
+        enc.where(F.col("vec_id") != QUERY_VEC_ID)
         .join(res.select("vec_id", "centroid_id").distinct(), "vec_id")
         .join(
             F.broadcast(qtab),
@@ -783,17 +764,11 @@ def similarity_ivfpq_adc(
             "pq_code", "adc_dist",
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
-def similarity_recall_at_k(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    n_queries: int = 20,
-    num_planes: int = 3,
-) -> DataFrame:
+def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the sign-LSH ANN against exact brute-force ground truth
     over a batch of query vectors — the evaluation harness every ANN
     deployment runs before trusting an index (FAISS/ScaNN benchmark shape).
@@ -806,7 +781,7 @@ def similarity_recall_at_k(
     engine-exact (raw float ordering would let a last-ulp difference flip
     two near-equal neighbors across engines).
 
-    ``num_planes=3`` (8 buckets), not the index default of 8 (256 buckets):
+    3 planes (8 buckets), not the index's NUM_PLANES = 8 (256 buckets):
     the synthetic embeddings are near-isotropic, and the harness MEASURES
     that — at 8 planes single-probe recall collapses to ~0.01, at 3 planes
     it is ~0.18 for ~1/8 of the corpus scanned per probe.  That finding
@@ -820,12 +795,13 @@ def similarity_recall_at_k(
     everything, ANN over the in-bucket subset (a cheap flag, not a second
     scan).  The recall join and rollup run on Q*k rows.  Exactly one
     corpus-wide shuffle (the window's q_id hash), and q_id has
-    ``n_queries`` distinct values, so AQE coalesces it to the query count.
+    20 distinct values, so AQE coalesces it to the query count.
     """
+    k = 10
     emb = fan_out(load(spark, sf_dir, "embeddings")).withColumn(
-        "bucket", signature_bits(F.col("embedding"), num_planes)
+        "bucket", signature_bits(F.col("embedding"), 3)
     )
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
         norm(F.col("embedding")).alias("q_norm"),
@@ -1068,18 +1044,12 @@ def similarity_sq8_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka dimension-truncation quality sweep (round 6)
+# Matryoshka dimension-truncation quality sweep
 # ---------------------------------------------------------------------------
 
-def similarity_matryoshka_error(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    budgets: tuple[int, ...] = (8, 16, 32, 64),
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
+def similarity_matryoshka_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka / dimension-truncation retrieval-quality sweep: for
-    each prefix-dimension budget d, how much of the FULL-vector top-k
+    each prefix-dimension budget d in (8, 16, 32, 64), how much of the FULL-vector top-k
     does cosine over only the first d dimensions recover, and how far do
     the true top-k items drift in the truncated ranking?  This is the
     certification you run before shipping truncated embeddings (MRL-style
@@ -1098,14 +1068,15 @@ def similarity_matryoshka_error(
     rankings are windows over the budget partition.  At 100 TB the
     windows become per-budget top-k TakeOrdered passes; the certification
     output stays |budgets| rows regardless of corpus size."""
+    k = 10
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .select(
             "vec_id",
-            F.explode(F.array([F.lit(d) for d in budgets])).alias("budget"),
+            F.explode(F.array([F.lit(d) for d in (8, 16, 32, 64)])).alias("budget"),
             F.col("embedding").alias("e"),
             F.col("q_vec"),
             F.col("q_norm"),
@@ -1157,15 +1128,10 @@ def similarity_matryoshka_error(
 
 
 # ---------------------------------------------------------------------------
-# MIPS -> cosine norm-augmentation certification (round 6)
+# MIPS -> cosine norm-augmentation certification
 # ---------------------------------------------------------------------------
 
-def similarity_mips_transform(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
+def similarity_mips_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum-inner-product search reduced to cosine search via the
     norm-augmentation transform (Bachrach et al. / Shrivastava-Li): each
     candidate x gains one dimension sqrt(M² − ‖x‖²) where M = max ‖x‖,
@@ -1184,20 +1150,20 @@ def similarity_mips_transform(
 
     Scale shape: one candidate scan + a 1-row broadcast for M and a
     1-row broadcast for the query; the dot ranking is a TakeOrdered
-    top-k and the cosine ranking a two-phase global rank (r11 — neither
-    is a single-task window); output is k rows."""
+    top-k and the cosine ranking a two-phase global rank (neither is a
+    single-task window); output is k rows."""
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     # MAX of the SQUARED norms (not max(norm)**2): the sqrt round-trip
     # would leave m**2 - <x,x> a few ulps NEGATIVE for the argmax vector
     # itself; with m2 = max(<x,x>) the residual is exactly 0.0 there.
     m = (
-        emb.where(F.col("vec_id") != query_vec_id)
+        emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .select(dot(F.col("embedding"), F.col("embedding")).alias("nx2"))
         .agg(F.max("nx2").alias("m2"))
     )
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .join(F.broadcast(m))
         .select(
@@ -1225,7 +1191,7 @@ def similarity_mips_transform(
             ).alias("cos_aug"),
         )
     )
-    # r11: both global ranks without a single-task window.  rank_cos must
+    # Both global ranks without a single-task window.  rank_cos must
     # be the EXACT global cosine rank even for rows deep in the ordering
     # (a top-k-by-dot row can rank anywhere by cosine), so it runs through
     # the certified two_phase_global_rank (~2k floor(cos*1e3) buckets —
@@ -1245,7 +1211,7 @@ def similarity_mips_transform(
     w_dot = Window.orderBy(F.col("dot_score").desc(), F.col("vec_id"))
     ranked = (
         ranked_cos.orderBy(F.col("dot_score").desc(), F.col("vec_id"))
-        .limit(k)
+        .limit(10)
         .withColumn("rank_dot", F.row_number().over(w_dot).cast("long"))
     )
     return (
@@ -1352,9 +1318,7 @@ def sample_kcenter_coreset(
     return out
 
 
-def similarity_power_iteration(
-    spark: SparkSession, sf_dir: str, iterations: int = 2
-) -> DataFrame:
+def similarity_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction of the embedding matrix by
     distributed POWER ITERATION — the first component a pipeline
     inspects for anisotropy ("all my embeddings point one way") and the
@@ -1379,7 +1343,7 @@ def similarity_power_iteration(
         .select("vec_id", F.posexplode("embedding").alias("i", "xi_raw"))
         .select("vec_id", F.col("i").cast("long").alias("i"), F.col("xi_raw").cast("double").alias("xi"))
         # the exploded matrix is read 2x per iteration; materialize it
-        # ONCE, hash-partitioned by vec_id (r11 — the MLlib iterate-on-
+        # ONCE, hash-partitioned by vec_id (the MLlib iterate-on-
         # cached-input discipline): the s aggregate becomes partition-
         # local, the x|><|s join co-partitions (s inherits vec_id
         # partitioning from its own agg), and the y aggregate's exchange
@@ -1393,7 +1357,7 @@ def similarity_power_iteration(
         F.lit(0.125).cast("decimal(28,12)").alias("vi"),
     )
     m = None
-    for _ in range(iterations):
+    for _ in range(2):
         s = (
             x.join(F.broadcast(v), "i")
             .groupBy("vec_id")

@@ -138,12 +138,14 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lgConfigK=12 default -> relative standard error ~1.6%; 5% is > 3 RSE
     bound = 0.05
-    # merge_consistent: DataSketches register semantics make direct == merged
-    # EXACTLY today (Spark 4.1 bundles DataSketches with lossless HLL_4
-    # union at same lgK), but that is an implementation detail — certify to
-    # a 1e-9 relative tolerance so a library upgrade that reorders float
-    # folds cannot flip the row red without a real mergeability bug
-    # (r04 advice; the oracle hardcodes TRUE either way).
+    # merge_consistent: direct == merged holds at sf0.001 and sf0.01 but is
+    # NOT guaranteed.  At sf0.1 (1500 distinct users) the direct estimate
+    # and hll_union_agg over the one whole-corpus sketch both give 1499,
+    # while unions of per-day or per-event_type sketches give 1488 and
+    # unions of per-hour or user_id % 8 sketches give 1488-1507 depending
+    # on the session's partitioning, so the flag reads False there against
+    # the oracle's hardcoded TRUE (open; ROADMAP item 1).  The 1e-9
+    # relative tolerance only absorbs float-fold reordering.
     merge_tol = 1e-9
     return (
         direct.crossJoin(merged)
@@ -162,12 +164,10 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_count_min_sketch(
-    spark: SparkSession, sf_dir: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch built ENTIRELY from relational ops, certified
-    against exact counts (Cormode & Muthukrishnan 2005): ``depth``
-    independent hash rows of ``width`` counters each; a key's estimate is
+    against exact counts (Cormode & Muthukrishnan 2005): 4
+    independent hash rows of 64 counters each; a key's estimate is
     the MIN over rows of its cell total.  The classic guarantees — never
     underestimates, overestimate bounded by colliding mass — fall out of
     the construction and the driver's hash gate certifies them row by row
@@ -185,6 +185,7 @@ def agg_count_min_sketch(
 
     Output: one row per distinct user_id with exact count, CMS estimate,
     and the overestimate (>= 0 by construction)."""
+    depth = 4
     events = load(spark, sf_dir, "events")
     exact = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
@@ -203,7 +204,7 @@ def agg_count_min_sketch(
                 16,
                 10,
             ).cast("long")
-            % width
+            % 64
         )
 
     # keyed is distinct-key-sized (tiny next to the corpus) and feeds five
@@ -228,9 +229,7 @@ def agg_count_min_sketch(
     )
 
 
-def agg_bloom_filter_fpr(
-    spark: SparkSession, sf_dir: str, m: int = 4096, k: int = 3
-) -> DataFrame:
+def agg_bloom_filter_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter certification built ENTIRELY from relational ops
     (Bloom 1970): insert every BUYER (distinct o_custkey) into an m-bit
     filter via k md5-derived bit positions, probe every NON-buyer
@@ -252,6 +251,8 @@ def agg_bloom_filter_fpr(
     <= 3x theory as a BOOLEAN so libm pow ulps cannot flip the hash.
     Output: one row (n_keys, n_bits_set, n_probes, n_false_positives,
     fpr_measured, within_bound)."""
+    m = 4096
+    k = 3
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     # keys = 1995 buyers; probes = the rest (on this synthetic corpus every
@@ -534,7 +535,7 @@ def agg_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (16 numbers per partition); only the certification side pays
     the key shuffle, and a production deployment drops it.
 
-    r16: ``fan_out`` before the sign computation — 16 md5+conv per row
+    ``fan_out`` before the sign computation — 16 md5+conv per row
     over a byte-small events file ran on ONE input split (1.6M md5 on
     one core; also why this row was storm-sensitive).  ABBA interleaved
     A/B at sf0.1: 1.73/2.02 -> 1.31/1.51 s (min/med of 6); conditional,
@@ -577,7 +578,7 @@ def agg_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_rows",
         # BIGINT at the output boundary: integer-valued DECIMAL(38,0)
-        # proved driver-fragile r08/r09 (Decimal '30951' vs float
+        # proved driver-fragile (Decimal '30951' vs float
         # '30951.0' hash asymmetry); both values are integral so the
         # casts are exact on both engines
         F.col("f2_estimate").cast("long").alias("f2_estimate"),
@@ -593,7 +594,7 @@ def agg_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFrame:
+def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum values) distinct-count sketch per event type — the
     order-statistics alternative to HLL: hash every key into [0,1), keep
     the k smallest, estimate D ~ (k-1)/h_(k) (Bar-Yossef et al.).  KMV's
@@ -610,6 +611,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFram
     Scale: one (type, user) distinct then a bounded top-k window —
     at production scale the distinct collapses into per-partition
     k-min-heaps (aggregate state k hashes), which is the point."""
+    k = 256
     ev = load(spark, sf_dir, "events").select("event_type", "user_id").distinct()
     h = (
         F.conv(
@@ -655,7 +657,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFram
     )
 
 
-def agg_kmv_setops(spark: SparkSession, sf_dir: str, k: int = 64) -> DataFrame:
+def agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch SET OPERATIONS — the capability that justifies KMV over
     HLL (agg_kmv_distinct's docstring claim, now certified): union and
     intersection cardinalities of the purchase-user and click-user sets
@@ -674,6 +676,7 @@ def agg_kmv_setops(spark: SparkSession, sf_dir: str, k: int = 64) -> DataFrame:
 
     Scale: one (user, flags) aggregate + one bounded top-k; exact sides
     are keyed distincts that exist only to certify the estimator."""
+    k = 64
     ev = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("purchase", "click")
     )

@@ -80,7 +80,7 @@ def materialized_frame(
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
-    # r15: hand the reader the schema from one leaf-footer read instead
+    # Hand the reader the schema from one leaf-footer read instead
     # of paying the ~110 ms per-call schema-inference job (same move as
     # tables.load; every lens query over a stored frame paid it).  Store
     # dirs are FLAT single-writer parquet (coalesce(n).write), so any

@@ -83,12 +83,12 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     The driver harness hands us its own SparkSession; only conf keys that
     are runtime-mutable are applied (static ones like driver memory are
     left alone).  ``spark.sql.shuffle.partitions`` IS runtime-mutable and
-    matters most here (r11): a stock session defaults to 200 shuffle
+    matters most here: a stock session defaults to 200 shuffle
     partitions, ~6x more tasks than the 32-core box needs — every keyed
     exchange in a driver-side run paid that scheduling overhead before
     AQE coalescing clawed part of it back.
 
-    r12 (ADVICE r11): the shuffle-partition override applies ONLY when
+    The shuffle-partition override applies ONLY when
     the session still carries Spark's stock 200 default — a harness that
     deliberately configured its own value keeps it.  The applied value
     follows the session's actual parallelism (``defaultParallelism``),
@@ -111,7 +111,7 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - static conf on some builds
             pass
     try:
-        # KNOWN AMBIGUITY (ADVICE r12): "== 200" cannot distinguish the
+        # KNOWN AMBIGUITY: "== 200" cannot distinguish the
         # stock default from a harness that deliberately configured
         # exactly 200 — SQLConf reports no explicitly-set flag for a
         # session conf, so a deliberate 200 is resized like the default.

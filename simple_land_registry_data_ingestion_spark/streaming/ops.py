@@ -212,7 +212,7 @@ def run_stream_to_table(
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # r15: two state-store costs that buy NOTHING for an ephemeral
+    # Two state-store costs that buy NOTHING for an ephemeral
     # availableNow run into a fresh checkpoint (set for the query's
     # lifetime, restored after):
     #  - checkpoint file checksums (Spark 4) write a sidecar file per
@@ -223,8 +223,8 @@ def run_stream_to_table(
     #    of micro-batches, and its background thread racing a finishing
     #    task is exactly the transient failure the retry loop below
     #    absorbs — deferring it past any plausible run removes both the
-    #    cost and most of the race surface (the test JVM has pinned the
-    #    same two values since r03 for the flake reason).
+    #    cost and most of the race surface (the test JVM pins the same
+    #    two values for the flake reason).
     #  A long-running production stream that restarts from its
     #  checkpoint wants both defaults back — they are scoped to this
     #  memory-sink helper, not session-wide.
@@ -285,7 +285,7 @@ def run_stream_to_table(
     return out
 
 
-#: r16 refutation (kept on the record): a RAM-backed (/dev/shm) ephemeral
+#: Refuted, kept on the record: a RAM-backed (/dev/shm) ephemeral
 #: checkpoint for this helper was implemented and looked like a
 #: -0.15..-0.35 s/query win in a fixed-order interleaved A/B — but under
 #: ABBA order alternation (reversing which variant runs first on
@@ -425,7 +425,7 @@ def stream_stream_interval_join(
         & (F.col("c_ts") < F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
     )
-    # r16: 4 state partitions, not the helper's 8 — an interval join opens
+    # 4 state partitions, not the helper's 8 — an interval join opens
     # FOUR state store instances per partition and per-key state here is
     # tiny (1500 users), so per-store commit constants dominate.  ABBA
     # interleaved A/B at sf0.1 (6 passes, order alternated): medians
@@ -443,7 +443,6 @@ def stream_left_outer_interval_join(
     sf_dir: str,
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """LEFT-OUTER stream-stream interval join — the production attribution
     shape: EVERY purchase emits, either matched to the same user's clicks
@@ -462,6 +461,7 @@ def stream_left_outer_interval_join(
     interval the FINAL watermark passed — purchases younger than the
     final watermark are withheld and their state discarded.  The DuckDB
     twin applies the same final-watermark filter to the null side."""
+    watermark = "1 hour"
     clicks = (
         events_stream(spark, sf_dir, glob, max_files_per_trigger)
         .where(F.col("event_type") == "click")
@@ -489,7 +489,7 @@ def stream_left_outer_interval_join(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "leftOuter",
     )
-    # r16: 4 state partitions (see stream_stream_interval_join) — ABBA
+    # 4 state partitions (see stream_stream_interval_join) — ABBA
     # A/B 2.22/2.66 -> 2.15/2.41 min/med.
     out = run_stream_to_table(joined, "append", state_partitions=4)
     return out.groupBy(F.col("p_user").alias("user_id")).agg(
@@ -611,7 +611,6 @@ def stream_inactivity_sessions(
     sf_dir: str,
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Closed user sessions via the EventTimeTimeout stateful operator.
     Only sessions the watermark has proven over (last event + gap passed)
@@ -619,7 +618,7 @@ def stream_inactivity_sessions(
     — the same withholding discipline as append-mode windows."""
     sessions = (
         events_stream(spark, sf_dir, glob, max_files_per_trigger)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "10 minutes")
         .select("user_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -972,8 +971,6 @@ def stream_full_outer_interval_join(
     spark: SparkSession,
     sf_dir: str,
     glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """FULL-OUTER stream-stream interval join — the audit-complete
     attribution shape: every purchase emits (matched or null-click once
@@ -994,8 +991,9 @@ def stream_full_outer_interval_join(
     tests/test_streaming.py::test_full_outer_interval_join_watermark_boundary.
     The DuckDB twin applies both final-watermark filters explicitly
     with the same inclusivity."""
+    watermark = "1 hour"
     clicks = (
-        events_stream(spark, sf_dir, glob, max_files_per_trigger)
+        events_stream(spark, sf_dir, glob)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -1005,7 +1003,7 @@ def stream_full_outer_interval_join(
         .withWatermark("c_ts", watermark)
     )
     purchases = (
-        events_stream(spark, sf_dir, glob, max_files_per_trigger)
+        events_stream(spark, sf_dir, glob)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1021,7 +1019,7 @@ def stream_full_outer_interval_join(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "fullOuter",
     )
-    # r16: 4 state partitions (see stream_stream_interval_join) — ABBA
+    # 4 state partitions (see stream_stream_interval_join) — ABBA
     # A/B 2.39/2.45 -> 2.19/2.38 min/med.
     out = run_stream_to_table(joined, "append", state_partitions=4)
     return out.groupBy(
@@ -1048,7 +1046,6 @@ def stream_state_inspect(
     spark: SparkSession,
     sf_dir: str,
     glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Spark 4 STATE STORE READER certification — operational
     observability for stateful streaming: after a per-user streaming
@@ -1072,7 +1069,7 @@ def stream_state_inspect(
     ckpt = tempfile.mkdtemp(prefix="state_inspect_ckpt_")
     try:
         counts = (
-            events_stream(spark, sf_dir, glob, max_files_per_trigger)
+            events_stream(spark, sf_dir, glob)
             .groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )

@@ -78,7 +78,7 @@ def _as_nullable(dt):
     footer fast path must match it exactly: builder outputs with
     non-nullable columns are written as parquet ``required`` fields, and
     without this the converted schema would differ from inference in
-    nullability alone (ADVICE r15, caught by
+    nullability alone (pinned by
     tests/test_round16_ops.py::test_store_footer_schema_equals_spark_inference)."""
     from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
@@ -117,7 +117,7 @@ def _footer_schema(path: str):
         return None
     try:
         arrow = pq.ParquetFile(path).schema_arrow
-        # ADVICE r15: no prefer_timestamp_ntz fallback to the older
+        # No prefer_timestamp_ntz fallback to the older
         # one-arg from_arrow_schema — it would return ltz timestamps for
         # ntz-written parquet and the caller's cast would SHIFT values by
         # the session timezone.  Inference (None) is the safe fallback.

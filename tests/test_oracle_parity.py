@@ -3,6 +3,8 @@ a local replica of the driver's t2 correctness gate."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -17,14 +19,45 @@ def con():
     con.close()
 
 
+#: The only parameters a registered query takes beyond (spark, sf_dir):
+#: seams that tests set.  Every other setting is a constant in the body,
+#: because each oracle inlines the same value.
+_TEST_SEAMS = {
+    "dedup_embedding_cosine": {"threshold", "max_vectors"},
+    "dedup_exact_substring": {"window"},
+    "dedup_kcore_peel": {"rounds"},
+    "dedup_link_prediction": {"k", "degree_cap"},
+    "dedup_semdedup": {"row_block"},
+    "dedup_simhash_pairs": {"max_nibble_distance"},
+    "dedup_tfidf_cosine": {"docs"},
+    "orders_hill_tail_index": {"k"},
+    "sample_kcenter_coreset": {"k"},
+    "sample_token_budget_mix": {"tokens_per_lang"},
+    "similarity_ann_lsh": {"k"},
+    "similarity_range_search": {"threshold", "k", "emb"},
+    "stream_full_outer_interval_join": {"glob"},
+    "stream_inactivity_sessions": {"glob", "max_files_per_trigger"},
+    "stream_left_outer_interval_join": {"glob", "max_files_per_trigger"},
+    "stream_state_inspect": {"glob"},
+    "stream_stream_interval_join": {"glob", "max_files_per_trigger", "watermark"},
+    "stream_two_level_window": {"glob", "max_files_per_trigger"},
+    "stream_upsert_latest": {"glob", "max_files_per_trigger"},
+    "text_bpe_word_merges": {"iters"},
+}
+
+
 def test_registry_is_one_ordered_map():
     """queries() and oracle_sql() share one key order, led by the 50-entry
-    certification window, and every key names the function it runs."""
+    certification window, and every key names the function it runs.  A
+    registered function takes (spark, sf_dir) plus only its test seams."""
     q = entry_mod.queries()
     assert list(q) == list(entry_mod.oracle_sql())
     assert list(q)[:50] == entry_mod._R16_WINDOW
     for name, fn in q.items():
         assert fn.__name__ == name
+    for name, fn in entry_mod._FUNCS.items():
+        extra = set(list(inspect.signature(fn).parameters)[2:])
+        assert extra <= _TEST_SEAMS.get(name, set()), (name, extra)
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql()))

@@ -439,6 +439,19 @@ def test_grouped_map_pandas_is_single_shuffle(spark):
     assert plans.shuffle_count(df) == 1  # exchange on the grouping key only
 
 
+def test_grouped_agg_pandas_udfs_use_type_hints(spark):
+    """pandas_grouped_agg_gini builds its GROUPED_AGG UDFs from type hints,
+    not the deprecated PandasUDFType form Spark warns about (SPARK-28264)."""
+    import warnings
+
+    from simple_land_registry_data_ingestion_spark.functions import udfs
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        df = udfs.pandas_grouped_agg_gini(spark, SF_ORACLE)
+    assert "ArrowAggregatePython" in plans.formatted_plan(df)
+
+
 def test_udtf_expands_without_shuffle(spark):
     from simple_land_registry_data_ingestion_spark.functions import udfs
 
